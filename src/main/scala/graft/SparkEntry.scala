@@ -899,8 +899,8 @@ object SparkEntry {
     // every planted near-copy must match its source (miss probability ~
     // (1-J²)³² ≈ 1e-10 per doc) and no reversed doc may match its own
     // source. The old ⅔-of-corpus incoming side was a stress shape users
-    // don't run (verification dominated both arms); that constant now
-    // lives in SURVEY §8 via graft.tools.StressDedup's newAgainst probe.
+    // don't run (verification dominated both arms); its measurements are
+    // recorded in SURVEY §8 (taken with a stress probe since deleted).
     "minhash_new_against" -> ((s, d) => {
       val docs = t(s, d, "documents").select("doc_id", "text")
       val off = idOffset(docs, "doc_id")

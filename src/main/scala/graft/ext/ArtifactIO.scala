@@ -694,6 +694,9 @@ private[ext] object ArtifactIO {
       if (sizeN >= parallelismFloor) 1L
       else {
         val byBytes = bytes / (8L << 20)
+        // rows of `dir` as it stands: DedupIndex.compact sizes BEFORE its
+        // dropDuplicates, so a heavily duplicated relation is sliced for
+        // its pre-dedup rows (over-slicing bounded by parallelismFloor)
         val byRows = parquetRowCount(spark, dir) / RowFloorPerFile
         math.min(parallelismFloor.toLong,
           math.max(1L, math.max(byBytes, byRows)))

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -108,12 +109,9 @@ object Dedup {
     // (localCheckpoint — ContextCleaner-reclaimed, see the cache note up
     // top). `incoming` is scanned twice (the two filter branches); pin
     // it caller-side when it is itself an expensive derived relation.
-    val exObs = org.apache.spark.sql.Observation()
-    val exFp = existing.select(farmHash64(col(textCol)).as("__fp"))
-      .observe(exObs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    // sizes the bloom; rides the pin as an observed metric (no count job)
-    val nEx = exObs.get("n").asInstanceOf[Long]
+    // nEx sizes the bloom; it rides the pin (no count job)
+    val (exFp, nEx) =
+      Pin.counted(existing.select(farmHash64(col(textCol)).as("__fp")))
     if (nEx == 0) return incoming
     val bloom = exFp.stat.bloomFilter("__fp", nEx, bloomFpp)
     val bc = incoming.sparkSession.sparkContext.broadcast(bloom)
@@ -344,12 +342,10 @@ object Dedup {
       struct(lit(b).as("band"),
         farmHash64(slice(col("sig"), b * rPerB + 1, rPerB)).as("bsig"))
     }
-    val obs = org.apache.spark.sql.Observation()
-    val banded = sig.select(col("id"), explode(array(bandStructs: _*)).as("bb"))
-      .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    (sh, banded, obs.get("n").asInstanceOf[Long])
+    val (banded, n) = Pin.counted(
+      sig.select(col("id"), explode(array(bandStructs: _*)).as("bb"))
+        .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig")))
+    (sh, banded, n)
   }
 
   /** MinHash-LSH near-duplicate pairs over a text column.
@@ -772,12 +768,9 @@ object Dedup {
     val buckets = planeSets.zipWithIndex.map { case (planes, t) =>
       struct(lit(t).as("table"), lshSignBits(col("v"), planes).as("bucket"))
     }
-    val obs = org.apache.spark.sql.Observation()
-    val banded = v.select(col("id"), explode(array(buckets.toIndexedSeq: _*)).as("tb"))
-      .select(col("id"), col("tb.table").as("table"), col("tb.bucket").as("bucket"))
-      .observe(obs, count(lit(1)).as("n"))
-      .localCheckpoint(true)
-    (banded, obs.get("n").asInstanceOf[Long])
+    Pin.counted(
+      v.select(col("id"), explode(array(buckets.toIndexedSeq: _*)).as("tb"))
+        .select(col("id"), col("tb.table").as("table"), col("tb.bucket").as("bucket")))
   }
 
   /** Embedding-cosine near-duplicate pairs: documents whose embedding
@@ -1216,12 +1209,10 @@ object Dedup {
                             shingleLen: Int, threshold: Double)
       : (DataFrame, DataFrame, Long) = {
     // the broadcast-sizing doc count rides the pin as an observed metric
-    val shObs = org.apache.spark.sql.Observation()
-    val sh = df.select(col(idCol).as("id"),
+    // sh feeds the freq pass, the prefix pass, and both verify sides
+    val (sh, nSh) = Pin.counted(df.select(col(idCol).as("id"),
         shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .observe(shObs, count(lit(1)).as("n"))
-      .localCheckpoint(true) // feeds the freq pass, the prefix pass, and both verify sides
+      .filter(size(col("sh")) > 0))
     val toks = sh.select(col("id"), explode(col("sh")).as("tok"))
     val freq = toks.groupBy("tok").agg(count(lit(1)).as("df"))
     // per-doc token array re-ranked (df asc, tok asc) — a total order
@@ -1250,7 +1241,7 @@ object Dedup {
       .select(col("e.tok").as("tok"), col("id"), col("len"), col("pos"),
         col("p_mid"))
       .localCheckpoint(true) // the self-join reads it twice
-    (sh, prefix, shObs.get("n").asInstanceOf[Long])
+    (sh, prefix, nSh)
   }
 
   /** Per-token Σ |small-prefix occurrences| × |prefix occurrences| — by

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -311,12 +312,8 @@ object DedupIndex {
       // write (same eager-localCheckpoint lifecycle as Dedup); the
       // bloom-sizing count RIDES the pin as an observed metric instead
       // of paying its own scheduler round trip (guide §1.2-1)
-      val obs = org.apache.spark.sql.Observation()
-      val fps = df.select(col(idCol).as("id"),
-          farmHash64(col(textCol)).as("fp"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint(true)
-      (fps, obs.get("n").asInstanceOf[Long])
+      Pin.counted(df.select(col(idCol).as("id"),
+        farmHash64(col(textCol)).as("fp")))
     }
     // Par.withLeg settles the fingerprint leg even when the shingle pass
     // throws: an un-awaited leg would keep running after the lease scope

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import graft.functions.TopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
@@ -508,16 +509,12 @@ object Similarity {
       new org.apache.hadoop.fs.Path(s"$path/postings/batch=$batch"), true)
     // the returned row count rides the pin as an observed metric — the
     // write and the (free) count share the one scan, no count job
-    val obs = org.apache.spark.sql.Observation()
-    val corpusV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .localCheckpoint(true)
+    val (corpusV, n) = Pin.counted(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
     corpusV.withColumn("cell", nearestCells(col("v"), centroids, 1)(0))
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/postings/batch=$batch")
-    obs.get("n").asInstanceOf[Long]
+    n
     } // lease scope
   }
 
@@ -1030,16 +1027,12 @@ object Similarity {
     ArtifactIO.fs(spark, path).delete(
       new org.apache.hadoop.fs.Path(s"$path/postings/batch=$batch"), true)
     // count rides the pin as an observed metric, as in appendIvfIndex
-    val obs = org.apache.spark.sql.Observation()
-    val corpusV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .observe(obs, org.apache.spark.sql.functions.count(
-        org.apache.spark.sql.functions.lit(1)).as("n"))
-      .localCheckpoint(true)
+    val (corpusV, n) = Pin.counted(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
     ivfpqEncode(corpusV, model)
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/postings/batch=$batch")
-    obs.get("n").asInstanceOf[Long]
+    n
     } // lease scope
   }
 

@@ -1,15 +1,12 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
-import scala.collection.concurrent.TrieMap
-import scala.collection.mutable.ArrayBuffer
 
 /** Per-gate attribution profiler for the optimization rounds: runs named
   * SparkEntry gates under the Bench session shape (local[$SPARK_GRAFT_CPUS],
-  * shuffle.partitions = cpus, Bench's untimed warmup equivalent is
-  * approximated by running each gate once cold and profiling the SECOND
-  * pass), and prints, per gate:
+  * shuffle.partitions = cpus, Bench's untimed warmup), each gate
+  * SPARK_GRAFT_PROF_PASSES times (default 2), and prints for the LAST
+  * pass of each gate, from the [[RunRecorder]]:
   *   - total wall, sum of job spans, residual driver-side time
   *   - every job: span, and the callsite of its first stage
   *   - every stage ≥ 50 ms span: span, task count, task-time sum/max,
@@ -32,144 +29,66 @@ object ProfGates {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    final case class StageRec(id: Int, name: String, var tasks: Int = 0,
-                              var taskSumMs: Long = 0L, var taskMaxMs: Long = 0L,
-                              var submitMs: Long = -1L, var doneMs: Long = -1L)
-    val stages = TrieMap.empty[Int, StageRec]
-    val jobs = TrieMap.empty[Int, (Long, Long, String)] // start, end, site
-    val jobStageIds = TrieMap.empty[Int, Seq[Int]]
+    val recorder = new RunRecorder
+    spark.sparkContext.addSparkListener(recorder)
 
-    def graftSite(details: String, fallback: String): String =
-      details.linesIterator
-        .find(l => l.contains("graft") && !l.contains("graft.tools"))
-        .getOrElse(fallback).trim.take(120)
+    // the operator's frame: Pin.counted is a helper every pin goes
+    // through, so its frame would hide which operator pinned
+    def graftSite(st: RunRecorder.Stage): String =
+      st.details.linesIterator
+        .find(l => l.contains("graft") && !l.contains("graft.tools") &&
+          !l.contains("graft.core.Pin"))
+        .getOrElse(st.name).trim.take(120)
 
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        val site = Option(j.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-        jobs(j.jobId) = (j.time, -1L, site)
-        jobStageIds(j.jobId) = j.stageInfos.map(_.stageId)
-        j.stageInfos.foreach { si =>
-          stages.getOrElseUpdate(si.stageId,
-            StageRec(si.stageId, graftSite(si.details, si.name)))
-        }
-      }
-      override def onJobEnd(j: SparkListenerJobEnd): Unit =
-        jobs.get(j.jobId).foreach { case (s, _, site) =>
-          jobs(j.jobId) = (s, j.time, site)
-        }
-      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit = {
-        val r = stages.getOrElseUpdate(s.stageInfo.stageId,
-          StageRec(s.stageInfo.stageId,
-            graftSite(s.stageInfo.details, s.stageInfo.name)))
-        r.submitMs = s.stageInfo.submissionTime.getOrElse(-1L)
-      }
-      override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-        stages.get(s.stageInfo.stageId).foreach { r =>
-          r.doneMs = s.stageInfo.completionTime.getOrElse(-1L)
-        }
-      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        if (t.taskInfo != null && t.taskInfo.successful)
-          stages.get(t.stageId).foreach { r =>
-            r.synchronized {
-              r.tasks += 1
-              r.taskSumMs += t.taskInfo.duration
-              r.taskMaxMs = math.max(r.taskMaxMs, t.taskInfo.duration)
-            }
-          }
-    })
-
-    // Bench-equivalent warmup so pass-1 cold numbers aren't pure JIT noise
-    try {
-      import org.apache.spark.sql.functions._
-      import graft.GraftFunctions._
-      val warm = spark.range(200000)
-        .select(col("id"), concat_ws(" ", lit("warm"), col("id").cast("string")).as("txt"))
-      warm.select(fieldHash(Seq(col("id"))).as("h"),
-          minhash(shingleHashes(col("txt"), 3), 16, 0).as("m"),
-          simhash(col("txt"), 0).as("s"))
-        .groupBy(col("h") % 64)
-        .agg(count(lit(1)), min("s"), max(size(col("m")))).count()
-      warm.join(warm.select(col("id"), col("txt").as("t2")), Seq("id"), "full_outer")
-        .count()
-      import org.apache.spark.ml.clustering.KMeans
-      import org.apache.spark.ml.functions.array_to_vector
-      val mlWarm = spark.range(256)
-        .select(array_to_vector(array(col("id").cast("double"),
-          (col("id") % 7).cast("double"))).as("features"))
-      new KMeans().setK(4).setSeed(1L).setMaxIter(2).fit(mlWarm)
-    } catch { case e: Throwable => System.err.println(s"[prof] warmup: ${e.getMessage}") }
+    // Bench's own warmup, so pass-1 cold numbers aren't pure JIT noise and
+    // A/B walls are warmed exactly like the bench's
+    graft.Bench.warmUp(spark)
 
     args.foreach { gate =>
-      SparkEntryAccess.queries.get(gate) match {
+      graft.SparkEntry.queries.get(gate) match {
         case None => System.err.println(s"[prof] unknown gate: $gate")
         case Some(fn) =>
-          var lastWall = 0.0
           (1 to passes).foreach { pass =>
             spark.catalog.clearCache()
             spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
             System.gc()
-            stages.clear(); jobs.clear(); jobStageIds.clear()
+            recorder.reset()
             val t0 = System.nanoTime()
             try fn(spark, sfDir).count()
             catch { case e: Throwable =>
               System.err.println(s"[prof] $gate FAILED: ${e.getMessage}") }
             val wall = (System.nanoTime() - t0) / 1e9
-            lastWall = wall
-            // drain listener bus so the final stages land in this window
-            try {
-              val bus = spark.sparkContext.getClass.getMethod("listenerBus")
-                .invoke(spark.sparkContext)
-              bus.getClass.getMethod("waitUntilEmpty", classOf[Long])
-                .invoke(bus, java.lang.Long.valueOf(10000L))
-            } catch { case _: Throwable => Thread.sleep(500) }
+            recorder.drain(spark.sparkContext)
             if (pass < passes) {
               println(f"[prof] $gate pass $pass wall=$wall%.2f s (warm-up pass)")
             } else {
-              // merge overlapping job intervals -> scheduled time; the
-              // rest of the wall is driver-only (planning, collects, IO)
-              val iv = jobs.values.toSeq.filter(_._2 > 0)
-                .map(j => (j._1, j._2)).sortBy(_._1)
-              var covered = 0L
-              var curS = -1L; var curE = -1L
-              iv.foreach { case (s, e) =>
-                if (curE < 0) { curS = s; curE = e }
-                else if (s <= curE) curE = math.max(curE, e)
-                else { covered += curE - curS; curS = s; curE = e }
-              }
-              if (curE > 0) covered += curE - curS
+              val jobs = recorder.jobs.toSeq.sortBy(_._1)
+              val stages = recorder.stages
+              val covered = recorder.jobSpanCoveredMs
               println(f"[prof] ===== $gate pass $pass wall=$wall%.2f s " +
                 f"jobs=${jobs.size} jobSpanCovered=${covered / 1e3}%.2f s " +
                 f"driverOnly=${wall - covered / 1e3}%.2f s =====")
-              jobs.toSeq.sortBy(_._1).foreach { case (id, (s, e, site)) =>
-                val span = if (e > 0) (e - s) / 1e3 else -1.0
-                val stageSite = jobStageIds.getOrElse(id, Nil)
-                  .flatMap(stages.get).map(_.name)
-                  .find(n => n.contains("graft")).orElse(
-                    jobStageIds.getOrElse(id, Nil).flatMap(stages.get)
-                      .map(_.name).headOption).getOrElse(site)
+              jobs.foreach { case (id, j) =>
+                val span = if (j.endMs > 0) (j.endMs - j.startMs) / 1e3 else -1.0
+                val sites = j.stageIds.flatMap(stages.get).map(graftSite)
+                val stageSite = sites.find(_.contains("graft"))
+                  .orElse(sites.headOption).getOrElse(j.site)
                 if (span >= 0.05)
                   println(f"[prof]   job $id%3d span=$span%6.2f s  $stageSite")
               }
-              stages.values.toSeq.sortBy(-_.taskSumMs).take(25).foreach { r =>
-                val span = if (r.doneMs > 0 && r.submitMs > 0)
-                  (r.doneMs - r.submitMs) / 1e3 else -1.0
-                if (r.taskSumMs >= 50 || span >= 0.05)
-                  println(f"[prof]   stage ${r.id}%4d span=$span%6.2f s " +
-                    f"tasks=${r.tasks}%4d sum=${r.taskSumMs / 1e3}%7.2f s " +
-                    f"max=${r.taskMaxMs / 1e3}%6.2f s  ${r.name}")
-              }
+              stages.values.toSeq.map(st => (st, st.taskTimes.map(_._1)))
+                .sortBy(-_._2.sum).take(25).foreach { case (st, durs) =>
+                  val sumMs = durs.sum
+                  val span = if (st.spanMs >= 0) st.spanMs / 1e3 else -1.0
+                  if (sumMs >= 50 || span >= 0.05)
+                    println(f"[prof]   stage ${st.id}%4d span=$span%6.2f s " +
+                      f"tasks=${durs.length}%4d sum=${sumMs / 1e3}%7.2f s " +
+                      f"max=${durs.maxOption.getOrElse(0L) / 1e3}%6.2f s  ${graftSite(st)}")
+                }
             }
           }
       }
     }
     spark.stop()
   }
-}
-
-/** queries is public on SparkEntry; indirection kept so the profiler never
-  * links against gate internals. */
-private object SparkEntryAccess {
-  def queries = graft.SparkEntry.queries
 }

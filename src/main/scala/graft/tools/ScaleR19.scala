@@ -1,10 +1,8 @@
 package graft.tools
 
 import graft.ext.{Dedup, DedupIndex, Layout, Pack, Retrieval, ScoreFilter, SemDedup, Similarity, Split, TextAnalysis}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
 /** The round-19 scale-proof harness: runs the suite's ten heaviest
@@ -46,52 +44,57 @@ object ScaleR19 {
       stageName: String, maxTaskMs: Long, medianTaskMs: Long,
       firstWave: Boolean, stageTasks: Int)
 
-  private final class SkewListener extends SparkListener {
-    private val stageTasks = TrieMap.empty[Int, ArrayBuffer[(Long, Long)]]
-    private val stageNames = TrieMap.empty[Int, String]
-    override def onStageSubmitted(
-        s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-      stageNames(s.stageInfo.stageId) =
-        s.stageInfo.name.takeWhile(_ != '\n').take(80)
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null && t.taskInfo.successful) {
-        // capture the buffer ONCE: a reset() between a second map lookup
-        // and the append would throw on the listener-bus thread and
-        // silently drop events (r19 advice); appending into a buffer that
-        // reset() just orphaned is a harmless drop of one stale event
-        val buf = stageTasks.getOrElseUpdate(t.stageId, ArrayBuffer.empty)
-        buf.synchronized { buf += ((t.taskInfo.duration, t.taskInfo.launchTime)) }
+  /** The worst material stage of the recorder's window: max/median
+    * task-duration skew over stages with >=4 successful tasks and a max
+    * task >=500 ms (sub-second scheduling jitter on tiny stages does not
+    * read as data skew), with that stage's structured facts. `stages`
+    * counts every stage that ran a task in the window. */
+  private def worstSkew(rec: RunRecorder): SkewReading = {
+    val snap = rec.stages.values.toSeq.map(s => (s, s.taskTimes))
+      .filter(_._2.nonEmpty)
+    val perStage = snap
+      .filter { case (_, ds) => ds.length >= 4 && ds.map(_._1).max >= 500L }
+      .map { case (st, ds) =>
+        val durs = ds.map(_._1).sorted
+        val med = math.max(durs(durs.length / 2), 1L)
+        val maxTask = ds.maxBy(_._1)
+        // first scheduling wave = launched within 50 ms of the stage's
+        // earliest launch (local[32] starts a whole wave together)
+        val firstWave = maxTask._2 <= ds.map(_._2).min + 50L
+        (durs.last.toDouble / med.toDouble, st, durs.last, med, firstWave,
+          ds.length)
       }
-    def reset(): Unit = { stageTasks.clear(); stageNames.clear() }
-    /** Worst max/median task-duration skew over MATERIAL stages (>=4
-      * tasks and a max task >=500 ms — sub-second scheduling jitter on
-      * tiny stages does not read as data skew), with the worst stage's
-      * structured facts. Buffers are snapshotted under the same lock the
-      * bus thread appends under — an unsynchronized length/max read can
-      * tear on a concurrent buffer grow. */
-    def worst(): SkewReading = {
-      val snap = stageTasks.toSeq.map { case (id, ds) =>
-        (id, ds.synchronized(ds.toArray)) }
-      val perStage = snap
-        .filter { case (_, ds) => ds.length >= 4 && ds.map(_._1).max >= 500L }
-        .map { case (id, ds) =>
-          val durs = ds.map(_._1).sorted
-          val med = math.max(durs(durs.length / 2), 1L)
-          val maxTask = ds.maxBy(_._1)
-          // first scheduling wave = launched within 50 ms of the stage's
-          // earliest launch (local[32] starts a whole wave together)
-          val firstWave = maxTask._2 <= ds.map(_._2).min + 50L
-          (durs.last.toDouble / med.toDouble, id, durs.last, med, firstWave,
-            ds.length)
-        }
-      if (perStage.isEmpty)
-        SkewReading(1.0, snap.size, "", 0L, 0L, firstWave = false, 0)
-      else {
-        val (sk, id, mx, med, fw, nt) = perStage.maxBy(_._1)
-        SkewReading(sk, snap.size, stageNames.getOrElse(id, s"stage-$id"),
-          mx, med, fw, nt)
-      }
+    if (perStage.isEmpty)
+      SkewReading(1.0, snap.size, "", 0L, 0L, firstWave = false, 0)
+    else {
+      val (sk, st, mx, med, fw, nt) = perStage.maxBy(_._1)
+      SkewReading(sk, snap.size, st.name.takeWhile(_ != '\n').take(80),
+        mx, med, fw, nt)
     }
+  }
+
+  /** Locale.ROOT numeric formatting: the record is parsed as JSON
+    * (tools/merge_scale.py), and a comma-decimal default locale would
+    * emit `"wall_s":12,34` and invalidate it. */
+  private def num(fmt: String, v: Double): String =
+    String.format(java.util.Locale.ROOT, fmt, Double.box(v))
+
+  /** 25 ms driver-heap peak sampler; `mark()` resets the peak to the
+    * current usage so each operator's reading attributes to it and not to
+    * the previous operator's garbage. */
+  private final class HeapSampler extends Thread {
+    setDaemon(true)
+    @volatile private var peak = 0L
+    @volatile private var running = true
+    def mark(): Unit = peak = used()
+    def peakMb: Long = peak >> 20
+    private def used(): Long = {
+      val r = Runtime.getRuntime; r.totalMemory() - r.freeMemory()
+    }
+    override def run(): Unit = while (running) {
+      val u = used(); if (u > peak) peak = u; Thread.sleep(25)
+    }
+    def shutdown(): Unit = running = false
   }
 
   /** The structured attribution verdict stamped next to every skew
@@ -126,8 +129,8 @@ object ScaleR19 {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val listener = new SkewListener
-    spark.sparkContext.addSparkListener(listener)
+    val recorder = new RunRecorder
+    spark.sparkContext.addSparkListener(recorder)
     val sampler = new HeapSampler; sampler.start()
 
     def t(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")
@@ -135,7 +138,7 @@ object ScaleR19 {
 
     def op(name: String)(body: => Long): Unit = {
       System.gc(); Thread.sleep(300)
-      listener.reset(); sampler.mark()
+      recorder.reset(); sampler.mark()
       val t0 = System.nanoTime()
       val out =
         try body
@@ -148,11 +151,10 @@ object ScaleR19 {
       // settle the async listener bus: task-end events for the op's final
       // tasks can still be in flight when the action returns — reading
       // (and the NEXT op's reset) before they land would misattribute them
-      Thread.sleep(800)
-      val r = listener.worst()
+      recorder.drain(spark.sparkContext)
+      val r = worstSkew(recorder)
       val attribution = attributeSkew(r, wall, slots = cpus.toInt)
       val peak = sampler.peakMb
-      import ProbeUtil.num
       println(f"[scale] $name%-22s ${wall}%8.1f s  peak=${peak}%5d MB  " +
         f"skew=${r.skew}%5.2f ($attribution)  stages=${r.stages}%3d  " +
         f"out=$out%d  [${r.stageName}]")
@@ -201,7 +203,8 @@ object ScaleR19 {
     // default 5-char shingles are collision-bound over this corpus's
     // ~40-word vocabulary (23.2M candidates -> 25.6k real pairs at sf10,
     // 99.9% false); 10-char shingles verify the IDENTICAL 25,600 pairs in
-    // 22 s instead of 91 (measured by tools/SplitDensity) — shingle
+    // 22 s instead of 91 (measured in round 19 by a per-stage density
+    // probe that has since been deleted) — shingle
     // length must exceed the corpus's collision scale, the knob a real
     // pipeline tunes first.
     op("dedup_index_build") {

@@ -216,48 +216,57 @@ class BenchSpec extends AnyFlatSpec with Matchers {
     Bench.blendRatio(0.4, 0.2, Some(0.2), Some(0.0)) shouldBe None
   }
 
-  behavior of "Bench.numbersAtDepth"
+  behavior of "Bench.committedStamp"
+
+  private def withRecord(content: String)(body: String => Unit): Unit = {
+    val f = java.nio.file.Files.createTempFile("benchspec", ".json")
+    try { java.nio.file.Files.writeString(f, content); body(f.toString) }
+    finally java.nio.file.Files.delete(f)
+  }
 
   it should "read only top-level numeric stamps, never nested or quoted ones" in {
     // the r19 advice's fragility case: a string VALUE containing what
     // looks like a stamp, and the same key nested inside an object
-    val line = """{"value":9.5,"skew_stage":"x \"calib_cpu_s\":0.1 y",""" +
-      """"queries":{"value":1.0,"calib_cpu_s":2.0},"calib_cpu_s":0.313}"""
-    Bench.numbersAtDepth(line, 1) shouldBe
-      Map("value" -> 9.5, "calib_cpu_s" -> 0.313)
+    withRecord("""{"value":9.5,"skew_stage":"x \"calib_cpu_s\":0.1 y",""" +
+      """"queries":{"value":1.0,"calib_cpu_s":2.0},"calib_cpu_s":0.313}""") { f =>
+      Bench.committedStamp(f, "calib_cpu_s") shouldBe Some(0.313)
+      Bench.committedStamp(f, "value") shouldBe Some(9.5)
+      // a string-valued field is not a numeric stamp
+      Bench.committedStamp(f, "skew_stage") shouldBe None
+    }
     // unparseable input yields empty, not a throw
-    Bench.numbersAtDepth("""not json at all""", 1) shouldBe Map.empty
+    withRecord("""not json at all""") { f =>
+      Bench.committedStamp(f, "calib_cpu_s") shouldBe None
+      Bench.committedSpreads(f) shouldBe Map.empty
+    }
   }
 
-  it should "back committedStamp with the depth-aware scan" in {
-    val f = java.nio.file.Files.createTempFile("benchspec_depth", ".json")
-    java.nio.file.Files.writeString(f,
-      """{"metric":"total","notes":"ran with \"calib_cpu_s\":9.9 once",""" +
-        """"splits":{"g":{"calib_cpu_s":7.7}},"calib_cpu_s":0.25}""" + "\n")
-    // neither the string-embedded 9.9 nor the nested 7.7 shadows 0.25
-    Bench.committedStamp(f.toString, "calib_cpu_s") shouldBe Some(0.25)
-    java.nio.file.Files.delete(f)
+  it should "ignore an escaped string stamp and a nested one" in {
+    withRecord("""{"metric":"total","notes":"ran with \"calib_cpu_s\":9.9 once",""" +
+        """"splits":{"g":{"calib_cpu_s":7.7}},"calib_cpu_s":0.25}""" + "\n") { f =>
+      // neither the string-embedded 9.9 nor the nested 7.7 shadows 0.25
+      Bench.committedStamp(f, "calib_cpu_s") shouldBe Some(0.25)
+    }
   }
+
+  behavior of "Bench.committedSpreads"
 
   it should "read the spread object only at top level" in {
-    val f = java.nio.file.Files.createTempFile("benchspec_spreadnest", ".json")
     // a nested object named "spread" (inside splits) must not be read
-    java.nio.file.Files.writeString(f,
-      """{"metric":"total","splits":{"spread":{"fake":9.0}},""" +
-        """"spread":{"a":0.5},"runs":3}""" + "\n")
-    Bench.committedSpreads(f.toString) shouldBe Map("a" -> 0.5)
-    java.nio.file.Files.delete(f)
+    withRecord("""{"metric":"total","splits":{"spread":{"fake":9.0}},""" +
+        """"spread":{"a":0.5},"runs":3}""" + "\n") { f =>
+      Bench.committedSpreads(f) shouldBe Map("a" -> 0.5)
+    }
   }
 
   it should "parse the spread object of a committed record, absent-safe" in {
-    val f = java.nio.file.Files.createTempFile("benchspec", ".json")
-    java.nio.file.Files.writeString(f,
-      """{"metric":"total","value":9.9,"queries":{"a":1.0},""" +
-        """"spread":{"a":0.25,"b":3.125},"runs":3,"sf":"/x"}""" + "\n")
-    Bench.committedSpreads(f.toString) shouldBe Map("a" -> 0.25, "b" -> 3.125)
+    withRecord("""{"metric":"total","value":9.9,"queries":{"a":1.0},""" +
+        """"spread":{"a":0.25,"b":3.125},"runs":3,"sf":"/x"}""" + "\n") { f =>
+      Bench.committedSpreads(f) shouldBe Map("a" -> 0.25, "b" -> 3.125)
+    }
     Bench.committedSpreads("/nonexistent/path.json") shouldBe Map.empty
-    java.nio.file.Files.writeString(f, """{"metric":"total","value":1.0}""")
-    Bench.committedSpreads(f.toString) shouldBe Map.empty
-    java.nio.file.Files.delete(f)
+    withRecord("""{"metric":"total","value":1.0}""") { f =>
+      Bench.committedSpreads(f) shouldBe Map.empty
+    }
   }
 }

@@ -22,8 +22,9 @@ class ArtifactIOSpec extends SparkSpec {
   it should "floor the file count for scan parallelism without slicing " +
     "small relations into near-empty files" in {
     val dir = tmpDir("afc")
+    val rows = 2200000L
     // ~17 MB of parquet (incompressible random-ish longs)
-    spark.range(0, 2200000).selectExpr("id", "hash(id) * id as x",
+    spark.range(0, rows).selectExpr("id", "hash(id) * id as x",
         "xxhash64(id) as y")
       .repartition(1).write.parquet(dir)
     val bytes = {
@@ -43,7 +44,7 @@ class ArtifactIOSpec extends SparkSpec {
     // into near-empty files (the floor stays well under 32)
     val floored = ArtifactIO.targetFileCount(spark, dir, 256L << 20,
       parallelismFloor = 32)
-    floored shouldBe (2200000L / ArtifactIO.RowFloorPerFile).toInt
+    floored shouldBe (rows / ArtifactIO.RowFloorPerFile).toInt
     floored should be > (bytes / (8L << 20)).toInt
     // a floor the relation can fill is honored exactly
     ArtifactIO.targetFileCount(spark, dir, 256L << 20,

@@ -5,23 +5,13 @@
 #   ab_gates.sh <classesA> <classesB> <rounds> <gate> [gate...]
 set -euo pipefail
 A="$1"; B="$2"; R="$3"; shift 3
-JARS="$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+source "$(dirname "$0")/run_tool.sh"
 run() {
   local cp="$1"; local tag="$2"
   SPARK_GRAFT_SF_DIR="${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}" \
   SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
   SPARK_GRAFT_PROF_PASSES="${SPARK_GRAFT_PROF_PASSES:-2}" \
-  java -Xmx8g $OPENS -Dspark.ui.enabled=false \
-    -Dspark.sql.session.timeZone=UTC -cp "$cp:$JARS" \
-    graft.tools.ProfGates "$@" 2>/dev/null \
+  graft_java "$cp" graft.tools.ProfGates "$@" 2>/dev/null \
     | grep -E "pass [0-9]+ wall" | sed "s/^/[$tag] /"
 }
 for i in $(seq 1 "$R"); do

@@ -1,8 +1,9 @@
 #!/bin/bash
 # Canonical bench launcher: raw java (no sbt sibling JVM — the r16 guard
-# diverts any run that shares the machine with another JVM), the build's
-# JDK-17 --add-opens set, 8 GB heap (the canonical heap the records are
-# comparable under), 32 cores, median-of-3.
+# diverts any run that shares the machine with another JVM), the
+# JVM recipe of tools/run_tool.sh (8 GB heap, the canonical heap the
+# records are comparable under), $SPARK_GRAFT_CPUS cores (default 32),
+# median-of-3.
 #
 #   tools/run_bench.sh <sfDir> <benchFile>
 #
@@ -13,15 +14,7 @@
 set -euo pipefail
 SF_DIR="${1:?usage: run_bench.sh <sfDir> <benchFile>}"
 BENCH_FILE="${2:?usage: run_bench.sh <sfDir> <benchFile>}"
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
+source "$(dirname "$0")/run_tool.sh"
 # Quiet-host contract (r20/r21 verdicts' #1 ask, promoted to enforcement):
 #  - preflight: wait for 1-min loadavg to drop below 0.5 and for every
 #    other java process to exit (up to ~5 min) before launching;
@@ -43,11 +36,9 @@ preflight() {
   echo "[run_bench] WARNING: host never went idle; launching anyway (the bench will divert if contaminated)" >&2
 }
 run_once() {
-  SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS=32 SPARK_GRAFT_RUNS=3 \
-  SPARK_GRAFT_BENCH_FILE="$BENCH_FILE" \
-  java -Xmx8g $OPENS \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-    -cp "$CP" graft.Bench
+  SPARK_GRAFT_SF_DIR="$SF_DIR" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+  SPARK_GRAFT_RUNS=3 SPARK_GRAFT_BENCH_FILE="$BENCH_FILE" \
+  graft_java target/scala-2.13/classes graft.Bench
 }
 for attempt in 1 2 3; do
   preflight

@@ -1,22 +1,12 @@
 #!/bin/bash
-# Scale-probe launcher: same raw-java recipe as run_bench.sh (JDK-17
-# --add-opens, 8 GB heap — the canonical bench heap, so driver-memory
-# readings are comparable), 32 cores.
+# Scale-probe launcher: the JVM recipe of tools/run_tool.sh (8 GB heap —
+# the canonical bench heap, so driver-memory readings are comparable),
+# $SPARK_GRAFT_CPUS cores (default 32).
 #   tools/run_scale.sh <sfDir> <outJson> [shufflePartitions]
 set -euo pipefail
 SF_DIR="${1:?usage: run_scale.sh <sfDir> <outJson> [shuffleParts]}"
 OUT="${2:?usage: run_scale.sh <sfDir> <outJson> [shuffleParts]}"
 SHUF="${3:-64}"
-CP="target/scala-2.13/classes:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
-OPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-SPARK_GRAFT_CPUS=32 SPARK_GRAFT_SHUFFLE="$SHUF" \
-exec java -Xmx8g $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" graft.tools.ScaleR19 "$SF_DIR" "$OUT"
+source "$(dirname "$0")/run_tool.sh"
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" SPARK_GRAFT_SHUFFLE="$SHUF" \
+  graft_java target/scala-2.13/classes graft.tools.ScaleR19 "$SF_DIR" "$OUT"
