@@ -4,6 +4,7 @@ import graft.GraftFunctions._
 import graft.diffy.BigDiffy
 import graft.ext.{Dedup, DedupIndex, IndexAdmin, Multimodal, Similarity, Skew, Split, TextAnalysis}
 import graft.sampling.{BigSampler, DirectSampler}
+import graft.sources.GraftIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -47,7 +48,7 @@ object SparkEntry {
   }
 
   private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    GraftIO.readParquet(spark, s"$dir/$name.parquet")
 
   /** Mixed-script fixture for the cjk_curation gate: the driver corpus is
     * pure ASCII (verified), so the no-whitespace-script tokenization path
@@ -265,7 +266,7 @@ object SparkEntry {
     val parts = math.max(2L, math.min(
       s.sparkContext.defaultParallelism.toLong,
       (bytes + perPart - 1) / perPart)).toInt
-    val staged = s.read.parquet(s"$dir/in")
+    val staged = GraftIO.readParquet(s, s"$dir/in")
     val stream = s.readStream.schema(staged.schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/in")
     (stream, staged, parts)
@@ -1425,7 +1426,7 @@ object SparkEntry {
       val nCells = Similarity.buildIvfIndex(emb, "vec_id", "embedding",
         tmp, nlist = 16)
       val centroids = Similarity.loadIvfCentroids(s, tmp)
-      val postings = s.read.parquet(s"$tmp/postings")
+      val postings = GraftIO.readParquet(s, s"$tmp/postings")
       // lazy 1-row scalar instead of an eager driver count: the
       // assignment audit then runs inside the single final action,
       // overlapped with the brute-force oracle and the parity join
@@ -1496,7 +1497,7 @@ object SparkEntry {
       }
       val matched = bf.join(idx,
         bf("query_id") === col("qid") && bf("neighbor_id") === col("nid"))
-      s.read.parquet(s"$tmp/postings")
+      GraftIO.readParquet(s, s"$tmp/postings")
         .agg(count(lit(1)).as("n_postings")).crossJoin(
           bf.agg(count(lit(1)).as("n_bf")).crossJoin(
             matched.agg(count(lit(1)).as("n_matched"))))
@@ -1538,7 +1539,7 @@ object SparkEntry {
       import scala.concurrent.duration.Duration
       def probes(): (Double, Long) = {
         val fD = Future(drift())
-        val fN = Future(s.read.parquet(s"$tmp/postings").count())
+        val fN = Future(GraftIO.readParquet(s, s"$tmp/postings").count())
         graft.core.Par.settle2(fD, fN)
       }
       val (driftBefore, nBefore) = probes()
@@ -1585,7 +1586,7 @@ object SparkEntry {
         DedupIndex.append(novel, "doc_id", "text", tmp,
           batchId = Some("day2"))
       }
-      s.read.parquet(s"$tmp/fingerprints")
+      GraftIO.readParquet(s, s"$tmp/fingerprints")
         .agg(count(lit(1)).as("n_indexed"))
         .crossJoin(novel.agg(count(lit(1)).as("n_novel")))
     }),
@@ -2452,7 +2453,7 @@ object SparkEntry {
       // operator = the end-to-end pipeline run (forced — it writes the
       // output layout); the read-back + ordering below is the audit
       timedOperator("pipeline_e2e") { graft.cli.Pipeline.run(rp, Map.empty, s) }
-      s.read.parquet(out)
+      GraftIO.readParquet(s, out)
         .select(col("doc_id"), col("shard"), col("order_key"))
         .orderBy("doc_id")
     }),
@@ -2661,7 +2662,7 @@ object SparkEntry {
       val ss = graft.ext.Layout
         .fileSpanStats(s, s"$tmp/single", Seq("l_partkey", "l_orderkey"))
         .select(col("mean_span_l_orderkey").as("sy"))
-      s.read.parquet(s"$tmp/z")
+      GraftIO.readParquet(s, s"$tmp/z")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_partkey")).as("sum_pk"),
           sum(col("l_orderkey")).as("sum_ok"))
@@ -2786,7 +2787,7 @@ object SparkEntry {
           targetBytes = inBytes / 4 + 1) }
       val outFiles = new java.io.File(s"$tmp/big").listFiles()
         .count(_.getName.endsWith(".parquet"))
-      s.read.parquet(s"$tmp/big")
+      GraftIO.readParquet(s, s"$tmp/big")
         .agg(count(lit(1)).as("n_rows"),
           sum(col("l_orderkey")).cast("long").as("sum_ok"),
           // decimal summation: a 6M-row DOUBLE sum is order-dependent in

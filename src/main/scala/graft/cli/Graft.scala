@@ -760,7 +760,7 @@ object Graft {
 
   private[cli] def read(spark: SparkSession, path: String, mode: String): DataFrame =
     mode match {
-      case "parquet" => spark.read.parquet(path)
+      case "parquet" => GraftIO.readParquet(spark, path)
       case "orc"     => spark.read.orc(path)
       case "avro"    => AvroIO.read(spark, path)
       case "json"    => GraftIO.readJsonLines(spark, path)
@@ -893,9 +893,14 @@ object Graft {
       GraftIO.outputExists(s"$out/fields")
     if (done)
       System.err.println(s"[graft] output $out already complete, skipping")
-    else
-      BigDiffy.saveStats(BigDiffy.diff(lhs, rhs, keys, opts), out,
-        ignoreNan = opts.ignoreNan)
+    else {
+      val result = BigDiffy.diff(lhs, rhs, keys, opts)
+      // the diff relation is persisted for saveStats' overlapped writes;
+      // release it so a long-lived session does not accumulate one
+      // cached relation per call
+      try BigDiffy.saveStats(result, out, ignoreNan = opts.ignoreNan)
+      finally result.unpersist()
+    }
   }
 
   private def bigSampler(f: Map[String, String], spark: SparkSession): Unit = {

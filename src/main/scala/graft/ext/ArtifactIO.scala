@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.sources.GraftIO
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
@@ -314,7 +315,7 @@ private[ext] object ArtifactIO {
     * the empty-built unpartitioned layout. */
   def compactPartitioned(spark: SparkSession, dst: String, partCol: String,
                          dedupe: Boolean = false): Boolean = {
-    val df0 = spark.read.parquet(dst)
+    val df0 = GraftIO.readParquet(spark, dst)
     // the empty-built layout carries the part column as a DATA column
     // (zero rows, unpartitioned) and no batch partitions — compacting it
     // would stage a zero-row partitioned write that emits no
@@ -382,7 +383,7 @@ private[ext] object ArtifactIO {
     val dir = s"$artifactRoot/$FoldedDir"
     recoverTornSwap(spark, dir)
     if (!hasParquetData(spark, dir)) Nil
-    else spark.read.parquet(dir).select("batch_id")
+    else GraftIO.readParquet(spark, dir).select("batch_id")
       .collect().map(_.getString(0)).toSeq
   }
 

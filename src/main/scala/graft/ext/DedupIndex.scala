@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.GraftFunctions._
 import graft.core.Pin
+import graft.sources.GraftIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -212,7 +213,7 @@ object DedupIndex {
         // downstream search scan to 1-2 tasks (r19 sf10: a 6 s straggler)
         val n = ArtifactIO.targetFileCount(spark, dir, targetBytes,
           parallelismFloor = spark.sparkContext.defaultParallelism)
-        val df0 = spark.read.parquet(dir)
+        val df0 = GraftIO.readParquet(spark, dir)
         val df = df0.dropDuplicates(df0.columns.filterNot(_ == "batch").toSeq)
           .drop("batch")
         ArtifactIO.rewriteInPlace(spark, dir)(tmp =>
@@ -228,7 +229,7 @@ object DedupIndex {
     // the crash contract); the two rebuilds cover disjoint search paths
     // and run as concurrent legs under the same propagated context
     val fpLeg = Future(ArtifactIO.runWithLeaseContext(ctx) {
-      val fps = spark.read.parquet(s"$path/fingerprints")
+      val fps = GraftIO.readParquet(spark, s"$path/fingerprints")
       // exact census from the freshly-compacted files' footers — a
       // driver-side metadata read instead of a full count() scan (the
       // bloom build below is the only Spark job left on this leg)
@@ -242,7 +243,7 @@ object DedupIndex {
       nDocs
     })
     val bandLeg = Future(ArtifactIO.runWithLeaseContext(ctx) {
-      val banded = spark.read.parquet(s"$path/bands")
+      val banded = GraftIO.readParquet(spark, s"$path/bands")
       val nBands = ArtifactIO.parquetRowCount(spark, s"$path/bands")
       ArtifactIO.rewriteInPlace(spark, s"$path/$BandBloomDir") { tmp =>
         fs(spark, tmp).mkdirs(new org.apache.hadoop.fs.Path(tmp))
@@ -259,7 +260,7 @@ object DedupIndex {
 
   /** The persisted parameter row. */
   def readParams(spark: SparkSession, path: String): Params = {
-    val r = spark.read.parquet(s"$path/params").head()
+    val r = GraftIO.readParquet(spark, s"$path/params").head()
     Params(r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"),
       r.getAs[Int]("shingle_len"), r.getAs[Int]("seed"),
       r.getAs[Double]("bloom_fpp"))
@@ -378,7 +379,7 @@ object DedupIndex {
     * no shuffle; only flagged rows pay the exact anti join. */
   def newAgainst(spark: SparkSession, path: String, incoming: DataFrame,
                  textCol: String): DataFrame = {
-    val exFp = spark.read.parquet(s"$path/fingerprints")
+    val exFp = GraftIO.readParquet(spark, s"$path/fingerprints")
       .select(col("fp").as("__fp"))
     val blooms = loadBloomSegments(spark, s"$path/$FpBloomDir")
     val flagged0 = incoming.withColumn("__fp", farmHash64(col(textCol)))
@@ -411,8 +412,8 @@ object DedupIndex {
                         broadcastVerify: Option[Boolean] = None,
                         broadcastVerifyMaxRows: Long = 1000000L): DataFrame = {
     val p = readParams(spark, path)
-    val bandedEx = spark.read.parquet(s"$path/bands")
-    val shEx = spark.read.parquet(s"$path/shingles")
+    val bandedEx = GraftIO.readParquet(spark, s"$path/bands")
+    val shEx = GraftIO.readParquet(spark, s"$path/shingles")
     // the incoming shingle+band+pin chain and the artifact-side reads
     // (bloom segments, the stored bands' narrow columnar count) are
     // independent — concurrent submissions, like the direct operator

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.sources.GraftIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -216,7 +217,7 @@ object Layout {
   def compactTo(spark: SparkSession, inPath: String, outPath: String,
                 targetBytes: Long, preserveOrder: Boolean = false): Int = {
     val n = ArtifactIO.targetFileCount(spark, inPath, targetBytes)
-    val df = spark.read.parquet(inPath)
+    val df = GraftIO.readParquet(spark, inPath)
     val out = if (preserveOrder) df.coalesce(n) else df.repartition(n)
     out.write.mode("overwrite").parquet(outPath)
     n
@@ -231,7 +232,7 @@ object Layout {
   def fileSpanStats(spark: SparkSession, path: String,
                     cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "fileSpanStats needs at least one column")
-    val df = spark.read.parquet(path).withColumn("__f", input_file_name())
+    val df = GraftIO.readParquet(spark, path).withColumn("__f", input_file_name())
     val pfAggs = cols.flatMap(c => Seq(
       min(col(c).cast("double")).as(s"__min_$c"),
       max(col(c).cast("double")).as(s"__max_$c")))

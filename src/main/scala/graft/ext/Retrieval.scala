@@ -2,6 +2,7 @@ package graft.ext
 
 import graft.GraftFunctions._
 import graft.functions.TopK
+import graft.sources.GraftIO
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -260,11 +261,14 @@ object Retrieval {
                             path: String): (Long, Long, Int) = {
     if (!ArtifactIO.hasParquetData(spark, s"$path/stats"))
       return (0L, 0L, -1)
-    val r = spark.read.parquet(s"$path/stats")
-      .agg(coalesce(sum(col("n_docs")), lit(0L)),
-        coalesce(sum(col("sum_dl")), lit(0L)),
-        coalesce(max(col("buckets")), lit(-1))).head()
-    (r.getLong(0), r.getLong(1), r.getInt(2))
+    // one row per batch: summed on the driver after one collect job (a
+    // global agg costs two); nulls are skipped as sum/max skip them
+    val rows = GraftIO.readParquet(spark, s"$path/stats")
+      .select("n_docs", "sum_dl", "buckets").collect()
+    def total(i: Int): Long =
+      rows.iterator.filterNot(_.isNullAt(i)).map(_.getLong(i)).foldLeft(0L)(Math.addExact)
+    val buckets = rows.iterator.filterNot(_.isNullAt(2)).map(_.getInt(2))
+    (total(0), total(1), if (buckets.hasNext) buckets.max else -1)
   }
 
   /** Append a document batch to a [[buildTextIndex]] artifact: the batch
@@ -329,7 +333,7 @@ object Retrieval {
     ArtifactIO.recordFolded(spark, path,
       (ArtifactIO.listBatchIds(spark, s"$path/postings") ++
         ArtifactIO.listBatchIds(spark, s"$path/stats")).distinct)
-    val postings = spark.read.parquet(s"$path/postings").drop("batch")
+    val postings = GraftIO.readParquet(spark, s"$path/postings").drop("batch")
     ArtifactIO.rewriteInPlace(spark, s"$path/postings") { tmp =>
       postings.repartition(col("bucket"))
         .write.mode("overwrite").partitionBy("bucket")
@@ -396,7 +400,7 @@ object Retrieval {
     val qBuckets = vocab
       .select(pmod(farmHash64(col("term")), lit(buckets.toLong)).as("bucket"))
       .distinct().collect().map(_.getLong(0))
-    val tf = spark.read.parquet(s"$path/postings")
+    val tf = GraftIO.readParquet(spark, s"$path/postings")
       .where(col("bucket").isin(qBuckets.map(java.lang.Long.valueOf).toSeq: _*))
       .join(broadcast(vocab), "term")
     val idf = tf.groupBy("term")

@@ -3,6 +3,7 @@ package graft.ext
 import graft.GraftFunctions._
 import graft.core.Pin
 import graft.functions.TopK
+import graft.sources.GraftIO
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
@@ -469,12 +470,12 @@ object Similarity {
   }
 
   /** The persisted quantizer: cell-indexed centroid array (driver-side —
-    * nlist rows by construction). */
+    * nlist rows by construction, so they are sorted after the collect:
+    * one Spark job instead of a sort's sample, shuffle and result). */
   def loadIvfCentroids(spark: org.apache.spark.sql.SparkSession,
                        path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
-      .orderBy("cell")
-      .collect()
+    GraftIO.readParquet(spark, s"$path/centroids").collect()
+      .sortBy(_.getAs[Int]("cell"))
       .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
 
   /** Append new vectors to a [[buildIvfIndex]] artifact: rows are
@@ -562,7 +563,7 @@ object Similarity {
     require(ArtifactIO.hasParquetData(spark, postingsDir),
       s"retrainIvfIndex: no postings at $path (empty index) — " +
         "nothing to train from; rebuild instead")
-    val corpusV = spark.read.parquet(postingsDir).select(col("id"), col("v"))
+    val corpusV = GraftIO.readParquet(spark, postingsDir).select(col("id"), col("v"))
     val centroids = trainCoarseCentroids(corpusV, nlist, seed, trainCap,
         maxIter)
       .getOrElse(throw new IllegalStateException(
@@ -599,7 +600,7 @@ object Similarity {
                      k: Int, nprobe: Int = 4): DataFrame = {
     val queryV = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     val centroids = loadIvfCentroids(spark, path)
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = GraftIO.readParquet(spark, s"$path/postings")
     if (centroids.isEmpty)
       return topKPerQuery(
         postings.select(col("id"), col("v")).crossJoin(queryV)
@@ -983,19 +984,18 @@ object Similarity {
   }
 
   /** Load the persisted quantizers back (both driver-sized by
-    * construction: nlist + m × codebookSize rows). */
+    * construction: nlist + m × codebookSize rows, sorted after the
+    * collect — cell and (subspace, code) are unique keys). */
   def loadIvfPqModel(spark: org.apache.spark.sql.SparkSession,
                      path: String): Option[IvfPqModel] = {
-    val coarse = spark.read.parquet(s"$path/centroids")
-      .orderBy("cell").collect()
-      .map(_.getAs[scala.collection.Seq[Double]]("centroid").toArray)
+    val coarse = loadIvfCentroids(spark, path)
     if (coarse.isEmpty) return None
-    val books = spark.read.parquet(s"$path/codebooks")
-      .orderBy("subspace", "code").collect()
-      .map(r => (r.getAs[Int]("subspace"),
+    val books = GraftIO.readParquet(spark, s"$path/codebooks").collect()
+      .map(r => (r.getAs[Int]("subspace"), r.getAs[Int]("code"),
         r.getAs[scala.collection.Seq[Double]]("centroid").toArray))
+      .sortBy(b => (b._1, b._2))
       .groupBy(_._1).toSeq.sortBy(_._1)
-      .map(_._2.map(_._2)).toArray
+      .map(_._2.map(_._3)).toArray
     Some(IvfPqModel(coarse, books))
   }
 
@@ -1137,7 +1137,7 @@ object Similarity {
     require(nprobe >= 1, s"nprobe must be >= 1, got $nprobe")
     require(rerankFactor >= 1, s"rerankFactor must be >= 1, got $rerankFactor")
     val queryV = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val postings = spark.read.parquet(s"$path/postings")
+    val postings = GraftIO.readParquet(spark, s"$path/postings")
     loadIvfPqModel(spark, path) match {
       case None =>
         topKPerQuery(

@@ -62,9 +62,96 @@ object GraftIO {
       .option("timestampNTZFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSS")
       .json(path)
 
-  /** Parquet schema sniff without reading data (footer-only, S15). */
-  def parquetSchema(spark: SparkSession, path: String): StructType =
-    spark.read.parquet(path).schema
+  /** `spark.read.parquet(path)` without its schema-inference Spark job.
+    *
+    * A default (mergeSchema=false) parquet read infers its data schema
+    * from ONE footer, but reads it in a Spark job (`ParquetUtils.inferSchema`
+    * → `mergeSchemasInParallel`): ~100 ms of fixed cost per read. Here the
+    * same footer ([[schemaSource]]) is read on the driver and converted
+    * with the calls that job makes per file, and the result is handed to
+    * Spark as the read schema. Partition columns are still discovered and
+    * appended by Spark. The DataFrame is the one `spark.read.parquet(path)`
+    * returns: same schema, same rows.
+    *
+    * Falls back to the plain read — and so to Spark's own result or error
+    * — when `mergeSchema` is on, the path is a glob or carries a streaming
+    * `_spark_metadata` log, no data file exists, a footer column is also a
+    * partition column (Spark keeps it at its data position, a read schema
+    * would move it last), or listing or the footer read throws. */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    inferParquetSchema(spark, path) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None => spark.read.parquet(path)
+    }
+
+  /** The data schema Spark would infer for a default read of `path`, or
+    * None where [[readParquet]] must leave inference to Spark. */
+  private def inferParquetSchema(spark: SparkSession,
+                                 path: String): Option[StructType] = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+    val conf = spark.sessionState.conf
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    if (conf.isParquetSchemaMergingEnabled || path.exists("{}[]*?\\".contains(_)))
+      return None
+    try {
+      if (FileStreamSink.hasMetadata(Seq(path), hadoopConf, conf)) return None
+      val src = schemaSource(spark, path, hadoopConf)
+      if (!src.hasData) return None
+      val converter = new ParquetToSparkSchemaConverter(
+        assumeBinaryIsString = conf.isParquetBinaryAsString,
+        assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
+        inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
+        nanosAsLong = conf.legacyParquetNanosAsLong,
+        respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
+      val footer = new org.apache.parquet.hadoop.Footer(src.file.getPath,
+        readFooter(src.file, hadoopConf))
+      val schema = ParquetFileFormat.readSchemaFromFooter(footer, converter)
+      val resolver = conf.resolver
+      val overlaps = schema.exists(f => src.partitionColumns.exists(resolver(_, f.name)))
+      if (overlaps) None else Some(schema)
+    } catch { case scala.util.control.NonFatal(_) => None }
+  }
+
+  /** What a default parquet read of a path sees: its partition columns
+    * and the file whose footer speaks for it. */
+  private final case class SchemaSource(
+      file: org.apache.hadoop.fs.FileStatus, hasData: Boolean,
+      partitionColumns: Seq[String])
+
+  /** Lists `path` with a fresh `InMemoryFileIndex`, as `spark.read` does
+    * (same hidden-file and `_metadata` rules, same partition discovery),
+    * and picks the file Spark's default inference reads: `_common_metadata`,
+    * then `_metadata`, then the first data file by full path string — the
+    * order of `ParquetUtils.splitFiles`. Throws when the path holds no
+    * parquet file at all. */
+  private def schemaSource(spark: SparkSession, path: String,
+                           hadoopConf: org.apache.hadoop.conf.Configuration): SchemaSource = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.hadoop.ParquetFileWriter.{
+      PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
+    val p = new Path(path)
+    val qualified = p.getFileSystem(hadoopConf).makeQualified(p)
+    val index = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
+      spark, Seq(qualified), Map.empty, None)
+    val files = index.allFiles().sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val data = files.filterNot(f => f.getPath.getName == PARQUET_COMMON_METADATA_FILE ||
+      f.getPath.getName == PARQUET_METADATA_FILE)
+    val file = named(PARQUET_COMMON_METADATA_FILE).orElse(named(PARQUET_METADATA_FILE))
+      .orElse(data.headOption).getOrElse(throw new IllegalArgumentException(
+        s"no parquet data files under $path"))
+    SchemaSource(file, data.nonEmpty, index.partitionSchema.fieldNames.toSeq)
+  }
+
+  /** One file's footer without its row-group metadata, as the inference
+    * job reads it. */
+  private def readFooter(file: org.apache.hadoop.fs.FileStatus,
+                         hadoopConf: org.apache.hadoop.conf.Configuration) =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, hadoopConf),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS)
 
   /** Read a parquet source whose schema contains TIMESTAMP(NANOS) columns,
     * surfacing them as raw LONG nanos — WITHOUT mutating the session.
@@ -91,37 +178,20 @@ object GraftIO {
     spark.read.schema(schema).parquet(path)
   }
 
-  /** First data file's parquet footer schema — the same one-footer semantics
-    * as a default (mergeSchema=false) parquet read. One directory level of
-    * nesting allowed; hive-partitioned layouts (col=value dirs) are rejected
-    * up front because partition columns are absent from file footers. */
+  /** The parquet schema of the footer [[readParquet]] infers from (see
+    * [[schemaSource]]) — the same one-footer semantics as a default
+    * (mergeSchema=false) read. Hive-partitioned layouts (col=value dirs)
+    * are rejected up front because partition columns are absent from
+    * file footers. */
   private def footerSchema(spark: SparkSession,
                            path: String): org.apache.parquet.schema.MessageType = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val hadoopConf = spark.sparkContext.hadoopConfiguration
-    val p = new Path(path)
-    val fs = p.getFileSystem(hadoopConf)
-    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    def firstFile(dir: Path): Option[Path] = {
-      val st = fs.listStatus(dir).filter(s => visible(s.getPath.getName))
-        .sortBy(_.getPath.getName)
-      st.find(s => s.getPath.getName.contains("="))
-        .foreach(s => throw new IllegalArgumentException(
-          s"footerSchema: $path looks hive-partitioned " +
-            s"(${s.getPath.getName}); partition columns are absent from " +
-            "file footers — read partitions individually"))
-      st.collectFirst { case s if s.isFile => s.getPath }
-        .orElse(st.iterator.filter(_.isDirectory)
-          .flatMap(s => firstFile(s.getPath)).nextOption())
-    }
-    val file =
-      if (fs.getFileStatus(p).isFile) p
-      else firstFile(p).getOrElse(throw new IllegalArgumentException(
-        s"footerSchema: no data files under $path"))
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(file, hadoopConf))
-    try reader.getFileMetaData.getSchema finally reader.close()
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val src = schemaSource(spark, path, hadoopConf)
+    require(src.partitionColumns.isEmpty,
+      s"footerSchema: $path looks hive-partitioned " +
+        s"(${src.partitionColumns.mkString(", ")}); partition columns are " +
+        "absent from file footers — read partitions individually")
+    readFooter(src.file, hadoopConf).getFileMetaData.getSchema
   }
 
   /** Read a parquet source surfacing each column in `tsCols` as an

@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.SparkContext
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkListenerSQLExecutionStart}
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable.ArrayBuffer
 
@@ -16,21 +17,43 @@ import scala.collection.mutable.ArrayBuffer
   * Events arrive on the listener-bus thread. A stage is registered when
   * its job starts or when it is submitted, so a task of a stage from an
   * earlier window is dropped rather than misattributed to this one.
+  *
+  * A stage's name and details are its call site. Spark submits some
+  * stages from its own pool (AQE query stages, broadcasts, subqueries),
+  * and their call site is the pool's frame, which names no operator;
+  * such a stage takes the call site of the SQL execution it belongs to,
+  * found through its job's `spark.sql.execution.id`.
   */
 final class RunRecorder extends SparkListener {
-  import RunRecorder.{Job, Stage}
+  import RunRecorder.{Job, PoolFrame, Stage}
 
   val jobs: TrieMap[Int, Job] = TrieMap.empty
   val stages: TrieMap[Int, Stage] = TrieMap.empty
 
-  private def stageOf(si: StageInfo): Stage =
-    stages.getOrElseUpdate(si.stageId, new Stage(si.stageId, si.name, si.details))
+  /** (short, long) call site of each running SQL execution, by id. */
+  private val sqlSites: TrieMap[String, (String, String)] = TrieMap.empty
 
+  private def stageOf(si: StageInfo, exec: Option[(String, String)] = None): Stage =
+    stages.getOrElseUpdate(si.stageId, {
+      val (name, details) = exec.filter(_ => si.name.contains(PoolFrame))
+        .getOrElse((si.name, si.details))
+      new Stage(si.stageId, name, details)
+    })
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      sqlSites(s.executionId.toString) = (s.description, s.details)
+    case s: SparkListenerSQLExecutionEnd => sqlSites.remove(s.executionId.toString)
+    case _ =>
+  }
+
+  /** A job is named by its final stage, as Spark's UI names it. */
   override def onJobStart(j: SparkListenerJobStart): Unit = {
-    val site = Option(j.properties)
-      .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("?")
-    jobs(j.jobId) = Job(j.time, -1L, site, j.stageInfos.map(_.stageId))
-    j.stageInfos.foreach(stageOf)
+    val exec = Option(j.properties)
+      .flatMap(p => Option(p.getProperty("spark.sql.execution.id"))).flatMap(sqlSites.get)
+    val planned = j.stageInfos.sortBy(_.stageId).map(stageOf(_, exec))
+    val site = planned.lastOption.map(_.name.takeWhile(_ != '\n')).getOrElse("?")
+    jobs(j.jobId) = Job(j.time, -1L, site, planned.map(_.id))
   }
   override def onJobEnd(j: SparkListenerJobEnd): Unit =
     jobs.get(j.jobId).foreach(r => jobs(j.jobId) = r.copy(endMs = j.time))
@@ -76,8 +99,12 @@ final class RunRecorder extends SparkListener {
 
 object RunRecorder {
 
-  /** A job's interval (`endMs` is -1 until it ends), its short call site
-    * and the ids of every stage it planned, skipped ones included. */
+  /** The call-site frame of every stage Spark submits from its own pool. */
+  val PoolFrame = "withThreadLocalCaptured"
+
+  /** A job's interval (`endMs` is -1 until it ends), its call site (its
+    * final stage's name) and the ids of every stage it planned, skipped
+    * ones included. */
   final case class Job(startMs: Long, endMs: Long, site: String, stageIds: Seq[Int])
 
   final class Stage(val id: Int, val name: String, val details: String) {

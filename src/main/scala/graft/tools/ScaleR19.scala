@@ -1,6 +1,7 @@
 package graft.tools
 
 import graft.ext.{Dedup, DedupIndex, Layout, Pack, Retrieval, ScoreFilter, SemDedup, Similarity, Split, TextAnalysis}
+import graft.sources.GraftIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable.ArrayBuffer
@@ -133,7 +134,7 @@ object ScaleR19 {
     spark.sparkContext.addSparkListener(recorder)
     val sampler = new HeapSampler; sampler.start()
 
-    def t(name: String): DataFrame = spark.read.parquet(s"$sfDir/$name.parquet")
+    def t(name: String): DataFrame = GraftIO.readParquet(spark, s"$sfDir/$name.parquet")
     val results = ArrayBuffer.empty[String]
 
     def op(name: String)(body: => Long): Unit = {
@@ -242,7 +243,7 @@ object ScaleR19 {
       Layout.zorderWrite(
         li.select("l_orderkey", "l_partkey", "l_suppkey", "l_quantity"),
         Seq("l_partkey", "l_orderkey"), s"$idxTmp/z", numFiles = 16, bits = 6)
-      spark.read.parquet(s"$idxTmp/z").count()
+      GraftIO.readParquet(spark, s"$idxTmp/z").count()
     }
     op("text_index") {
       import spark.implicits._

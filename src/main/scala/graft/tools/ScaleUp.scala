@@ -1,5 +1,6 @@
 package graft.tools
 
+import graft.sources.GraftIO
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -63,7 +64,7 @@ object ScaleUp {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    def t(name: String): DataFrame = spark.read.parquet(s"$src/$name.parquet")
+    def t(name: String): DataFrame = GraftIO.readParquet(spark, s"$src/$name.parquet")
     def off(df: DataFrame, key: String): Long =
       df.agg(coalesce(max(col(key)) + 1, lit(0L))).first().getLong(0)
 
@@ -73,7 +74,7 @@ object ScaleUp {
 
     def write(df: DataFrame, name: String): Unit = {
       df.write.mode("overwrite").parquet(s"$dst/$name.parquet")
-      println(s"[scaleup] $name: ${spark.read.parquet(s"$dst/$name.parquet").count()} rows")
+      println(s"[scaleup] $name: ${GraftIO.readParquet(spark, s"$dst/$name.parquet").count()} rows")
     }
 
     // dims — unchanged

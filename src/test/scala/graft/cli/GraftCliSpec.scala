@@ -31,6 +31,22 @@ class GraftCliSpec extends SparkSpec {
     new java.io.File(s"$base/out/fields").exists() shouldBe true
   }
 
+  it should "release the cached diff relation after bigDiffy" in {
+    val base = tmp()
+    Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(s"$base/lhs")
+    Seq((1L, 1.5), (3L, 3.0)).toDF("k", "v").write.parquet(s"$base/rhs")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Graft.run(Seq("bigDiffy", s"--lhs=$base/lhs", s"--rhs=$base/rhs",
+      "--key=k", s"--output=$base/out"), spark)
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    def tsv(name: String) = spark.read.option("header", "true").option("sep", "\t")
+      .csv(s"$base/out/$name").collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    // num_total, num_same, num_diff, num_missing_lhs, num_missing_rhs
+    tsv("global") shouldBe Seq("3|0|1|1|1")
+    tsv("keys").map(_.split('|').take(2).mkString("|")) shouldBe
+      Seq("1|DIFFERENT", "2|MISSING_RHS", "3|MISSING_LHS")
+  }
+
   it should "apply --row-restriction to both diff sides and the sampler input" in {
     val base = tmp()
     val l = (1L to 100L).map(i => (i, i.toDouble)).toDF("k", "v")

@@ -48,4 +48,24 @@ class RunRecorderSpec extends SparkSpec {
       rec.stages.values.filter(_.taskTimes.nonEmpty).foreach(_.spanMs should be >= 0L)
     } finally sc.removeSparkListener(rec)
   }
+
+  it should "name AQE stage jobs by their query's call site, not Spark's pool" in {
+    val rec = new RunRecorder
+    val sc = spark.sparkContext
+    sc.addSparkListener(rec)
+    try {
+      spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true"
+      rec.drain(sc)
+      rec.reset()
+      spark.range(0, 1000, 1, 4).selectExpr("id % 7 as k", "id as v")
+        .groupBy("k").sum("v").collect()
+      rec.drain(sc)
+      // the shuffle map stage runs as its own job, submitted from the pool
+      rec.jobs.size should be >= 2
+      rec.jobs.values.map(_.site) ++ rec.stages.values.map(_.name) foreach { site =>
+        site should not include RunRecorder.PoolFrame
+        site should include("RunRecorderSpec.scala")
+      }
+    } finally sc.removeSparkListener(rec)
+  }
 }
