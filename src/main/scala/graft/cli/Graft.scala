@@ -1,5 +1,6 @@
 package graft.cli
 
+import graft.core.Pin
 import graft.diffy.{BigDiffy, DiffOptions}
 import graft.sampling.{BigSampler, DirectSampler}
 import graft.sources.{AvroIO, GraftIO}
@@ -27,8 +28,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * }}}
   *
   * Flag names mirror the reference's usage strings (BigSampler.scala:98-132,
-  * BigDiffy.scala:581-616) in kebab case. Outputs are guarded by the
-  * output-exists short circuit (S14) like the reference's samplers.
+  * BigDiffy.scala:581-616) in kebab case. Every command runs through
+  * [[run]], which skips it when its outputs are already complete (the
+  * S14 short circuit of the reference's samplers) and otherwise runs it
+  * in one [[graft.core.Pin.scope]], so a long-lived session keeps none
+  * of a command's pins once it returns.
   */
 object Graft {
 
@@ -56,34 +60,57 @@ object Graft {
   private def csv(v: Option[String]): Seq[String] =
     v.map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
 
-  def run(args: Seq[String], spark: SparkSession): Unit = args.headOption match {
-    case Some("bigDiffy")      => bigDiffy(parseFlags(args.tail), spark)
-    case Some("bigSampler")    => bigSampler(parseFlags(args.tail), spark)
-    case Some("directSampler") => directSampler(parseFlags(args.tail), spark)
-    case Some("corpusReport")  => corpusReport(parseFlags(args.tail), spark)
-    case Some("dedupReport")   => dedupReportCmd(parseFlags(args.tail), spark)
-    case Some("gopherFilter")  => gopherFilter(parseFlags(args.tail), spark)
-    case Some("semDedup")      => semDedup(parseFlags(args.tail), spark)
-    case Some("dsirScore")     => dsirScore(parseFlags(args.tail), spark)
-    case Some("trainOrder")    => trainOrder(parseFlags(args.tail), spark)
-    case Some("heavyWords")    => heavyWords(parseFlags(args.tail), spark)
-    case Some("bpeTokenize")   => bpeTokenize(parseFlags(args.tail), spark)
-    case Some("clean")         => clean(parseFlags(args.tail), spark)
-    case Some("convert")       => convert(parseFlags(args.tail), spark)
-    case Some("profile")       => profileCmd(parseFlags(args.tail), spark)
-    case Some("compact")       => compactCmd(parseFlags(args.tail), spark)
-    case Some("cluster")       => clusterCmd(parseFlags(args.tail), spark)
-    case Some("index")         => indexCmd(parseFlags(args.tail), spark)
-    case Some("search")        => searchCmd(parseFlags(args.tail), spark)
-    case Some("pipeline")      =>
-      val f = parseFlags(args.tail)
-      Pipeline.run(required(f, "recipe"), f, spark)
-    case other =>
-      throw new IllegalArgumentException(
-        "usage: graft <bigDiffy|bigSampler|directSampler|corpusReport|" +
-          "dedupReport|gopherFilter|semDedup|dsirScore|trainOrder|" +
-          "heavyWords|bpeTokenize|clean|convert|profile|compact|cluster|" +
-          s"index|search|pipeline> [flags]; got $other")
+  /** Run one command. Each command names its completion witnesses: the
+    * outputs whose `_SUCCESS` markers mean a previous run completed it.
+    * When it has some and all exist the command is skipped before any
+    * Spark work; otherwise it runs inside one [[graft.core.Pin.scope]],
+    * which releases its pins when it returns or throws. */
+  def run(args: Seq[String], spark: SparkSession): Unit = {
+    val f = parseFlags(args.drop(1))
+    def output = Seq(required(f, "output"))
+    val (witnesses, command): (Seq[String], (Map[String, String], SparkSession) => Unit) =
+      args.headOption match {
+        // saveStats writes global LAST, so its _SUCCESS witnesses the whole
+        // output; fields/_SUCCESS is also required because an older binary
+        // wrote global FIRST, and (global && fields) is complete under both
+        // write orders
+        case Some("bigDiffy")      =>
+          (output.flatMap(o => Seq(s"$o/global", s"$o/fields")), bigDiffy)
+        case Some("bigSampler")    => (output, bigSampler)
+        case Some("directSampler") => (output, directSampler)
+        case Some("corpusReport")  => (output, corpusReport)
+        case Some("dedupReport")   => (output, dedupReportCmd)
+        case Some("gopherFilter")  => (output, gopherFilter)
+        case Some("semDedup")      => (output, semDedup)
+        case Some("dsirScore")     => (output, dsirScore)
+        case Some("trainOrder")    => (output, trainOrder)
+        case Some("heavyWords")    => (output, heavyWords)
+        case Some("bpeTokenize")   => (output ++ f.get("merges-output"), bpeTokenize)
+        case Some("clean")         => (output, clean)
+        case Some("convert")       => (output, convert)
+        case Some("profile")       => (output, profileCmd)
+        case Some("compact")       => (output, compactCmd)
+        case Some("cluster")       => (output, clusterCmd)
+        // only a build creates its output; an append's whole point is
+        // that the target exists, and the admin modes act on it in place
+        case Some("index")         =>
+          val inPlace = f.contains("drop-batch") || Seq("describe", "unlock",
+            "compact", "retrain", "append").exists(k => f.get(k).contains("true"))
+          (if (inPlace) Nil else output, indexCmd)
+        case Some("search")        => (output, searchCmd)
+        case Some("pipeline")      =>
+          val recipe = required(f, "recipe")
+          (Seq(Pipeline.output(recipe, f)), (f, s) => Pipeline.run(recipe, f, s))
+        case other =>
+          throw new IllegalArgumentException(
+            "usage: graft <bigDiffy|bigSampler|directSampler|corpusReport|" +
+              "dedupReport|gopherFilter|semDedup|dsirScore|trainOrder|" +
+              "heavyWords|bpeTokenize|clean|convert|profile|compact|cluster|" +
+              s"index|search|pipeline> [flags]; got $other")
+      }
+    if (witnesses.nonEmpty && witnesses.forall(GraftIO.outputExists))
+      System.err.println(s"[graft] output ${witnesses.mkString(", ")} already complete, skipping")
+    else Pin.scope(spark)(command(f, spark))
   }
 
   /** Engine extension: one-pass per-column dataset profile
@@ -96,14 +123,10 @@ object Graft {
     *               [--row-restriction=<sql predicate>]
     * }}} */
   private def profileCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
     val df = restrict(read(spark, required(f, "input"),
       f.getOrElse("input-mode", "parquet")), f)
     val prof = graft.ext.Profile.profile(df, csv(f.get("columns")))
-    write(prof.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
+    write(prof.coalesce(1), required(f, "output"), f.getOrElse("output-mode", "parquet"))
   }
 
   /** Engine extension: compact (or split) a parquet layout to
@@ -114,11 +137,7 @@ object Graft {
     *               [--preserve-order]
     * }}} */
   private def compactCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
-    val n = graft.ext.Layout.compactTo(spark, required(f, "input"), output,
+    val n = graft.ext.Layout.compactTo(spark, required(f, "input"), required(f, "output"),
       targetBytes = required(f, "target-bytes").toLong,
       preserveOrder = f.get("preserve-order").contains("true"))
     System.err.println(s"[graft] compacted to $n files")
@@ -135,10 +154,6 @@ object Graft {
     *               [--input-mode=parquet|avro|json] [--row-restriction=<pred>]
     * }}} */
   private def clusterCmd(f: Map[String, String], spark: SparkSession): Unit = {
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
     val df = restrict(read(spark, required(f, "input"),
       f.getOrElse("input-mode", "parquet")), f)
     val assigned = graft.ext.Similarity.clusterAssign(df,
@@ -148,10 +163,8 @@ object Graft {
     // a zero-row partitionBy write emits no schema-bearing file and the
     // output would fail later schema inference (same guard as the
     // persisted indexes): degrade to an unpartitioned empty write
-    if (assigned.isEmpty)
-      assigned.write.mode("overwrite").parquet(output)
-    else
-      assigned.write.mode("overwrite").partitionBy("cluster").parquet(output)
+    write(assigned, required(f, "output"), "parquet",
+      if (assigned.isEmpty) Nil else Seq("cluster"))
   }
 
   /** Engine extension: build or grow a persisted index artifact — BM25
@@ -244,11 +257,6 @@ object Graft {
       return
     }
     val append = f.get("append").contains("true")
-    // the exists-guard protects BUILDS from clobbering; an append's whole
-    // point is that the target exists
-    if (!append && GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
     val df = restrict(read(spark, required(f, "input"),
       f.getOrElse("input-mode", "parquet")), f)
     val idCol = f.getOrElse("id-col",
@@ -328,10 +336,6 @@ object Graft {
     * }}} */
   private def searchCmd(f: Map[String, String], spark: SparkSession): Unit = {
     import spark.implicits._
-    val output = required(f, "output")
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
     val index = required(f, "index")
     val result = required(f, "type") match {
       case "text" =>
@@ -394,7 +398,7 @@ object Graft {
       case t => throw new IllegalArgumentException(
         s"--type must be text, ivf, ivfpq, dedup or hybrid, got $t")
     }
-    write(result.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
+    write(result.coalesce(1), required(f, "output"), f.getOrElse("output-mode", "parquet"))
   }
 
   /** Format conversion — the reference CLI's core errand (ratatool's
@@ -418,10 +422,8 @@ object Graft {
       case Nil  => df
       case cols => df.select(cols.map(col): _*)
     }
-    if (!GraftIO.unlessDone(out) {
-      write(projected, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(projected, out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension: text cleanup ([[graft.ext.TextAnalysis]]) as a
@@ -444,11 +446,8 @@ object Graft {
       stripControl = !f.contains("keep-control"))
     if (f.contains("redact"))
       cleaned = graft.ext.TextAnalysis.redact(cleaned)
-    val result = df.withColumn(textCol, cleaned)
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(df.withColumn(textCol, cleaned), out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension: exact frequent items ([[graft.ext.Frequent]]) as a
@@ -473,10 +472,8 @@ object Graft {
       case None =>
         graft.ext.Frequent.heavyWords(df, f.getOrElse("text-col", "text"), ppm)
     }
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(result, out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension: learned BPE tokenization ([[graft.ext.Bpe]]) as a
@@ -509,18 +506,14 @@ object Graft {
       val merges = model.merges.zipWithIndex
         .map { case ((a, b), r) => (r, a, b) }
         .toDF("rank", "left", "right")
-      if (!GraftIO.unlessDone(mo) {
-        write(merges.coalesce(1), mo, "parquet", Nil)
-      }) System.err.println(s"[graft] merges $mo already complete, skipping")
+      write(merges.coalesce(1), mo, "parquet")
     }
     val result =
       if (f.contains("count-only"))
         df.withColumn("n_bpe_tokens", model.tokenCountCol(col(textCol)))
       else df.withColumn("bpe_tokens", model.encodeCol(col(textCol)))
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(result, out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension: SemDeDup semantic dedup
@@ -551,10 +544,8 @@ object Graft {
       if (f.contains("assignments-only")) r
       else df.join(r.filter(org.apache.spark.sql.functions.col("keep"))
         .select(org.apache.spark.sql.functions.col("id").as(idCol)), idCol)
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(result, out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension: DSIR importance scoring / selection
@@ -595,10 +586,8 @@ object Graft {
           frac.toDouble, f.getOrElse("temperature", "1.0").toDouble,
           f.getOrElse("salt", "dsir"))
     }
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(result, out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension: deterministic training-order shuffle
@@ -619,9 +608,7 @@ object Graft {
     val out = required(f, "output")
     val ordered = graft.ext.Split.trainOrder(df, csv(f.get("key")),
       salt = required(f, "salt"), numShards = f.getOrElse("shards", "256").toInt)
-    if (!GraftIO.unlessDone(out) {
-      write(ordered, out, f.getOrElse("output-mode", "parquet"), Seq("shard"))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(ordered, out, f.getOrElse("output-mode", "parquet"), Seq("shard"))
   }
 
   /** Engine extension: the Gopher-rule quality filter
@@ -681,10 +668,8 @@ object Graft {
           graft.ext.TextAnalysis.repetitionFilter(kept, textCol)
         else kept
       }
-    if (!GraftIO.unlessDone(out) {
-      write(result, out, f.getOrElse("output-mode", "parquet"),
-        csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(result, out, f.getOrElse("output-mode", "parquet"),
+      csv(f.get("partition-by")))
   }
 
   /** Engine extension beyond the reference CLI: the per-group dataset
@@ -696,15 +681,11 @@ object Graft {
     *                    [--output-mode=parquet|json] [--row-restriction=<pred>]
     * }}} */
   private def corpusReport(f: Map[String, String], spark: SparkSession): Unit = {
-    val input = f.getOrElse("input", sys.error("--input is required"))
-    val output = f.getOrElse("output", sys.error("--output is required"))
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
-    val df = restrict(read(spark, input, f.getOrElse("input-mode", "parquet")), f)
+    val df = restrict(read(spark, required(f, "input"),
+      f.getOrElse("input-mode", "parquet")), f)
     val rep = graft.ext.TextAnalysis.corpusReport(df,
       f.getOrElse("text-col", "text"), csv(f.get("group-by")))
-    write(rep.coalesce(1), output, f.getOrElse("output-mode", "parquet"))
+    write(rep.coalesce(1), required(f, "output"), f.getOrElse("output-mode", "parquet"))
   }
 
   /** Engine extension: pre-drop duplication audit ([[graft.ext.Dedup
@@ -719,12 +700,8 @@ object Graft {
     * clusters banded-minhash near-duplicates first. */
   private def dedupReportCmd(f: Map[String, String], spark: SparkSession): Unit = {
     import org.apache.spark.sql.functions.{col, lit, min}
-    val input = f.getOrElse("input", sys.error("--input is required"))
-    val output = f.getOrElse("output", sys.error("--output is required"))
-    if (GraftIO.outputExists(output)) {
-      System.err.println(s"[graft] output $output exists; skipping"); return
-    }
-    val df = restrict(read(spark, input, f.getOrElse("input-mode", "parquet")), f)
+    val df = restrict(read(spark, required(f, "input"),
+      f.getOrElse("input-mode", "parquet")), f)
     val id = f.getOrElse("id-col", "doc_id")
     val text = f.getOrElse("text-col", "text")
     val comp = f.getOrElse("mode", "exact") match {
@@ -740,7 +717,8 @@ object Graft {
             bands = f.getOrElse("bands", "16").toInt,
             shingleLen = f.getOrElse("shingle-len", "5").toInt,
             threshold = f.getOrElse("threshold", "0.8").toDouble))
-      case other => sys.error(s"--mode must be exact|near, got $other")
+      case other => throw new IllegalArgumentException(
+        s"--mode must be exact or near, got $other")
     }
     val hist = graft.ext.Dedup.dedupReport(df, id, comp)
       .select(lit("size").as("kind"),
@@ -754,7 +732,7 @@ object Graft {
             col("n_docs"), col("n_redundant")))
       case None => hist
     }
-    write(rep.coalesce(1).orderBy("kind", "key"), output,
+    write(rep.coalesce(1).orderBy("kind", "key"), required(f, "output"),
       f.getOrElse("output-mode", "parquet"))
   }
 
@@ -787,12 +765,19 @@ object Graft {
       case m => throw new IllegalArgumentException(s"unknown input-mode $m")
     }
 
-  /** `partitionBy` is the engine's analog of the reference's BQ
+  /** Write `df` to `path` unless a concurrent run completed `path` while
+    * this one computed it ([[run]] already skipped a complete output up
+    * front). `partitionBy` is the engine's analog of the reference's BQ
     * time-partitioned sink (S12, BigSamplerBigQuery.scala:187-199):
     * directory partitioning on the named columns (avro sink excluded —
     * the avro-mapred path has no partitioned committer). */
   private[cli] def write(df: DataFrame, path: String, mode: String,
-                    partitionBy: Seq[String] = Nil): Unit = mode match {
+                    partitionBy: Seq[String] = Nil): Unit =
+    if (!GraftIO.unlessDone(path)(writeMode(df, path, mode, partitionBy)))
+      System.err.println(s"[graft] output $path already complete, skipping")
+
+  private def writeMode(df: DataFrame, path: String, mode: String,
+                        partitionBy: Seq[String]): Unit = mode match {
     case "parquet" =>
       val w = df.write.mode("overwrite")
       (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
@@ -880,27 +865,12 @@ object Graft {
         val Array(a, b) = s.split(':'); a -> b
       }.toMap,
       ignoreNan = f.contains("ignore-nan"))
-    val out = required(f, "output")
-    // saveStats overlaps keys+fields then writes global LAST — the
-    // _SUCCESS marker of the LAST relation (global) is the completion
-    // witness for the whole output. Done also requires fields/_SUCCESS:
-    // an OLDER binary wrote global FIRST, so a crash under the old order
-    // could leave global complete with keys/fields missing — checking
-    // global alone would false-skip that partial output forever, while
-    // (global && fields) is complete under BOTH write orders (the new
-    // order settles keys+fields before global ever lands).
-    val done = GraftIO.outputExists(s"$out/global") &&
-      GraftIO.outputExists(s"$out/fields")
-    if (done)
-      System.err.println(s"[graft] output $out already complete, skipping")
-    else {
-      val result = BigDiffy.diff(lhs, rhs, keys, opts)
-      // the diff relation is persisted for saveStats' overlapped writes;
-      // release it so a long-lived session does not accumulate one
-      // cached relation per call
-      try BigDiffy.saveStats(result, out, ignoreNan = opts.ignoreNan)
-      finally result.unpersist()
-    }
+    val result = BigDiffy.diff(lhs, rhs, keys, opts)
+    // the diff relation is persisted for saveStats' overlapped writes;
+    // release it so a long-lived session does not accumulate one
+    // cached relation per call
+    try BigDiffy.saveStats(result, required(f, "output"), ignoreNan = opts.ignoreNan)
+    finally result.unpersist()
   }
 
   private def bigSampler(f: Map[String, String], spark: SparkSession): Unit = {
@@ -924,10 +894,8 @@ object Graft {
       case Some("uniform")    => BigSampler.Uniform(csv(f.get("distribution-fields")))
       case Some(d) => throw new IllegalArgumentException(s"unknown distribution $d")
     }
-    if (!GraftIO.unlessDone(out) {
-      write(BigSampler.sample(df, fraction, det, dist, exact = f.contains("exact")),
-        out, f.getOrElse("output-mode", mode), csv(f.get("partition-by")))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(BigSampler.sample(df, fraction, det, dist, exact = f.contains("exact")),
+      out, f.getOrElse("output-mode", mode), csv(f.get("partition-by")))
   }
 
   private def directSampler(f: Map[String, String], spark: SparkSession): Unit = {
@@ -946,8 +914,6 @@ object Graft {
         f.get("seed").map(_.toInt).getOrElse(0))
       case m => throw new IllegalArgumentException(s"unknown sampler mode $m")
     }
-    if (!GraftIO.unlessDone(out) {
-      write(sampled, out, f.getOrElse("output-mode", mode))
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    write(sampled, out, f.getOrElse("output-mode", mode))
   }
 }

@@ -1,7 +1,7 @@
 package graft.cli
 
 import graft.ext.{Dedup, Importance, ScoreFilter, Split, TextAnalysis}
-import graft.sources.GraftIO
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -51,11 +51,11 @@ import org.apache.spark.sql.functions._
   * }}}
   *
   * Per-stage accounting: with `audit` (the default) each stage's output is
-  * pinned with `localCheckpoint` and counted, and the runner writes
-  * `_stages.json` — `[{stage, op, rows_in, rows_out, seconds}, ...]` —
-  * next to the output. The pin means every stage's work runs exactly once
-  * (the count materializes it) and the lineage stays bounded across a long
-  * chain; that is also the shape you want on a cluster, where a 10-stage
+  * pinned and counted in one job ([[graft.core.Pin.counted]]), and the
+  * runner writes `_stages.json` — `[{stage, op, rows_in, rows_out,
+  * seconds}, ...]` — next to the output. The pin means every stage's work
+  * runs exactly once (the count materializes it) and the lineage stays
+  * bounded across a long chain; that is also the shape you want on a cluster, where a 10-stage
   * lazy chain would otherwise re-run stage 1 under every action. At the
   * very largest corpus sizes set `"audit": false`: the chain then stays a
   * single lazy plan (Catalyst fuses adjacent narrow stages, filters reach
@@ -71,16 +71,25 @@ object Pipeline {
   final case class StageStat(stage: Int, op: String, rowsIn: Long,
                              rowsOut: Long, seconds: Double)
 
-  /** Runs the recipe; returns the per-stage stats (empty when
-    * `audit: false`). Exposed for tests; the CLI entry is [[apply]]. */
+  /** The recipe's output directory, or `--output` when given. */
+  def output(recipePath: String, flags: Map[String, String]): String =
+    top(parseRecipe(recipePath), flags, "output")
+
+  private def top(recipe: Map[String, Any], flags: Map[String, String],
+                  k: String, dflt: Option[String] = None): String =
+    flags.get(k.replace('_', '-'))
+      .orElse(recipe.get(k).map(_.toString)).orElse(dflt)
+      .getOrElse(throw new IllegalArgumentException(
+        s"pipeline recipe needs '$k' (or --${k.replace('_', '-')})"))
+
+  /** Runs the recipe and writes its output, whether or not the output
+    * already exists (`graft pipeline` skips a complete output before it
+    * gets here); returns the per-stage stats (empty when `audit: false`). */
   def run(recipePath: String, flags: Map[String, String],
           spark: SparkSession): Seq[StageStat] = {
     val recipe = parseRecipe(recipePath)
     def topStr(k: String, dflt: Option[String] = None): String =
-      flags.get(k.replace('_', '-'))
-        .orElse(recipe.get(k).map(_.toString)).orElse(dflt)
-        .getOrElse(throw new IllegalArgumentException(
-          s"pipeline recipe needs '$k' (or --${k.replace('_', '-')})"))
+      top(recipe, flags, k, dflt)
     val out = topStr("output")
     val idCol = topStr("id_col", Some("doc_id"))
     val textCol = topStr("text_col", Some("text"))
@@ -120,14 +129,6 @@ object Pipeline {
       zcols
     }
 
-    // idempotence check FIRST: a complete output must short-circuit the
-    // whole run — checking only at write time (the old shape) would re-run
-    // every stage and then discard the result
-    if (GraftIO.outputExists(out)) {
-      System.err.println(s"[graft] output $out already complete, skipping")
-      return Vector.empty
-    }
-
     var df = Graft.read(spark, topStr("input"),
       topStr("input_mode", Some("parquet")))
     var stats = Vector.empty[StageStat]
@@ -138,9 +139,10 @@ object Pipeline {
       val t0 = System.nanoTime()
       df = applyStage(op, stage, df, idCol, textCol, spark)
       if (audit) {
-        // pin + count: the stage runs exactly once, lineage stays bounded
-        df = df.localCheckpoint(true)
-        val rowsOut = df.count()
+        // pin + count in one job: the stage runs exactly once, lineage
+        // stays bounded
+        val (pinned, rowsOut) = Pin.counted(df)
+        df = pinned
         val secs = (System.nanoTime() - t0) / 1e9
         System.err.println(
           f"[graft pipeline] stage $i $op: $rowsIn -> $rowsOut rows in $secs%.1f s")
@@ -150,24 +152,19 @@ object Pipeline {
     }
 
     // zorderWrite runs TWO actions (boundary sketch + clustered write);
-    // with audit on, df is already pinned by the last stage's
-    // localCheckpoint — without audit an unpinned chain would re-run
-    // every stage for each action, so pin it here
-    val finalDf =
-      if (layoutCols.isDefined && !audit) df.localCheckpoint(true) else df
-    // unlessDone kept as a race guard (a concurrent run may have completed
-    // while the stages ran); the normal skip already happened up front
-    if (!GraftIO.unlessDone(out) {
-      (layout, layoutCols) match {
-        case (Some(l), Some(zcols)) =>
-          graft.ext.Layout.zorderWrite(finalDf, zcols, out,
-            numFiles = long(l, "files", 16L).toInt,
-            bits = long(l, "bits", 8L).toInt)
-        case _ =>
-          Graft.write(finalDf, out, topStr("output_mode", Some("parquet")))
-      }
-      if (audit) writeStats(out, stats, spark)
-    }) System.err.println(s"[graft] output $out already complete, skipping")
+    // with audit on, df is already pinned by the last stage's pin —
+    // without audit an unpinned chain would re-run every stage for each
+    // action, so pin it here
+    val finalDf = if (layoutCols.isDefined && !audit) Pin.eager(df) else df
+    (layout, layoutCols) match {
+      case (Some(l), Some(zcols)) =>
+        graft.ext.Layout.zorderWrite(finalDf, zcols, out,
+          numFiles = long(l, "files", 16L).toInt,
+          bits = long(l, "bits", 8L).toInt)
+      case _ =>
+        Graft.write(finalDf, out, topStr("output_mode", Some("parquet")))
+    }
+    if (audit) writeStats(out, stats, spark)
     stats
   }
 

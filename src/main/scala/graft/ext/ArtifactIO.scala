@@ -5,6 +5,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 import scala.collection.mutable
+import scala.concurrent.{ExecutionContext, Future}
 
 /** Shared filesystem plumbing for the persisted-index family (text,
   * IVF, IVF-PQ, dedup): in-place directory rewrites staged to a sibling
@@ -438,6 +439,19 @@ private[ext] object ArtifactIO {
     val prev = heldLeases.get
     heldLeases.set(mutable.Map(ctx.toSeq: _*))
     try body finally heldLeases.set(prev)
+  }
+
+  /** Start `body` as a concurrent leg on the global pool, carrying this
+    * thread's held leases ([[runWithLeaseContext]]) and its pin scope
+    * ([[graft.core.Pin.within]]) onto the worker: the leg stages and
+    * fences like its starter, and its pins are released with the
+    * starter's scope. Settle it (graft.core.Par) before that lease or
+    * scope ends. */
+  private[ext] def leg[T](body: => T): Future[T] = {
+    val ctx = leaseContext
+    val scope = graft.core.Pin.current
+    Future(runWithLeaseContext(ctx)(graft.core.Pin.within(scope)(body)))(
+      ExecutionContext.global)
   }
 
   /** Commit-point fence: when `dst` sits under an artifact root this

@@ -20,16 +20,16 @@ import org.apache.spark.sql.functions._
   *   - verification (exact Jaccard / Hamming) runs only on candidates.
   *
   * Cache lifecycle: the near-dup operators pin small intermediate
-  * relations (hashed shingles, band/chunk signatures) so multi-branch
-  * plans evaluate the signature pass once. Pinning is an EAGER
-  * `localCheckpoint`, not `persist`: the blocks are owned by the RDD and
-  * reclaimed by the ContextCleaner as soon as the returned DataFrame is
-  * garbage-collected, so a long-lived session running many near-dup jobs
-  * does not accumulate plan-keyed cache entries that only
-  * `spark.catalog.clearCache()` could release. (Cost: the signature pass
-  * runs when the operator is CALLED, not when the result is first
-  * consumed.) On a real cluster prefer reliable checkpoints for
-  * multi-hour jobs that must survive executor loss.
+  * relations (hashed shingles, band/chunk signatures) with
+  * [[graft.core.Pin]] so multi-branch plans evaluate the signature pass
+  * once. A pin is an EAGER `localCheckpoint`, not `persist`, so no
+  * plan-keyed cache entry outlives the call. Inside a `Pin.scope` (every
+  * `graft` CLI command runs in one) the scope releases the pins when it
+  * exits; outside one the ContextCleaner reclaims them once the returned
+  * DataFrame is garbage-collected. (Cost: the signature pass runs when
+  * the operator is CALLED, not when the result is first consumed.) On a
+  * real cluster prefer reliable checkpoints for multi-hour jobs that must
+  * survive executor loss.
   */
 object Dedup {
 
@@ -106,8 +106,7 @@ object Dedup {
       s"bloomFpp must be in (0, 0.5], got $bloomFpp")
     // three consumers (count, bloom build, anti join) would each re-run
     // a derived `existing` plan: pin the 8-byte projection eagerly
-    // (localCheckpoint — ContextCleaner-reclaimed, see the cache note up
-    // top). `incoming` is scanned twice (the two filter branches); pin
+    // (see the cache note up top). `incoming` is scanned twice (the two filter branches); pin
     // it caller-side when it is itself an expensive derived relation.
     // nEx sizes the bloom; it rides the pin (no count job)
     val (exFp, nEx) =
@@ -293,7 +292,7 @@ object Dedup {
   }
 
   /** The MinHash-LSH family's shared front half: (hashed-shingle table,
-    * banded-signature relation), both localCheckpoint-pinned.
+    * banded-signature relation), both pinned.
     *
     * The whole pipeline runs on hashed shingles (sorted distinct longs) —
     * no string arrays anywhere: shingling is one custom-expression pass,
@@ -333,10 +332,9 @@ object Dedup {
       textCol: String, numHashes: Int, bands: Int, shingleLen: Int,
       seed: Int): (DataFrame, DataFrame, Long) = {
     val rPerB = numHashes / bands
-    val sh = df.select(col(idCol).as("id"),
+    val sh = Pin.eager(df.select(col(idCol).as("id"),
         shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint(true)
+      .filter(size(col("sh")) > 0))
     val sig = sh.withColumn("sig", minhash(col("sh"), numHashes, seed))
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"),
@@ -478,9 +476,7 @@ object Dedup {
     // planned. The incoming side is now derived even when `existing`
     // turns out empty — wasted work only in that degenerate corner, and
     // semantics are unchanged.
-    import scala.concurrent.Future
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fEx = Future {
+    val fEx = ArtifactIO.leg {
       // the bloom-sizing count rides the banded pin as an observed
       // metric — one job fewer on this leg
       shingleBandedCounted(existing, idCol, textCol,
@@ -491,16 +487,9 @@ object Dedup {
         shingleBandedCounted(incoming, idCol, textCol,
           numHashes, bands, shingleLen, seed)
       }
-    if (nExBands == 0) {
-      // known pin corner (r21 advice): the incoming side's two
-      // localCheckpoint pins are left behind on this degenerate path.
-      // Dataset.unpersist would be a silent no-op here — checkpoint
-      // blocks are owned by the underlying RDD, and the ContextCleaner
-      // reclaims them once the dataset is unreachable (the same
-      // lifecycle every other pin in this file relies on), so the leak
-      // is GC-bounded, not session-bounded.
-      return empty
-    }
+    // the incoming side's two pins go unused on this degenerate path;
+    // they are released with every other pin (see the cache note up top)
+    if (nExBands == 0) return empty
 
     // (band, bsig) funneled to one long; the bloom broadcast prunes the
     // incoming bands BEFORE any shuffle (false positives only add
@@ -664,10 +653,9 @@ object Dedup {
         shiftrightunsigned(col("fp"), c * bitsPer)
           .bitwiseAND(lit((1L << bitsPer) - 1)).as("csig"))
     }
-    fp.select(col("id"), col("fp"), explode(array(chunkStructs: _*)).as("cc"))
+    Pin.eager(fp.select(col("id"), col("fp"), explode(array(chunkStructs: _*)).as("cc"))
       .select(col("id"), col("fp"), col("cc.chunk").as("chunk"),
-        col("cc.csig").as("csig"))
-      .localCheckpoint(true)
+        col("cc.csig").as("csig")))
   }
 
   /** SimHash near-duplicate pairs: 64-bit fingerprint; candidates share at
@@ -861,7 +849,7 @@ object Dedup {
     * dedup, which then merely under-merges. Scale shape: each round is
     * one shuffle of the EDGE list joined to the (id, label) relation —
     * edges are two longs, orders of magnitude smaller than the corpus;
-    * each round's labels are lineage-truncated via localCheckpoint
+    * each round's labels are lineage-truncated by a pin
     * (storage for dropped rounds is reclaimed by the ContextCleaner,
     * bounded by maxIter copies of an (id, component) pair relation).
     * Returns (id, component) for every id that appears in `pairs`;
@@ -887,9 +875,8 @@ object Dedup {
     // pipeline that produced the pairs. Null-id pairs are dropped HERE so
     // both execution paths see the same graph (the distributed joins
     // below drop nulls silently; the driver path would otherwise NPE)
-    val p = pairs.select(col("id_a"), col("id_b"))
-      .filter(col("id_a").isNotNull && col("id_b").isNotNull)
-      .localCheckpoint(true)
+    val p = Pin.eager(pairs.select(col("id_a"), col("id_b"))
+      .filter(col("id_a").isNotNull && col("id_b").isNotNull))
     val idType = p.schema("id_a").dataType
     val integralIds =
       Seq[org.apache.spark.sql.types.DataType](ByteType, ShortType, IntegerType, LongType)
@@ -945,16 +932,15 @@ object Dedup {
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // localCheckpoint, NOT persist: each round references the previous
+    // a pin, NOT persist: each round references the previous
     // labels twice (neighbor join + convergence check), so an uncut
     // logical plan doubles per round — exponential analysis cost by ~20
     // iterations. Checkpointing truncates lineage each round; on a real
     // cluster prefer reliable checkpoints (spark.sparkContext
     // .setCheckpointDir + .checkpoint) to survive executor loss on
     // long-running clustering jobs.
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id"))
-      .localCheckpoint(true)
+    var labels = Pin.eager(edges.select(col("src").as("id")).distinct()
+      .withColumn("component", col("id")))
     // null-safe: sum over an EMPTY label relation is null — fold to zero
     // so the first convergence compare doesn't NPE on a pair-free corpus
     def labelSum(l: DataFrame): java.math.BigDecimal =
@@ -976,9 +962,8 @@ object Dedup {
       // path halving: follow the representative's own label once more —
       // roughly halves the rounds a long chain needs
       val reps = stepped.select(col("id").as("component"), col("component").as("rep2"))
-      val next = stepped.join(reps, Seq("component"), "left")
-        .select(col("id"), coalesce(col("rep2"), col("component")).as("component"))
-        .localCheckpoint(true)
+      val next = Pin.eager(stepped.join(reps, Seq("component"), "left")
+        .select(col("id"), coalesce(col("rep2"), col("component")).as("component")))
       // labels are monotone non-increasing, so an unchanged (exact
       // decimal) sum IS convergence — one cheap agg instead of an
       // anti-join comparison per round
@@ -1230,7 +1215,7 @@ object Dedup {
     // |X|−α+1 prefixes) then still guarantees every qualifying pair one
     // joined row. pMid ≤ pLong, so one explode serves both roles and
     // the smaller side is the `pos < p_mid` subset.
-    val prefix = ordered
+    val prefix = Pin.eager(ordered
       .withColumn("p",
         (col("len") - ceil(lit(threshold) * col("len")) + 1).cast("int"))
       .withColumn("p_mid",
@@ -1239,8 +1224,7 @@ object Dedup {
       .select(col("id"), col("len"), col("p_mid"),
         posexplode(slice(col("ft"), lit(1), col("p"))).as(Seq("pos", "e")))
       .select(col("e.tok").as("tok"), col("id"), col("len"), col("pos"),
-        col("p_mid"))
-      .localCheckpoint(true) // the self-join reads it twice
+        col("p_mid"))) // the self-join reads it twice
     (sh, prefix, nSh)
   }
 

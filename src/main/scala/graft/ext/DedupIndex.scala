@@ -200,13 +200,9 @@ object DedupIndex {
     // blooms still cover everything) — they stage and swap as concurrent
     // legs, each under the holder's propagated lease context so its
     // staging path keeps the token suffix and its swap stays fenced
-    // (ArtifactIO.runWithLeaseContext — the registry is a ThreadLocal)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
-    val ctx = ArtifactIO.leaseContext
+    // (ArtifactIO.leg — the registry is a ThreadLocal)
     val relLegs = Seq("shingles", "fingerprints", "bands").map { name =>
-      Future(ArtifactIO.runWithLeaseContext(ctx) {
+      ArtifactIO.leg {
         val dir = s"$path/$name"
         // parallelism floor: these are SERVE-path relations — compacting a
         // mid-size relation into 1-2 size-target files collapses every
@@ -218,7 +214,7 @@ object DedupIndex {
           .drop("batch")
         ArtifactIO.rewriteInPlace(spark, dir)(tmp =>
           df.repartition(n).write.mode("overwrite").parquet(s"$tmp/batch=$cid"))
-      })
+      }
     }
     // settle every leg before leaving (even when one throws): an
     // un-awaited leg would keep staging after the lease scope exits and
@@ -228,7 +224,7 @@ object DedupIndex {
     // blooms swap LAST (the compact-wide relations-then-blooms order is
     // the crash contract); the two rebuilds cover disjoint search paths
     // and run as concurrent legs under the same propagated context
-    val fpLeg = Future(ArtifactIO.runWithLeaseContext(ctx) {
+    val fpLeg = ArtifactIO.leg {
       val fps = GraftIO.readParquet(spark, s"$path/fingerprints")
       // exact census from the freshly-compacted files' footers — a
       // driver-side metadata read instead of a full count() scan (the
@@ -241,8 +237,8 @@ object DedupIndex {
             fps.stat.bloomFilter("fp", nDocs, p.bloomFpp), cid)
       }
       nDocs
-    })
-    val bandLeg = Future(ArtifactIO.runWithLeaseContext(ctx) {
+    }
+    val bandLeg = ArtifactIO.leg {
       val banded = GraftIO.readParquet(spark, s"$path/bands")
       val nBands = ArtifactIO.parquetRowCount(spark, s"$path/bands")
       ArtifactIO.rewriteInPlace(spark, s"$path/$BandBloomDir") { tmp =>
@@ -252,7 +248,7 @@ object DedupIndex {
             banded.select(fieldHash(Seq(col("band"), col("bsig"))).as("__bk"))
               .stat.bloomFilter("__bk", nBands, p.bloomFpp), cid)
       }
-    })
+    }
     val (nDocs, _) = graft.core.Par.settle2(fpLeg, bandLeg)
     nDocs
     } // lease scope
@@ -298,21 +294,16 @@ object DedupIndex {
     require(batch.matches("[A-Za-z0-9._-]+"),
       s"batch id must match [A-Za-z0-9._-]+, got '$batch'")
     val spark = df.sparkSession
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration.Duration
     // the EXACT path's relation (fingerprints) and the NEAR path's
     // relations (shingles/bands) derive independently from `df` and are
     // read by disjoint searches — their computation and their writes run
     // as two concurrent job-submission legs, each preserving ITS OWN
-    // crash order (see the write-order scaladoc above; none of this
-    // touches the lease machinery, which stays on the caller's thread)
-    val ctx = ArtifactIO.leaseContext
-    val fFps = Future {
+    // crash order (see the write-order scaladoc above)
+    val fFps = ArtifactIO.leg {
       // pinned: the fingerprint relation feeds the bloom build and the
-      // write (same eager-localCheckpoint lifecycle as Dedup); the
-      // bloom-sizing count RIDES the pin as an observed metric instead
-      // of paying its own scheduler round trip (guide §1.2-1)
+      // write (same Pin lifecycle as Dedup); the bloom-sizing count RIDES
+      // the pin as an observed metric instead of paying its own
+      // scheduler round trip (guide §1.2-1)
       Pin.counted(df.select(col(idCol).as("id"),
         farmHash64(col(textCol)).as("fp")))
     }
@@ -339,7 +330,7 @@ object DedupIndex {
     // the staleness window mid-scan) still clobber the new holder's
     // bloom segments and batch partitions — re-fencing at each commit
     // point is the same pattern rewriteInPlace follows before its rename
-    val exactLeg = Future(ArtifactIO.runWithLeaseContext(ctx) {
+    val exactLeg = ArtifactIO.leg {
       ArtifactIO.fenceOrAbort(spark, path)
       if (nDocs > 0) {
         val bloom = fps.stat.bloomFilter("fp", nDocs, p.bloomFpp)
@@ -348,8 +339,8 @@ object DedupIndex {
       }
       ArtifactIO.fenceOrAbort(spark, path)
       fps.write.mode("overwrite").parquet(s"$path/fingerprints/batch=$batch")
-    })
-    val nearLeg = Future(ArtifactIO.runWithLeaseContext(ctx) {
+    }
+    val nearLeg = ArtifactIO.leg {
       ArtifactIO.fenceOrAbort(spark, path)
       // bloom sizing: nBands rode the banded pin as an observed metric
       if (nBands > 0) {
@@ -363,7 +354,7 @@ object DedupIndex {
       sh.write.mode("overwrite").parquet(s"$path/shingles/batch=$batch")
       ArtifactIO.fenceOrAbort(spark, path)
       banded.write.mode("overwrite").parquet(s"$path/bands/batch=$batch")
-    })
+    }
     // settle both legs before leaving, propagating the first failure
     // only after the other leg has stopped writing (Par contract)
     graft.core.Par.settleAll(Seq(exactLeg, nearLeg))
@@ -417,12 +408,12 @@ object DedupIndex {
     // the incoming shingle+band+pin chain and the artifact-side reads
     // (bloom segments, the stored bands' narrow columnar count) are
     // independent — concurrent submissions, like the direct operator
-    val fIn = scala.concurrent.Future {
+    val fIn = ArtifactIO.leg {
       // the broadcast-sizing count rides the banded pin as an observed
       // metric — no separate count job on this leg
       Dedup.shingleBandedCounted(incoming, idCol, textCol,
         p.numHashes, p.bands, p.shingleLen, p.seed)
-    }(scala.concurrent.ExecutionContext.Implicits.global)
+    }
     val ((shIn, bandedIn, nInBands), (blooms, nExBands)) =
       graft.core.Par.withLeg(fIn) {
         // both artifact-side reads are driver-side metadata/segment IO:

@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -369,14 +370,14 @@ object Importance {
     require(addK > 0.0, s"addK must be > 0 for finite smoothing, got $addK")
     val toks = (rel: DataFrame) =>
       rel.select(scriptTokens(lower(col(textCol))).as("tk"))
-    val trainTk = toks(train.getOrElse(df))
-      .localCheckpoint(true) // feeds bigram counts AND the vocab count
+    // pinned: feeds bigram counts AND the vocab count
+    val trainTk = Pin.eager(toks(train.getOrElse(df)))
     val vCount = trainTk.select(explode(col("tk")).as("w"))
       .agg(countDistinct(col("w"))).head().getLong(0)
-    val c2 = trainTk.select(explode(bigramPairs(col("tk"))).as("b"))
+    // pinned: feeds the prefix counts AND the score join
+    val c2 = Pin.eager(trainTk.select(explode(bigramPairs(col("tk"))).as("b"))
       .select(col("b.u").as("u"), col("b.v").as("v"))
-      .groupBy("u", "v").agg(count(lit(1)).as("c2"))
-      .localCheckpoint(true) // feeds the prefix counts AND the score join
+      .groupBy("u", "v").agg(count(lit(1)).as("c2")))
     val c1 = c2.groupBy("u").agg(sum(col("c2")).as("c1"))
     val docBg = df.select(col(idCol).as("id"),
         scriptTokens(lower(col(textCol))).as("tk"))

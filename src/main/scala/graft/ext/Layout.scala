@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Pin
 import graft.sources.GraftIO
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -239,8 +240,7 @@ object Layout {
     // ONE scan of the layout: per-file mins/maxes are materialized
     // (n_files rows — tiny), and the global range derives from them
     // instead of re-scanning every file
-    val perFile = df.groupBy("__f").agg(pfAggs.head, pfAggs.tail: _*)
-      .localCheckpoint(true)
+    val perFile = Pin.eager(df.groupBy("__f").agg(pfAggs.head, pfAggs.tail: _*))
     val gAggs = cols.flatMap(c => Seq(
       min(col(s"__min_$c")).as(s"__gmin_$c"),
       max(col(s"__max_$c")).as(s"__gmax_$c")))

@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.core.Pin
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -63,7 +64,7 @@ object Pack {
     val nParts = if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
     val tok = col(tokenCol).cast("long")
-    // PINNED (eager localCheckpoint): the per-partition totals below and
+    // PINNED (Pin.eager): the per-partition totals below and
     // the final pass must see the SAME physical partitioning, and
     // repartitionByRange re-SAMPLES its boundaries on every evaluation —
     // at small SFs the two samplings happened to coincide, but the sf1
@@ -71,11 +72,10 @@ object Pack {
     // another (globally inconsistent sequence ids; span mass preserved,
     // order broken). The pinned projection is (id, order, token) only —
     // a few dozen bytes per document, not the corpus.
-    val proj = df.select((idCol +: ord).distinct.map(col) :+ tok.as("__tok"): _*)
+    val proj = Pin.eager(df.select((idCol +: ord).distinct.map(col) :+ tok.as("__tok"): _*)
       .filter(col("__tok").isNotNull && col("__tok") > 0)
       .repartitionByRange(nParts, ord.map(col): _*)
-      .withColumn("__pid", spark_partition_id())
-      .localCheckpoint(true)
+      .withColumn("__pid", spark_partition_id()))
 
     // per-partition totals: #partitions rows to the driver, cumulated
     // into EXCLUSIVE per-partition offsets, broadcast back

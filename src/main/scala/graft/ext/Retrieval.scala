@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import graft.functions.TopK
 import graft.sources.GraftIO
 import org.apache.spark.sql.DataFrame
@@ -117,11 +118,10 @@ object Retrieval {
     // df/idf branch and the scoring branch, which would otherwise each
     // re-scan and re-tokenize the corpus; the pinned relation is the
     // matched postings only (bounded by query-vocab selectivity)
-    val tf = d.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+    val tf = Pin.eager(d.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .join(broadcast(vocab), "term")
       .groupBy(col("doc_id"), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
 
     // df over the postings collapses to <= |vocab| rows; idf broadcasts back
     val idf = tf.groupBy("term")
@@ -217,10 +217,9 @@ object Retrieval {
     // pinned: the stats pass and the postings write would otherwise each
     // re-tokenize the batch (batches are bounded — the pin holds one
     // batch's token arrays, not a corpus)
-    val d = docs.select(col(idCol).cast(LongType).as("doc_id"),
+    val d = Pin.eager(docs.select(col(idCol).cast(LongType).as("doc_id"),
       scriptTokens(lower(col(textCol))).as("toks"))
-      .withColumn("dl", size(col("toks")).cast(LongType))
-      .localCheckpoint(true)
+      .withColumn("dl", size(col("toks")).cast(LongType)))
     val st = d.agg(count(lit(1)).as("n_docs"),
       coalesce(sum(col("dl")), lit(0L)).as("sum_dl")).head()
     val nDocs = st.getAs[Long]("n_docs")
@@ -557,10 +556,9 @@ object Retrieval {
       .withColumn("dl", size(col("toks")).cast(LongType))
       .observe(dObs, count(lit(1)).as("n"))
     // pinned: feeds df, the norms, and the dot products
-    val tfd = d.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+    val tfd = Pin.eager(d.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     val nDocs = dObs.get("n").asInstanceOf[Long]
     if (nDocs == 0L)
       return queries.select(col(qidCol).cast(LongType).as("query_id"),
@@ -582,11 +580,11 @@ object Retrieval {
       .select(col("query_id"), col("ql"), explode(col("qtoks")).as("term"))
       .groupBy(col("query_id"), col("term"), col("ql"))
       .agg(count(lit(1)).as("qtf"))
-    val wQ = broadcast(qt).join(dfT, "term")
+    // pinned: tiny; feeds the query norms and the dots
+    val wQ = Pin.eager(broadcast(qt).join(dfT, "term")
       .select(col("query_id"), col("term"),
         (col("qtf").cast("double") / col("ql").cast("double")
-          * log(lit(nDocs.toDouble) / col("df").cast("double"))).as("wq"))
-      .localCheckpoint(true) // tiny; feeds the query norms and the dots
+          * log(lit(nDocs.toDouble) / col("df").cast("double"))).as("wq")))
     val normQ = wQ.groupBy("query_id").agg(sqrt(sum(col("wq") * col("wq"))).as("nq"))
     val dots = wD.join(broadcast(wQ), "term")
       .groupBy("query_id", "doc_id")
@@ -634,10 +632,9 @@ object Retrieval {
     // tokenize+aggregate pass instead of two; the pin holds one thin row
     // per distinct (doc, term), the same order of magnitude the shuffle
     // already spills
-    val tf = d.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
+    val tf = Pin.eager(d.select(col("doc_id"), col("dl"), explode(col("toks")).as("term"))
       .groupBy(col("doc_id"), col("term"), col("dl"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf")))
     val nDocs = dObs.get("n").asInstanceOf[Long]
     val df = tf.groupBy("term")
       .agg(count(lit(1)).as("df"))

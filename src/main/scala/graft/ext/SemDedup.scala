@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -115,12 +116,11 @@ object SemDedup {
     // null cell from NearestCells and form their own "cluster" -1 — they
     // cannot be semantic duplicates of anything, so they are always kept.
     // cluster is LONG: split rounds allocate fresh ids above k
-    val assigned = v
+    // pinned: the size filter, both pair sides, and the final keep join
+    // would each re-run assignment (k × dim multiplies per row) otherwise
+    val assigned = Pin.eager(v
       .withColumn("cluster",
-        coalesce(nearestCells(col("v"), centroids, 1)(0).cast("long"), lit(-1L)))
-      // pinned: the size filter, both pair sides, and the final keep join
-      // would each re-run assignment (k × dim multiplies per row) otherwise
-      .localCheckpoint(true)
+        coalesce(nearestCells(col("v"), centroids, 1)(0).cast("long"), lit(-1L))))
 
     // one bounded collect (≤ k+1 rows — initial cells) decides whether the
     // degenerate path is needed at all; the final sizes stay LAZY so AQE
@@ -207,9 +207,8 @@ object SemDedup {
       else {
         val reps = overRows.groupBy(col("cluster"), col("v"))
           .agg(min(col("id")).as("rep"))
-        val tagged = overRows.join(reps, Seq("cluster", "v"))
-          .select("id", "v", "cluster", "rep")
-          .localCheckpoint(true) // both branches below re-read it
+        val tagged = Pin.eager(overRows.join(reps, Seq("cluster", "v"))
+          .select("id", "v", "cluster", "rep")) // both branches below re-read it
         (tagged.filter(col("id") === col("rep")).select("id", "v", "cluster"),
           Some(tagged.filter(col("id") =!= col("rep")).select("id", "rep")))
       }
@@ -217,7 +216,7 @@ object SemDedup {
     // (b) split rounds. Child ids start at k (initial cells are < k) and
     // grow monotonically — collision-free across rounds at any depth.
     val sampleCap = 1024
-    var work = work0.localCheckpoint(true)
+    var work = Pin.eager(work0)
     var done = List.empty[DataFrame]
     var stuck = Set.empty[Long]
     var nextChild = k.toLong
@@ -315,7 +314,7 @@ object SemDedup {
         val zeroDraw = overNow.keySet -- childMap.keySet -- stuck
         if (childMap.isEmpty && zeroDraw.isEmpty) { done ::= active; work = null }
         else if (childMap.isEmpty) {
-          work = active.localCheckpoint(true)
+          work = Pin.eager(active)
           round += 1
         } else {
           val bc = spark.sparkContext.broadcast(childMap)
@@ -337,10 +336,9 @@ object SemDedup {
                 base + best
             }
           }
-          work = active
-            .withColumn("cluster", reassign(col("cluster"), col("v")))
-            .localCheckpoint(true) // pin each round: bounded lineage
-          // the eager checkpoint above fully materialized the reassign, so
+          work = Pin.eager(active // pin each round: bounded lineage
+            .withColumn("cluster", reassign(col("cluster"), col("v"))))
+          // the pin above fully materialized the reassign, so
           // this round's centroid broadcast is dead — destroy it instead
           // of letting one broadcast per round pile up on the executors
           bc.destroy()
@@ -349,7 +347,6 @@ object SemDedup {
       }
     }
     if (work != null) done ::= work // budget exhausted → size check flags
-    (done.foldLeft(nonOver)(_ unionByName _).localCheckpoint(true),
-      exactRemoved)
+    (Pin.eager(done.foldLeft(nonOver)(_ unionByName _)), exactRemoved)
   }
 }

@@ -121,11 +121,10 @@ object Similarity {
     val corpusV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val queryV = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // pinned: bucket counts + the candidate join would otherwise both
-    // recompute dim×bits×tables dot products per corpus row. Eager
-    // localCheckpoint, not persist: blocks are GC-reclaimed with the
-    // DataFrame instead of accumulating in the plan-keyed cache (see
-    // Dedup's cache-lifecycle note)
-    val cb = bucketed(corpusV, "id", "v").localCheckpoint(true)
+    // recompute dim×bits×tables dot products per corpus row. A Pin, not
+    // persist: no plan-keyed cache entry outlives the call (see Dedup's
+    // cache-lifecycle note)
+    val cb = Pin.eager(bucketed(corpusV, "id", "v"))
     val qb = bucketed(queryV, "query_id", "qv")
 
     // cap hot buckets (e.g. zero/degenerate vectors all land in one sign
@@ -436,14 +435,11 @@ object Similarity {
     // parquet overwrites need no fence today, but every thread staging
     // under a writer lease must carry the holder's context so a future
     // fence added to this path cannot silently no-op.
-    val leaseCtx = ArtifactIO.leaseContext
-    val fMeta = scala.concurrent.Future {
-      ArtifactIO.runWithLeaseContext(leaseCtx) {
-        centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-      }
-    }(scala.concurrent.ExecutionContext.Implicits.global)
+    val fMeta = ArtifactIO.leg {
+      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
+    }
     val (_, nCells) = graft.core.Par.withLeg(fMeta) {
       // a rebuild must not inherit appended batches from a prior life
       ArtifactIO.fs(spark, s"$path/postings")
@@ -944,20 +940,17 @@ object Similarity {
     // chains, overlapped (build is a full overwrite and idempotent, so no
     // crash ordering between them is load-bearing; re-run on a tear).
     // Lease context carried onto the leg like buildIvfIndex's (r21 advice).
-    val leaseCtx = ArtifactIO.leaseContext
-    val fMeta = scala.concurrent.Future {
-      ArtifactIO.runWithLeaseContext(leaseCtx) {
-        val coarse = modelOpt.map(_.coarse).getOrElse(Array.empty[Array[Double]])
-        coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-          .toDF("cell", "centroid")
-          .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-        val books = modelOpt.map(_.books).getOrElse(Array.empty[Array[Array[Double]]])
-        books.zipWithIndex.flatMap { case (book, sp) =>
-          book.zipWithIndex.map { case (cent, code) => (sp, code, cent.toSeq) }
-        }.toSeq.toDF("subspace", "code", "centroid")
-          .repartition(1).write.mode("overwrite").parquet(s"$path/codebooks")
-      }
-    }(scala.concurrent.ExecutionContext.Implicits.global)
+    val fMeta = ArtifactIO.leg {
+      val coarse = modelOpt.map(_.coarse).getOrElse(Array.empty[Array[Double]])
+      coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+        .toDF("cell", "centroid")
+        .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
+      val books = modelOpt.map(_.books).getOrElse(Array.empty[Array[Array[Double]]])
+      books.zipWithIndex.flatMap { case (book, sp) =>
+        book.zipWithIndex.map { case (cent, code) => (sp, code, cent.toSeq) }
+      }.toSeq.toDF("subspace", "code", "centroid")
+        .repartition(1).write.mode("overwrite").parquet(s"$path/codebooks")
+    }
     val (_, nCells) = graft.core.Par.withLeg(fMeta) {
       // a rebuild must not inherit appended batches from a prior life
       ArtifactIO.fs(spark, s"$path/postings")

@@ -32,8 +32,8 @@ object ProfGates {
     val recorder = new RunRecorder
     spark.sparkContext.addSparkListener(recorder)
 
-    // the operator's frame: Pin.counted is a helper every pin goes
-    // through, so its frame would hide which operator pinned
+    // the operator's frame: every pin goes through graft.core.Pin, so
+    // its frame would hide which operator pinned
     def graftSite(st: RunRecorder.Stage): String =
       st.details.linesIterator
         .find(l => l.contains("graft") && !l.contains("graft.tools") &&

@@ -8,6 +8,21 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local SparkSession for all suites (one JVM, reused). */
 trait SparkSpec extends AnyFlatSpec with Matchers with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** `body`'s result and the Spark jobs it started, read off a window of
+    * a [[graft.tools.RunRecorder]]. */
+  protected def jobsOf[T](body: => T): (T, Int) = {
+    val rec = new graft.tools.RunRecorder
+    val sc = spark.sparkContext
+    sc.addSparkListener(rec)
+    try {
+      rec.drain(sc)
+      rec.reset()
+      val r = body
+      rec.drain(sc)
+      (r, rec.jobs.size)
+    } finally sc.removeSparkListener(rec)
+  }
 }
 
 object SparkSpec {

@@ -31,14 +31,59 @@ class GraftCliSpec extends SparkSpec {
     new java.io.File(s"$base/out/fields").exists() shouldBe true
   }
 
-  it should "release the cached diff relation after bigDiffy" in {
+  it should "leave no RDD persisted after any command family" in {
+    import org.apache.spark.sql.functions.col
     val base = tmp()
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    docs.filter(col("doc_id") % 2 === 0).write.parquet(s"$base/d0")
+    docs.filter(col("doc_id") % 2 === 1).write.parquet(s"$base/d1")
+    docs.filter(col("doc_id") < 6)
+      .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
+      .write.parquet(s"$base/incoming")
+    val emb = "/root/testdata/sf0.001/embeddings.parquet"
+    spark.read.parquet(emb).limit(3).write.parquet(s"$base/qv")
     Seq((1L, 1.0), (2L, 2.0)).toDF("k", "v").write.parquet(s"$base/lhs")
     Seq((1L, 1.5), (3L, 3.0)).toDF("k", "v").write.parquet(s"$base/rhs")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    Graft.run(Seq("bigDiffy", s"--lhs=$base/lhs", s"--rhs=$base/rhs",
-      "--key=k", s"--output=$base/out"), spark)
-    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    Files.write(java.nio.file.Paths.get(s"$base/recipe.json"),
+      s"""{"input": "$base/d0", "output": "$base/curated",
+         | "stages": [{"op": "normalize"}, {"op": "dedup_near"}]}""".stripMargin
+        .getBytes("UTF-8"))
+    val didx = s"--index=$base/didx"
+    val families = Seq(
+      "dedup index build" -> Seq("index", "--type=dedup", s"--input=$base/d0",
+        s"--output=$base/didx"),
+      "dedup index append" -> Seq("index", "--type=dedup", "--append",
+        s"--input=$base/d1", s"--output=$base/didx"),
+      "dedup-near search" -> Seq("search", "--type=dedup", didx,
+        s"--queries=$base/incoming", s"--output=$base/near"),
+      "dedup-exact search" -> Seq("search", "--type=dedup", "--mode=exact", didx,
+        s"--queries=$base/incoming", s"--output=$base/exact"),
+      "dedup index compact" -> Seq("index", "--type=dedup", "--compact",
+        s"--output=$base/didx"),
+      "text index build" -> Seq("index", "--type=text", s"--input=$base/d0",
+        s"--output=$base/tidx", "--buckets=8"),
+      "text search" -> Seq("search", "--type=text", s"--index=$base/tidx",
+        "--query=spark join;;customer order", s"--output=$base/hits"),
+      "ivfpq index build" -> Seq("index", "--type=ivfpq", s"--input=$emb",
+        s"--output=$base/pq", "--nlist=4", "--m=8", "--codebook-size=16"),
+      "ivfpq search" -> Seq("search", "--type=ivfpq", s"--index=$base/pq",
+        s"--queries=$base/qv", s"--output=$base/nn"),
+      "pipeline" -> Seq("pipeline", s"--recipe=$base/recipe.json"),
+      "bigSampler" -> Seq("bigSampler", s"--input=$base/d0",
+        s"--output=$base/sample", "--sample=0.5", "--fields=doc_id"),
+      "bigDiffy" -> Seq("bigDiffy", s"--lhs=$base/lhs", s"--rhs=$base/rhs",
+        "--key=k", s"--output=$base/out"))
+    families.foreach { case (family, args) =>
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      Graft.run(args, spark)
+      withClue(s"$family: ") {
+        (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+      }
+    }
+    // the searches saw the appended half: every planted copy is found
+    spark.read.parquet(s"$base/near")
+      .filter(col("id_old") === col("id_new") - 100000L).count() shouldBe 6L
+    spark.read.parquet(s"$base/exact").count() shouldBe 0L
     def tsv(name: String) = spark.read.option("header", "true").option("sep", "\t")
       .csv(s"$base/out/$name").collect().map(_.toSeq.mkString("|")).sorted.toSeq
     // num_total, num_same, num_diff, num_missing_lhs, num_missing_rhs
@@ -584,6 +629,64 @@ class GraftCliSpec extends SparkSpec {
       s"--output=$base/orcback"), spark)
     spark.read.parquet(s"$base/orcback")
       .agg(org.apache.spark.sql.functions.sum("score")).head().getDouble(0) shouldBe 60.0
+  }
+
+  it should "skip a completed semDedup and bpeTokenize before any Spark job" in {
+    val base = tmp()
+    val rnd = new scala.util.Random(3)
+    (0L until 12L).map(i => (i, Seq.fill(8)(rnd.nextGaussian().toFloat), s"doc $i text"))
+      .toDF("id", "embedding", "text").write.parquet(s"$base/in")
+    val commands = Seq(
+      Seq("semDedup", s"--input=$base/in", s"--output=$base/kept",
+        "--id-col=id", "--vec-col=embedding", "--k=2"),
+      Seq("bpeTokenize", s"--input=$base/in", s"--output=$base/toks",
+        "--num-merges=5", s"--merges-output=$base/merges"))
+    commands.foreach { args =>
+      jobsOf(Graft.run(args, spark))._2 should be > 0
+      withClue(s"${args.head} rerun: ") { jobsOf(Graft.run(args, spark))._2 shouldBe 0 }
+    }
+    // bpeTokenize is complete only when its merges output is too
+    Graft.run(Seq("bpeTokenize", s"--input=$base/in", s"--output=$base/toks",
+      "--num-merges=5", s"--merges-output=$base/merges2"), spark)
+    spark.read.parquet(s"$base/merges2").count() shouldBe
+      spark.read.parquet(s"$base/merges").count()
+  }
+
+  it should "pin and count an audited pipeline stage in one Spark job" in {
+    val base = tmp()
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+      .select("doc_id", "text")
+    docs.write.parquet(s"$base/in")
+    def recipe(name: String, audit: Boolean): String = {
+      val p = s"$base/$name.json"
+      Files.write(java.nio.file.Paths.get(p),
+        s"""{"input": "$base/in", "output": "$base/$name", "audit": $audit,
+           | "stages": [{"op": "normalize"},
+           |            {"op": "filter", "predicate": "doc_id % 3 = 0"}]}"""
+          .stripMargin.getBytes("UTF-8"))
+      p
+    }
+    val (stats, audited) = jobsOf(Pipeline.run(recipe("a", audit = true), Map.empty, spark))
+    val (_, plain) = jobsOf(Pipeline.run(recipe("p", audit = false), Map.empty, spark))
+    val (_, inputCount) = jobsOf(Graft.read(spark, s"$base/in", "parquet").count())
+    // over the unaudited run, audit adds the input count and one job per
+    // stage: each stage's pin carries its count
+    audited shouldBe plain + inputCount + 2
+    val n = docs.count()
+    stats.map(s => (s.op, s.rowsIn, s.rowsOut)) shouldBe Seq(
+      ("normalize", n, n), ("filter", n, docs.filter("doc_id % 3 = 0").count()))
+    spark.read.parquet(s"$base/a").count() shouldBe stats.last.rowsOut
+  }
+
+  it should "name a missing required flag of corpusReport and dedupReport" in {
+    Seq("corpusReport", "dedupReport").foreach { cmd =>
+      the[IllegalArgumentException] thrownBy
+        Graft.run(Seq(cmd, "--output=/nonexistent/out"), spark) should have message
+        "missing required --input"
+      the[IllegalArgumentException] thrownBy
+        Graft.run(Seq(cmd, "--input=/nonexistent/in"), spark) should have message
+        "missing required --output"
+    }
   }
 
   it should "reject unknown commands and missing flags with clear errors" in {
