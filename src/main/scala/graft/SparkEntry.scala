@@ -1462,7 +1462,7 @@ object SparkEntry {
     // cells, ADC-scores, and exact-reranks the top k×20 (the rf dial
     // that holds recall as the corpus grows). The gate verifies the
     // artifact end-to-end — including a blind RE-append of a slice (the
-    // torn-append retry) healed by compactIvfPqIndex, whose full-row
+    // torn-append retry) healed by compactIvfIndex, whose full-row
     // dedupe the postings-count pin then proves: n_postings equals the
     // corpus count in DuckDB only if compaction dropped exactly the
     // double-written rows. Model round-trips its shape, and from-disk
@@ -1477,7 +1477,7 @@ object SparkEntry {
       // are byte-identical duplicates — exactly what compaction drops
       Similarity.appendIvfPqIndex(emb.filter(col("vec_id") < 50),
         "vec_id", "embedding", tmp)
-      Similarity.compactIvfPqIndex(s, tmp)
+      Similarity.compactIvfIndex(s, tmp)
       val model = Similarity.loadIvfPqModel(s, tmp)
       // the brute-force oracle stays LAZY: measured, hoisting it into a
       // checkpointed concurrent job alongside the PQ training read

@@ -220,10 +220,9 @@ object Graft {
     }
     if (f.get("compact").contains("true")) {
       required(f, "type") match {
-        case "text"  => graft.ext.Retrieval.compactTextIndex(spark, output)
-        case "ivf"   => graft.ext.Similarity.compactIvfIndex(spark, output)
-        case "ivfpq" => graft.ext.Similarity.compactIvfPqIndex(spark, output)
-        case "dedup" => graft.ext.DedupIndex.compact(spark, output); ()
+        case "text"          => graft.ext.Retrieval.compactTextIndex(spark, output)
+        case "ivf" | "ivfpq" => graft.ext.Similarity.compactIvfIndex(spark, output)
+        case "dedup"         => graft.ext.DedupIndex.compact(spark, output); ()
         case t => throw new IllegalArgumentException(
           s"--type must be text, ivf, ivfpq or dedup, got $t")
       }

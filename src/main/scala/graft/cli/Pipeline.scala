@@ -56,10 +56,15 @@ import org.apache.spark.sql.functions._
   * seconds}, ...]` — next to the output. The pin means every stage's work
   * runs exactly once (the count materializes it) and the lineage stays
   * bounded across a long chain; that is also the shape you want on a cluster, where a 10-stage
-  * lazy chain would otherwise re-run stage 1 under every action. At the
-  * very largest corpus sizes set `"audit": false`: the chain then stays a
-  * single lazy plan (Catalyst fuses adjacent narrow stages, filters reach
-  * the scan) with no per-stage counts and nothing pinned.
+  * lazy chain would otherwise re-run stage 1 under every action.
+  * `"audit": false` keeps the chain one lazy plan with no per-stage counts
+  * and nothing pinned until the output write, but then every stage that
+  * runs a Spark job of its own re-runs the whole chain above it from the
+  * source scan: on the pipeline_e2e gate's recipe over the sf0.01
+  * documents (4 local cores), 9 jobs read all 500 source rows again
+  * (quality_top_fraction's threshold in 2, token_budget's cut in 3, the
+  * layout pin in 4): 20 jobs and 4,635 input records against audit's 23
+  * jobs and 2,550, in 7.5 s against 3.4 s.
   *
   * Scale notes: every stage maps to an operator whose 100 TB shape is
   * documented on the operator itself (fingerprint shuffles, banded LSH,

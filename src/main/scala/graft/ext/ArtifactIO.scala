@@ -3,17 +3,42 @@ package graft.ext
 import graft.sources.GraftIO
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
 import scala.collection.mutable
 import scala.concurrent.{ExecutionContext, Future}
 
-/** Shared filesystem plumbing for the persisted-index family (text,
-  * IVF, IVF-PQ, dedup): in-place directory rewrites staged to a sibling
-  * and swapped by rename-ASIDE, so the live data exists (as the
+/** Shared filesystem plumbing and the ONE batch lifecycle of the
+  * persisted-index family (dedup, BM25 text, IVF, IVF-PQ).
+  *
+  * Every artifact is a directory of batch-partitioned relations
+  * (`<relation>/batch=<id>/…`, plus the dedup index's per-batch Bloom
+  * segments) and a `folded_batches` ledger. Its generation changes only
+  * through the four steps below; the families call them and supply their
+  * own writers, their relation lists and their crash orders:
+  *
+  *  - [[rebuild]] takes the writer lease, deletes the family's relation
+  *    directories and THEN the ledger (with their staging siblings), and
+  *    runs the build. A rebuild never inherits a prior life's batches,
+  *    Bloom segments or folded ids.
+  *  - [[appendKeyed]] takes the lease and first checks the ledger: a
+  *    keyed id that a compaction already folded is a post-compaction
+  *    replay — one log line, 0 rows, no other read. Otherwise it
+  *    validates the id (a caller's stable key, or a fresh `auto-*`) and
+  *    runs the family's writer, which overwrites that batch's own
+  *    partitions (a retried keyed append replaces itself).
+  *  - [[fold]], called by a compactor or retrain under its lease,
+  *    records every replayable batch id of the given relations in the
+  *    ledger BEFORE any swap and returns the one `compact-*` id the
+  *    folded output is written under.
+  *  - [[dropBatch]] takes the lease and deletes a batch's paths in the
+  *    order the family gives (each family orders them so a tear only
+  *    over-covers).
+  *
+  * In-place directory rewrites are staged to a sibling and swapped by
+  * rename-ASIDE ([[rewriteInPlace]]), so the live data exists (as the
   * destination or as `<dst>_compact_old`) at every instant — a crash or
-  * a failed rename in the swap window can lose the compaction, never
-  * the data. Single-writer contract throughout, like the artifacts
-  * themselves. */
+  * a failed rename in the swap window can lose the compaction, never the
+  * data. Single-writer contract throughout, enforced by the lease
+  * ([[withWriterLease]]); readers never take it. */
 private[ext] object ArtifactIO {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
@@ -26,7 +51,7 @@ private[ext] object ArtifactIO {
     * artifacts use internally are RESERVED: `init` names the build's
     * base corpus (an append under it would silently replace the whole
     * build) and `compact-*` names a compactor's folded output. */
-  def validBatchId(batchId: Option[String]): String = batchId match {
+  private def validBatchId(batchId: Option[String]): String = batchId match {
     case Some(id) =>
       require(id.matches("[A-Za-z0-9._-]+"),
         s"batch id must match [A-Za-z0-9._-]+, got '$id'")
@@ -303,38 +328,6 @@ private[ext] object ArtifactIO {
       dst == root || dst.startsWith(root + "/")
     }.map { case (_, token) => "_" + token.take(8) }.getOrElse("")
 
-  /** Compact a batch-partitioned postings directory in place: repeated
-    * appends accumulate one `batch=<id>` partition per append — this
-    * collapses them in ONE shuffle into a single `batch=<compact-id>`
-    * partition with O(1) files per `partCol` directory (both the
-    * small-file count and the partition-discovery listing stop growing
-    * with append count). `dedupe = true` additionally drops duplicates
-    * on the DATA columns (`batch` excluded) — the rows an un-keyed blind
-    * retry of a torn append double-writes (safe only when the artifact
-    * carries no separate aggregate that double-counted them — the
-    * caller knows). Returns false (untouched) when `partCol` is absent,
-    * the empty-built unpartitioned layout. */
-  def compactPartitioned(spark: SparkSession, dst: String, partCol: String,
-                         dedupe: Boolean = false): Boolean = {
-    val df0 = GraftIO.readParquet(spark, dst)
-    // the empty-built layout carries the part column as a DATA column
-    // (zero rows, unpartitioned) and no batch partitions — compacting it
-    // would stage a zero-row partitioned write that emits no
-    // schema-bearing file and corrupt the directory, so the guard must
-    // key on `batch` (present exactly when real batches exist)
-    if (!df0.columns.contains("batch") || !df0.columns.contains(partCol))
-      return false
-    val data = df0.drop("batch")
-    val df = if (dedupe) data.dropDuplicates() else data
-    val cid = s"compact-${java.util.UUID.randomUUID.toString.take(13)}"
-    rewriteInPlace(spark, dst) { tmp =>
-      df.repartition(col(partCol))
-        .write.mode("overwrite").partitionBy(partCol)
-        .parquet(s"$tmp/batch=$cid")
-    }
-    true
-  }
-
   // ---- folded-batches ledger ----------------------------------------------
   // Compaction folds batch partitions into one compact batch, DESTROYING
   // the per-batch idempotence keys — a stream replaying a pre-compaction
@@ -357,7 +350,7 @@ private[ext] object ArtifactIO {
 
   /** Batch ids currently present under a relation directory (from the
     * `batch=<id>` partition names — a listing, no data read). */
-  def listBatchIds(spark: SparkSession, relDir: String): Seq[String] = {
+  private def listBatchIds(spark: SparkSession, relDir: String): Seq[String] = {
     val hfs = fs(spark, relDir)
     val p = new Path(relDir)
     if (!hfs.exists(p)) Nil
@@ -395,6 +388,70 @@ private[ext] object ArtifactIO {
                batchId: Option[String]): Boolean =
     batchId.exists(id => replayable(id) &&
       readFolded(spark, artifactRoot).contains(id))
+
+  // ---- batch lifecycle (see the header) ------------------------------------
+
+  /** Delete `dir` under the held lease, fenced like every commit point:
+    * an overstayed writer cannot delete the new holder's fresh data. */
+  def delete(spark: SparkSession, dir: String): Unit = {
+    fenceOrAbort(spark, dir)
+    fs(spark, dir).delete(new Path(dir), true)
+    ()
+  }
+
+  /** Build reset: under the lease, delete each of `relations` (paths
+    * under `root`) and then the folded ledger — each with its
+    * `_compact_old`/`_compact_tmp*` siblings first, so no torn-swap
+    * recovery can resurrect a prior life — and run `build`. Relations
+    * before the ledger: a tear in between leaves stale folded ids over
+    * empty relations, which the re-run build clears, never folded data
+    * with a forgotten ledger. */
+  def rebuild[T](spark: SparkSession, root: String, op: String,
+                 relations: Seq[String])(build: => T): T =
+    withWriterLease(spark, root, op) {
+      (relations :+ FoldedDir).foreach { r =>
+        val dir = s"$root/$r"
+        val hfs = fs(spark, dir)
+        (stagingSiblings(hfs, dir) :+ new Path(dir + "_compact_old"))
+          .foreach(p => delete(spark, p.toString))
+        delete(spark, dir)
+      }
+      build
+    }
+
+  /** Keyed append: under the lease, a replay of a folded `batchId` logs
+    * and returns 0 before any other read; otherwise `write` runs with
+    * the validated (or freshly generated) id and returns rows written. */
+  def appendKeyed(spark: SparkSession, root: String, op: String,
+                  batchId: Option[String])(write: String => Long): Long =
+    withWriterLease(spark, root, op) {
+      if (isFolded(spark, root, batchId)) {
+        // the batch's rows already live in a compact batch — re-appending
+        // would duplicate (or, in the text index, double-count) them
+        System.err.println(s"[graft] $op: batch '${batchId.get}' was " +
+          "folded by a compaction — skipping replay")
+        0L
+      } else write(validBatchId(batchId))
+    }
+
+  /** Fold, under the caller's held lease on `root`: record the batch ids
+    * of `relations` in the ledger (ledger FIRST, before any swap) and
+    * return the `compact-*` id the folded output is written under. */
+  def fold(spark: SparkSession, root: String, relations: Seq[String]): String = {
+    require(heldLeases.get.contains(root),
+      s"fold: the writer lease on $root must be held")
+    recordFolded(spark, root,
+      relations.flatMap(r => listBatchIds(spark, s"$root/$r")).distinct)
+    s"compact-${java.util.UUID.randomUUID.toString.take(13)}"
+  }
+
+  /** Drop a batch: under the lease, delete `paths` (under `root`) in the
+    * given order. Absent paths are no-ops. */
+  def dropBatch(spark: SparkSession, root: String, op: String,
+                paths: Seq[String]): Unit =
+    withWriterLease(spark, root, op) {
+      paths.foreach(p => delete(spark, s"$root/$p"))
+    }
 
   // ---- writer lease ---------------------------------------------------------
   // The artifact family is single-writer BY CONTRACT; the lease makes a
@@ -642,17 +699,6 @@ private[ext] object ArtifactIO {
     }
   }
 
-  /** Output file count for an in-place rewrite of `dir`, from its actual
-    * on-disk parquet bytes (same format + codec in and out, so size
-    * carries over — the [[Layout.compactTo]] rule). */
-  /** Output file count for a rewrite of `dir`: ceil(bytes/targetBytes),
-    * optionally floored for scan parallelism. `parallelismFloor` asks for
-    * at least that many files UNLESS the relation is too small to fill
-    * them at ~8 MiB each — the r19 sf10 probe measured a serve-path
-    * relation compacted to 1-2 files at the 256 MiB size target, which
-    * collapsed every downstream scan to 1-2 tasks (a 6 s straggler in a
-    * 17 s serve). Size-only callers (file compaction, whose CONTRACT is
-    * the byte target) keep the default floor of 1. */
   /** Exact row count of a parquet relation from its file FOOTERS — a
     * driver-side metadata read, no Spark job, no data scan. Parquet
     * footers record exact row counts, so for sizing decisions over a
@@ -688,6 +734,14 @@ private[ext] object ArtifactIO {
     * decade. ~250k rows keeps that task at a few hundred ms. */
   private[ext] val RowFloorPerFile = 250000L
 
+  /** Output file count for a rewrite of `dir`: ceil(bytes/targetBytes),
+    * optionally floored for scan parallelism. `parallelismFloor` asks for
+    * at least that many files UNLESS the relation is too small to fill
+    * them at ~8 MiB each — the r19 sf10 probe measured a serve-path
+    * relation compacted to 1-2 files at the 256 MiB size target, which
+    * collapsed every downstream scan to 1-2 tasks (a 6 s straggler in a
+    * 17 s serve). Size-only callers (file compaction, whose CONTRACT is
+    * the byte target) keep the default floor of 1. */
   def targetFileCount(spark: SparkSession, dir: String,
                       targetBytes: Long, parallelismFloor: Int = 1): Int = {
     require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")

@@ -54,14 +54,10 @@ import org.apache.spark.util.sketch.BloomFilter
   * while the verification threshold is a per-query choice over the same
   * candidates — one index serves any threshold at or above its envelope.
   *
-  * Writer concurrency: SINGLE-WRITER, enforced. Every mutating entry
-  * point (build/append/compact/dropBatch) holds the artifact's
-  * `_writer_lock` lease via [[ArtifactIO.withWriterLease]] — a second
-  * concurrent writer fails loudly naming the holder's op/host/age, and a
-  * lock older than the staleness window is presumed crashed and taken
-  * over with a logged warning. Readers (newAgainst, minhashNewAgainst,
-  * nearDuplicateFlag) never take the lease; searches stay lock-free.
-  * Contract spec-locked in ArtifactIOSpec.
+  * Writer concurrency and batch lifecycle: build, append, compact and
+  * dropBatch are [[ArtifactIO]]'s four lifecycle steps (single writer,
+  * under the `_writer_lock` lease; see its header). Readers (newAgainst,
+  * minhashNewAgainst, nearDuplicateFlag) never take the lease.
   *
   * Scale shape: the per-batch build cost is the same shingle+band pass
   * the direct operators pay for that batch; the serve cost reads the
@@ -87,6 +83,9 @@ object DedupIndex {
 
   private val FpBloomDir = "bloom_fp"
   private val BandBloomDir = "bloom_band"
+  /** The batch-partitioned relations, in the order a batch's partitions
+    * are deleted (shingles before bands, see [[writeBatch]]). */
+  private val Relations = Seq("shingles", "fingerprints", "bands")
 
   /** Create (or replace) the index at `path` from `df`. Returns the
     * number of documents indexed. Parameters are persisted in the
@@ -99,14 +98,11 @@ object DedupIndex {
       s"bloomFpp must be in (0, 0.5], got $bloomFpp")
     val spark = df.sparkSession
     import spark.implicits._
-    ArtifactIO.withWriterLease(spark, path, "DedupIndex.build") {
+    ArtifactIO.rebuild(spark, path, "DedupIndex.build",
+        Relations ++ Seq(FpBloomDir, BandBloomDir)) {
       Seq((numHashes, bands, shingleLen, seed, bloomFpp))
         .toDF("num_hashes", "bands", "shingle_len", "seed", "bloom_fpp")
         .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-      // a rebuild must not inherit stale batches or bloom segments from a
-      // prior life
-      Seq("fingerprints", "shingles", "bands", FpBloomDir, BandBloomDir)
-        .foreach(d => deleteDir(spark, s"$path/$d"))
       writeBatch(df, idCol, textCol, path,
         Params(numHashes, bands, shingleLen, seed, bloomFpp), batch = "init")
     }
@@ -132,15 +128,8 @@ object DedupIndex {
   def append(df: DataFrame, idCol: String, textCol: String, path: String,
              batchId: Option[String] = None): Long = {
     val spark = df.sparkSession
-    ArtifactIO.withWriterLease(spark, path, "DedupIndex.append") {
-      if (ArtifactIO.isFolded(spark, path, batchId)) {
-        // a post-compaction replay: the batch's rows already live in the
-        // compact batch — re-appending would duplicate them
-        System.err.println(s"[graft] DedupIndex.append: batch " +
-          s"'${batchId.get}' was folded by a compaction — skipping replay")
-        0L
-      } else writeBatch(df, idCol, textCol, path, readParams(spark, path),
-        batch = ArtifactIO.validBatchId(batchId))
+    ArtifactIO.appendKeyed(spark, path, "DedupIndex.append", batchId) { batch =>
+      writeBatch(df, idCol, textCol, path, readParams(spark, path), batch)
     }
   }
 
@@ -152,12 +141,9 @@ object DedupIndex {
     * double-wrote, and the retention knob for time-keyed batches.
     * Dropping an id that is not present is a no-op. Single-writer. */
   def dropBatch(spark: SparkSession, path: String, batchId: String): Unit =
-    ArtifactIO.withWriterLease(spark, path, "DedupIndex.dropBatch") {
-      Seq("shingles", "fingerprints", "bands")
-        .foreach(r => deleteDir(spark, s"$path/$r/batch=$batchId"))
-      Seq(FpBloomDir, BandBloomDir)
-        .foreach(d => deleteDir(spark, s"$path/$d/seg-$batchId.bin"))
-    }
+    ArtifactIO.dropBatch(spark, path, "DedupIndex.dropBatch",
+      Relations.map(r => s"$r/batch=$batchId") ++
+        Seq(FpBloomDir, BandBloomDir).map(d => s"$d/seg-$batchId.bin"))
 
   /** Compact the index in place. Three effects, one pass per relation:
     *
@@ -188,20 +174,14 @@ object DedupIndex {
               targetBytes: Long = 256L << 20): Long = {
     ArtifactIO.withWriterLease(spark, path, "DedupIndex.compact") {
     val p = readParams(spark, path)
-    val cid = s"compact-${java.util.UUID.randomUUID.toString.take(13)}"
-    // ledger FIRST (see ArtifactIO): a replayed keyed append must no-op
-    // after its partition is folded away, and recording before the swaps
-    // makes a torn compact skip-safe rather than double-write-prone
-    ArtifactIO.recordFolded(spark, path,
-      Seq("shingles", "fingerprints", "bands")
-        .flatMap(r => ArtifactIO.listBatchIds(spark, s"$path/$r")).distinct)
+    val cid = ArtifactIO.fold(spark, path, Relations)
     // the three relation rewrites are independent (dedupe never drops a
     // KEY, so no cross-relation order is load-bearing while the old
     // blooms still cover everything) — they stage and swap as concurrent
     // legs, each under the holder's propagated lease context so its
     // staging path keeps the token suffix and its swap stays fenced
     // (ArtifactIO.leg — the registry is a ThreadLocal)
-    val relLegs = Seq("shingles", "fingerprints", "bands").map { name =>
+    val relLegs = Relations.map { name =>
       ArtifactIO.leg {
         val dir = s"$path/$name"
         // parallelism floor: these are SERVE-path relations — compacting a
@@ -231,7 +211,7 @@ object DedupIndex {
       // bloom build below is the only Spark job left on this leg)
       val nDocs = ArtifactIO.parquetRowCount(spark, s"$path/fingerprints")
       ArtifactIO.rewriteInPlace(spark, s"$path/$FpBloomDir") { tmp =>
-        fs(spark, tmp).mkdirs(new org.apache.hadoop.fs.Path(tmp))
+        ArtifactIO.fs(spark, tmp).mkdirs(new org.apache.hadoop.fs.Path(tmp))
         if (nDocs > 0)
           writeBloomSegment(spark, tmp,
             fps.stat.bloomFilter("fp", nDocs, p.bloomFpp), cid)
@@ -242,7 +222,7 @@ object DedupIndex {
       val banded = GraftIO.readParquet(spark, s"$path/bands")
       val nBands = ArtifactIO.parquetRowCount(spark, s"$path/bands")
       ArtifactIO.rewriteInPlace(spark, s"$path/$BandBloomDir") { tmp =>
-        fs(spark, tmp).mkdirs(new org.apache.hadoop.fs.Path(tmp))
+        ArtifactIO.fs(spark, tmp).mkdirs(new org.apache.hadoop.fs.Path(tmp))
         if (nBands > 0)
           writeBloomSegment(spark, tmp,
             banded.select(fieldHash(Seq(col("band"), col("bsig"))).as("__bk"))
@@ -291,8 +271,6 @@ object DedupIndex {
     * stays readable and consistently partitioned). */
   private def writeBatch(df: DataFrame, idCol: String, textCol: String,
                          path: String, p: Params, batch: String): Long = {
-    require(batch.matches("[A-Za-z0-9._-]+"),
-      s"batch id must match [A-Za-z0-9._-]+, got '$batch'")
     val spark = df.sparkSession
     // the EXACT path's relation (fingerprints) and the NEAR path's
     // relations (shingles/bands) derive independently from `df` and are
@@ -321,8 +299,7 @@ object DedupIndex {
     // covers — silent false negatives. Deleting first keeps every crash
     // window false-positive-only: old rows gone + old blooms stale is
     // just extra coverage. (No-op for a fresh id.)
-    Seq("shingles", "fingerprints", "bands")
-      .foreach(r => deleteDir(spark, s"$path/$r/batch=$batch"))
+    Relations.foreach(r => ArtifactIO.delete(spark, s"$path/$r/batch=$batch"))
     // each leg runs under the holder's propagated lease context and
     // fences at entry AND immediately before every destructive write:
     // the bloom builds are full Spark scans that can run long, so an
@@ -493,25 +470,12 @@ object DedupIndex {
 
   // ---- artifact IO --------------------------------------------------------
 
-  private def fs(spark: SparkSession, dir: String) =
-    new org.apache.hadoop.fs.Path(dir)
-      .getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def deleteDir(spark: SparkSession, dir: String): Unit = {
-    // destructive under the lease: fence like every commit point, so an
-    // overstayed writer's dropBatch/rebuild cannot delete the new
-    // holder's freshly written partitions or bloom segments
-    ArtifactIO.fenceOrAbort(spark, dir)
-    fs(spark, dir).delete(new org.apache.hadoop.fs.Path(dir), true)
-    ()
-  }
-
   /** One segment per batch, named by the batch id so an idempotent
     * retry OVERWRITES its own segment instead of stacking another. */
   private def writeBloomSegment(spark: SparkSession, dir: String,
                                 bloom: BloomFilter, batch: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(dir, s"seg-$batch.bin")
-    val out = fs(spark, dir).create(p, true)
+    val out = ArtifactIO.fs(spark, dir).create(p, true)
     try bloom.writeTo(out) finally out.close()
   }
 
@@ -523,7 +487,7 @@ object DedupIndex {
     * to. */
   private def loadBloomSegments(spark: SparkSession, dir: String,
                                 strict: Boolean = false): Array[BloomFilter] = {
-    val f = fs(spark, dir)
+    val f = ArtifactIO.fs(spark, dir)
     val p = new org.apache.hadoop.fs.Path(dir)
     if (!f.exists(p)) return Array.empty
     val files = f.listStatus(p)

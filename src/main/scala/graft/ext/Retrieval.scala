@@ -162,13 +162,10 @@ object Retrieval {
   // buckets its terms hash into (hive partition pruning) — the corpus
   // text is never re-scanned.
   //
-  // Writer concurrency: SINGLE-WRITER, enforced. Every mutating entry
-  // point (buildTextIndex/appendTextIndex/compactTextIndex/dropTextBatch)
-  // holds the artifact's `_writer_lock` lease via
-  // ArtifactIO.withWriterLease — a second concurrent writer fails loudly
-  // naming the holder, stale locks are taken over after the staleness
-  // window. searchTextIndex never takes the lease; reads stay lock-free.
-  // Contract spec-locked in ArtifactIOSpec.
+  // Writer concurrency and batch lifecycle: buildTextIndex,
+  // appendTextIndex, compactTextIndex and dropTextBatch are ArtifactIO's
+  // four lifecycle steps (single writer, under the `_writer_lock` lease;
+  // see its header). searchTextIndex never takes the lease.
 
   /** Tokenize `docs` once and persist a BM25-servable index at `path`:
     * `path/postings/batch=<id>` = (term, doc_id, dl, tf) hive-partitioned
@@ -188,15 +185,14 @@ object Retrieval {
     require(buckets >= 1, s"buckets must be >= 1, got $buckets")
     requireIntegralId(docs, idCol, "doc id")
     val spark = docs.sparkSession
-    ArtifactIO.withWriterLease(spark, path, "buildTextIndex") {
-      // a rebuild must not inherit batches from a prior life
-      Seq("postings", "stats").foreach { d =>
-        val hfs = ArtifactIO.fs(spark, s"$path/$d")
-        hfs.delete(new org.apache.hadoop.fs.Path(s"$path/$d"), true)
-      }
+    ArtifactIO.rebuild(spark, path, "buildTextIndex", TextRelations) {
       writeTextBatch(docs, idCol, textCol, path, buckets, "init")
     }
   }
+
+  /** The batch-partitioned relations, postings first (the order a
+    * batch is written and dropped in, see [[writeTextBatch]]). */
+  private val TextRelations = Seq("postings", "stats")
 
   /** One batch's postings + stats row into their own `batch=<id>`
     * partitions (postings FIRST: a torn batch then under-counts the
@@ -210,8 +206,6 @@ object Retrieval {
   private def writeTextBatch(docs: DataFrame, idCol: String, textCol: String,
                              path: String, buckets: Int,
                              batch: String): Long = {
-    require(batch.matches("[A-Za-z0-9._-]+"),
-      s"batch id must match [A-Za-z0-9._-]+, got '$batch'")
     val spark = docs.sparkSession
     import spark.implicits._
     // pinned: the stats pass and the postings write would otherwise each
@@ -234,8 +228,7 @@ object Retrieval {
     // the delete, the old generation's postings would stay live while
     // the stats row is overwritten, serving ghost documents the summed
     // stats no longer count
-    ArtifactIO.fs(spark, path).delete(
-      new org.apache.hadoop.fs.Path(s"$path/postings/batch=$batch"), true)
+    ArtifactIO.delete(spark, s"$path/postings/batch=$batch")
     // write postings only when the batch HAS posting rows (sum_dl > 0 ⟺
     // at least one token somewhere): a zero-row partitioned write still
     // creates the directory with no schema-bearing file, which would
@@ -291,21 +284,12 @@ object Retrieval {
                       path: String, batchId: Option[String] = None): Long = {
     requireIntegralId(docs, idCol, "doc id")
     val spark = docs.sparkSession
-    ArtifactIO.withWriterLease(spark, path, "appendTextIndex") {
-      if (ArtifactIO.isFolded(spark, path, batchId)) {
-        // a post-compaction replay: the batch's postings AND stats are in
-        // the compact batch — re-appending would double-count both
-        System.err.println(s"[graft] appendTextIndex: batch " +
-          s"'${batchId.get}' was folded by a compaction — skipping replay")
-        0L
-      } else {
-        val (_, _, buckets) = readTextStats(spark, path)
-        require(buckets > 0,
-          s"appendTextIndex: no stats batches at $path (never built, or all " +
-            "batches dropped) — the bucket modulus is unknowable; rebuild")
-        writeTextBatch(docs, idCol, textCol, path, buckets,
-          ArtifactIO.validBatchId(batchId))
-      }
+    ArtifactIO.appendKeyed(spark, path, "appendTextIndex", batchId) { batch =>
+      val (_, _, buckets) = readTextStats(spark, path)
+      require(buckets > 0,
+        s"appendTextIndex: no stats batches at $path (never built, or all " +
+          "batches dropped) — the bucket modulus is unknowable; rebuild")
+      writeTextBatch(docs, idCol, textCol, path, buckets, batch)
     }
   }
 
@@ -326,12 +310,7 @@ object Retrieval {
                        path: String): Unit =
       ArtifactIO.withWriterLease(spark, path, "compactTextIndex") {
     if (!ArtifactIO.hasParquetData(spark, s"$path/postings")) return
-    val cid = s"compact-${java.util.UUID.randomUUID.toString.take(13)}"
-    // ledger first: a keyed batch replayed after its partition is folded
-    // away must no-op, not double-count (see ArtifactIO)
-    ArtifactIO.recordFolded(spark, path,
-      (ArtifactIO.listBatchIds(spark, s"$path/postings") ++
-        ArtifactIO.listBatchIds(spark, s"$path/stats")).distinct)
+    val cid = ArtifactIO.fold(spark, path, TextRelations)
     val postings = GraftIO.readParquet(spark, s"$path/postings").drop("batch")
     ArtifactIO.rewriteInPlace(spark, s"$path/postings") { tmp =>
       postings.repartition(col("bucket"))
@@ -353,17 +332,11 @@ object Retrieval {
     * a no-op. Single-writer, like append. */
   def dropTextBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                     batchId: String): Unit =
-    ArtifactIO.withWriterLease(spark, path, "dropTextBatch") {
-      val hfs = ArtifactIO.fs(spark, path)
-      // postings first: a tear between the deletes leaves orphaned stats
-      // claiming slightly too many docs (idf marginally off), never
-      // postings that the stats no longer count
-      hfs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/postings/batch=$batchId"), true)
-      hfs.delete(new org.apache.hadoop.fs.Path(
-        s"$path/stats/batch=$batchId"), true)
-      ()
-    }
+    // postings first: a tear between the deletes leaves orphaned stats
+    // claiming slightly too many docs (idf marginally off), never
+    // postings that the stats no longer count
+    ArtifactIO.dropBatch(spark, path, "dropTextBatch",
+      TextRelations.map(r => s"$r/batch=$batchId"))
 
   /** BM25 search against a [[buildTextIndex]] artifact without touching
     * the corpus: query terms hash to their buckets (a driver-side

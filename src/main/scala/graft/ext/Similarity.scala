@@ -26,14 +26,12 @@ import org.apache.spark.sql.types._
   *     scanned relation. Prunes MEMORY (bytes per candidate).
   *   - `ivfpqTopK`: faiss-style residual IVF-PQ — both at once.
   *
-  * Writer concurrency for the persisted IVF / IVF-PQ artifacts:
-  * SINGLE-WRITER, enforced. Every mutating entry point
-  * (build/append/compact/retrain/dropIndexBatch, both families) holds
-  * the artifact's `_writer_lock` lease via
-  * [[ArtifactIO.withWriterLease]] — a second concurrent writer fails
-  * loudly naming the holder, stale locks are taken over after the
-  * staleness window. searchIvfIndex/searchIvfPqIndex never take the
-  * lease; reads stay lock-free. Contract spec-locked in ArtifactIOSpec.
+  * Writer concurrency and batch lifecycle for the persisted IVF /
+  * IVF-PQ artifacts: build, append, compact, retrain and dropIndexBatch
+  * go through [[ArtifactIO]]'s lifecycle steps (single writer, under the
+  * `_writer_lock` lease; see its header). Both families share one
+  * cell-partitioned postings store. searchIvfIndex/searchIvfPqIndex never
+  * take the lease.
   *
   * Uniform contract across all paths: the final per-query top-k is the
   * k-bounded [[graft.functions.TopK.ByScore]] aggregation (never a window
@@ -405,7 +403,85 @@ object Similarity {
   // partitions so a search probing nprobe cells prunes to those
   // directories at the SCAN — the files for unprobed cells are never
   // opened — and a keyed re-append overwrites its own batch partition
-  // instead of double-writing.
+  // instead of double-writing. The IVF-PQ index below shares this
+  // postings store (its rows carry codes instead of vectors) and the
+  // helpers that follow.
+
+  /** `v` rows with their nearest coarse cell. */
+  private def withCell(v: DataFrame, centroids: Array[Array[Double]]): DataFrame =
+    v.withColumn("cell", nearestCells(col("v"), centroids, 1)(0))
+
+  /** Write postings rows (carrying `cell`) to `dir`, hive-partitioned by
+    * cell after one shuffle on it, so each cell lands in O(1) files
+    * rather than one file per (input task × cell). */
+  private def writeCellPostings(rows: DataFrame, dir: String): Unit =
+    rows.repartition(col("cell"))
+      .write.mode("overwrite").partitionBy("cell").parquet(dir)
+
+  /** Persist the quantizer tables under `path`, each driver-sized as one
+    * file: the IVF-PQ residual codebooks (subspace, code, centroid) when
+    * `books` is given, then the coarse centroids (cell, centroid) — last,
+    * so a retrain's swaps end on the table every search probes with.
+    * `swap` stages each table through [[ArtifactIO.rewriteInPlace]]
+    * (retrain) instead of overwriting it in place (build). */
+  private def writeQuantizer(spark: org.apache.spark.sql.SparkSession,
+                             path: String, coarse: Array[Array[Double]],
+                             books: Option[Array[Array[Array[Double]]]],
+                             swap: Boolean): Unit = {
+    import spark.implicits._
+    val tables = books.map(bs => "codebooks" -> bs.zipWithIndex.flatMap {
+        case (book, sp) =>
+          book.zipWithIndex.map { case (cent, code) => (sp, code, cent.toSeq) }
+      }.toSeq.toDF("subspace", "code", "centroid")).toSeq :+
+      ("centroids" -> coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }
+        .toSeq.toDF("cell", "centroid"))
+    tables.foreach { case (name, t) =>
+      def write(dir: String): Unit =
+        t.repartition(1).write.mode("overwrite").parquet(dir)
+      if (swap) ArtifactIO.rewriteInPlace(spark, s"$path/$name")(write)
+      else write(s"$path/$name")
+    }
+  }
+
+  /** The queries' (query_id, qv) probe cells and the postings pruned to
+    * them: each query assigns to its `nprobe` nearest cells, and the
+    * distinct probe set (bounded by nlist; queries are a small broadcast
+    * batch) is collected so the postings scan carries `cell IN (probed…)`
+    * as a LITERAL partition filter — only the probed cells' directories
+    * are read. */
+  private def probeCells(postings: DataFrame, queryV: DataFrame,
+                         coarse: Array[Array[Double]],
+                         nprobe: Int): (DataFrame, DataFrame) = {
+    val probed = queryV.select(col("query_id"),
+      explode(nearestCells(col("qv"), coarse, math.min(nprobe, coarse.length)))
+        .as("cell"))
+    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
+    (probed, postings.where(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*)))
+  }
+
+  /** The keyed append both vector families share
+    * ([[ArtifactIO.appendKeyed]]): after the replay check, `encoder` loads
+    * the artifact's quantizer (rejecting an empty index — nothing was
+    * trained) and gives the (id, v) → postings-row encoding; the batch's
+    * prior generation is deleted first (mode("overwrite") only replaces
+    * it fully under STATIC partitionOverwriteMode — under a session set
+    * to dynamic, old-generation cells absent from the corrected data
+    * would survive as stale rows), and the batch lands in its own
+    * `batch=<id>` partition. Returns rows appended: the count rides the
+    * pin as an observed metric, so the write and the count share one
+    * scan. */
+  private def appendPostings(corpus: DataFrame, idCol: String, vecCol: String,
+                             path: String, batchId: Option[String], op: String)
+                            (encoder: => DataFrame => DataFrame): Long = {
+    val spark = corpus.sparkSession
+    ArtifactIO.appendKeyed(spark, path, op, batchId) { batch =>
+      val encode = encoder
+      ArtifactIO.delete(spark, s"$path/postings/batch=$batch")
+      val (corpusV, n) = Pin.counted(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
+      writeCellPostings(encode(corpusV), s"$path/postings/batch=$batch")
+      n
+    }
+  }
 
   /** Train a coarse quantizer on `corpus` and persist the index at `path`:
     * `path/centroids` = (cell INT, centroid ARRAY<DOUBLE>),
@@ -413,37 +489,28 @@ object Similarity {
     * within each batch (the build's `init` plus one per append — the
     * per-batch partition is what makes keyed re-appends idempotent, see
     * [[appendIvfIndex]]). Returns the number of cells. One corpus scan
-    * beyond the bounded training sample; the write shuffles on `cell` so
-    * each cell's postings land in O(1) files rather than one file per
-    * (input task × cell). Incremental growth: [[appendIvfIndex]] assigns
-    * new rows with the loaded centroids — cells stay valid, only
-    * recall-per-probe drifts as the data distribution moves. */
+    * beyond the bounded training sample. Incremental growth:
+    * [[appendIvfIndex]] assigns new rows with the loaded centroids —
+    * cells stay valid, only recall-per-probe drifts as the data
+    * distribution moves. */
   def buildIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
                     path: String, nlist: Int = 16, seed: Long = 42L,
                     trainCap: Long = 100000L, maxIter: Int = 10): Int = {
     val spark = corpus.sparkSession
-    ArtifactIO.withWriterLease(spark, path, "buildIvfIndex") {
+    ArtifactIO.rebuild(spark, path, "buildIvfIndex", Seq("postings")) {
     val corpusV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val centroids = trainCoarseCentroids(corpusV, nlist, seed, trainCap, maxIter)
       .getOrElse(Array.empty[Array[Double]])
-    import spark.implicits._
     // the nlist-row centroid write targets a different directory than the
     // corpus-sized postings write — independent job chains, overlapped
     // (build is a full overwrite and idempotent, so no crash ordering
-    // between the two is load-bearing; re-run the build on a tear).
-    // The leg carries the holder's lease context (r21 advice): plain
-    // parquet overwrites need no fence today, but every thread staging
-    // under a writer lease must carry the holder's context so a future
-    // fence added to this path cannot silently no-op.
+    // between the two is load-bearing; re-run the build on a tear). The
+    // leg carries the holder's lease context, like every thread staging
+    // under a writer lease.
     val fMeta = ArtifactIO.leg {
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
+      writeQuantizer(spark, path, centroids, None, swap = false)
     }
     val (_, nCells) = graft.core.Par.withLeg(fMeta) {
-      // a rebuild must not inherit appended batches from a prior life
-      ArtifactIO.fs(spark, s"$path/postings")
-        .delete(new org.apache.hadoop.fs.Path(s"$path/postings"), true)
       if (centroids.isEmpty) {
         // empty index: zero-row postings written UNPARTITIONED (a
         // partitionBy write with no rows emits no schema-bearing file and
@@ -454,10 +521,7 @@ object Similarity {
           .write.mode("overwrite").parquet(s"$path/postings")
         0
       } else {
-        corpusV.withColumn("cell", nearestCells(col("v"), centroids, 1)(0))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$path/postings/batch=init")
+        writeCellPostings(withCell(corpusV, centroids), s"$path/postings/batch=init")
         centroids.length
       }
     }
@@ -485,55 +549,38 @@ object Similarity {
     * heals un-keyed duplicates). Returns rows appended; appending to an
     * empty index is rejected (no quantizer was trained). */
   def appendIvfIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                     path: String, batchId: Option[String] = None): Long = {
-    val spark = corpus.sparkSession
-    ArtifactIO.withWriterLease(spark, path, "appendIvfIndex") {
-    val centroids = loadIvfCentroids(spark, path)
-    if (centroids.isEmpty)
-      throw new IllegalStateException(
-        s"appendIvfIndex: no trained centroids at $path (empty index)")
-    if (ArtifactIO.isFolded(spark, path, batchId)) {
-      System.err.println(s"[graft] appendIvfIndex: batch '${batchId.get}' " +
-        "was folded by a compaction — skipping replay")
-      return 0L
+                     path: String, batchId: Option[String] = None): Long =
+    appendPostings(corpus, idCol, vecCol, path, batchId, "appendIvfIndex") {
+      val centroids = loadIvfCentroids(corpus.sparkSession, path)
+      if (centroids.isEmpty)
+        throw new IllegalStateException(
+          s"appendIvfIndex: no trained centroids at $path (empty index)")
+      withCell(_, centroids)
     }
-    val batch = ArtifactIO.validBatchId(batchId)
-    // delete the batch's prior generation first: mode("overwrite") only
-    // replaces it fully under STATIC partitionOverwriteMode — under a
-    // session that set it to dynamic, old-generation cell partitions
-    // absent from the corrected data would survive as stale rows
-    ArtifactIO.fs(spark, path).delete(
-      new org.apache.hadoop.fs.Path(s"$path/postings/batch=$batch"), true)
-    // the returned row count rides the pin as an observed metric — the
-    // write and the (free) count share the one scan, no count job
-    val (corpusV, n) = Pin.counted(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
-    corpusV.withColumn("cell", nearestCells(col("v"), centroids, 1)(0))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/postings/batch=$batch")
-    n
-    } // lease scope
-  }
 
-  /** Compact a [[buildIvfIndex]] artifact's postings in place: repeated
-    * appends accumulate one file set per append under every cell — this
-    * rewrites them in ONE shuffle to O(1) files per cell, dropping
-    * full-row duplicates on the way (the rows a blind retry of a torn
-    * append double-writes; the index carries no aggregate over postings,
-    * so the dedupe is always safe — it only removes duplicate search
-    * hits). Staged and swapped rename-aside (crash loses the compaction,
-    * never the postings). No-op on an empty-built index. Single-writer,
-    * like append. */
+  /** Compact an IVF or IVF-PQ artifact's postings in place (both share
+    * the store): repeated appends accumulate one file set per append
+    * under every cell — this folds them ([[ArtifactIO.fold]]) and
+    * rewrites them in ONE shuffle to O(1) files per cell under the one
+    * compact batch, dropping full-row duplicates on the way (the rows a
+    * blind retry of a torn append double-writes; the index carries no
+    * aggregate over postings, so the dedupe is always safe — it only
+    * removes duplicate search hits). Staged and swapped rename-aside
+    * (crash loses the compaction, never the postings). No-op on an
+    * empty-built index. Single-writer, like append. */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       path: String): Unit =
     ArtifactIO.withWriterLease(spark, path, "compactIvfIndex") {
-      // ledger first: a keyed batch replayed after its partition is folded
-      // away must no-op, not re-append (see ArtifactIO)
-      ArtifactIO.recordFolded(spark, path,
-        ArtifactIO.listBatchIds(spark, s"$path/postings"))
-      ArtifactIO.compactPartitioned(spark, s"$path/postings", "cell",
-        dedupe = true)
-      ()
+      val cid = ArtifactIO.fold(spark, path, Seq("postings"))
+      val dir = s"$path/postings"
+      val postings = GraftIO.readParquet(spark, dir)
+      // the empty-built layout is unpartitioned (zero rows, no `batch`
+      // column): a partitioned rewrite of it would emit no schema-bearing
+      // file and corrupt the directory
+      if (postings.columns.contains("batch"))
+        ArtifactIO.rewriteInPlace(spark, dir)(tmp =>
+          writeCellPostings(postings.drop("batch").dropDuplicates(),
+            s"$tmp/batch=$cid"))
     }
 
   /** Retrain a [[buildIvfIndex]] artifact's coarse quantizer from its OWN
@@ -541,15 +588,15 @@ object Similarity {
     * [[IndexAdmin.ivfDriftCheck]]'s decay signal calls for, without a
     * from-scratch rebuild or re-reading the source corpus. One bounded
     * training sample + one re-cell shuffle; all current batches fold into
-    * a single compact partition (their replayable ids are recorded in the
-    * folded ledger FIRST, so a keyed append replayed afterwards no-ops).
-    * Both directories swap rename-aside. Crash contract: a tear between
-    * the postings swap and the centroids swap leaves searches probing
-    * with the old quantizer over the new cell layout — DEGRADED recall,
-    * never corrupt results (scoring always uses true vectors) — and
-    * re-running retrain restores consistency. Readers concurrent with
-    * the swap window see the same degraded-not-corrupt behavior.
-    * Single-writer, like append/compact. Returns the new cell count. */
+    * a single compact partition ([[ArtifactIO.fold]], so a keyed append
+    * replayed afterwards no-ops). Both directories swap rename-aside.
+    * Crash contract: a tear between the postings swap and the centroids
+    * swap leaves searches probing with the old quantizer over the new
+    * cell layout — DEGRADED recall, never corrupt results (scoring always
+    * uses true vectors) — and re-running retrain restores consistency.
+    * Readers concurrent with the swap window see the same
+    * degraded-not-corrupt behavior. Single-writer, like append/compact.
+    * Returns the new cell count. */
   def retrainIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       nlist: Int = 16, seed: Long = 42L,
                       trainCap: Long = 100000L, maxIter: Int = 10): Int = {
@@ -564,33 +611,19 @@ object Similarity {
         maxIter)
       .getOrElse(throw new IllegalStateException(
         s"retrainIvfIndex: postings at $path hold no finite vectors"))
-    // ledger first: the retrain folds every batch partition away
-    ArtifactIO.recordFolded(spark, path,
-      ArtifactIO.listBatchIds(spark, postingsDir))
-    val cid = s"compact-${java.util.UUID.randomUUID.toString.take(13)}"
-    ArtifactIO.rewriteInPlace(spark, postingsDir) { tmp =>
-      corpusV.withColumn("cell", nearestCells(col("v"), centroids, 1)(0))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$tmp/batch=$cid")
-    }
-    import spark.implicits._
-    ArtifactIO.rewriteInPlace(spark, s"$path/centroids") { tmp =>
-      centroids.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .repartition(1).write.mode("overwrite").parquet(tmp)
-    }
+    val cid = ArtifactIO.fold(spark, path, Seq("postings"))
+    ArtifactIO.rewriteInPlace(spark, postingsDir)(tmp =>
+      writeCellPostings(withCell(corpusV, centroids), s"$tmp/batch=$cid"))
+    writeQuantizer(spark, path, centroids, None, swap = true)
     centroids.length
     } // lease scope
   }
 
   /** Search a persisted index without retraining or re-assigning: queries
     * assign to their `nprobe` nearest cells against the loaded centroids,
-    * and the postings scan carries `cell IN (probed…)` as a LITERAL
-    * partition filter — only the probed cells' directories are read
-    * (queries are a small broadcast batch, so collecting their distinct
-    * probe set is bounded by nlist). Result schema and ranking semantics
-    * are identical to [[ivfTopK]] run with the same centroids. */
+    * and the postings scan prunes to the probed cells ([[probeCells]]).
+    * Result schema and ranking semantics are identical to [[ivfTopK]]
+    * run with the same centroids. */
   def searchIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                      queries: DataFrame, idCol: String, vecCol: String,
                      k: Int, nprobe: Int = 4): DataFrame = {
@@ -602,14 +635,8 @@ object Similarity {
         postings.select(col("id"), col("v")).crossJoin(queryV)
           .withColumn("cosine_sim", lit(null).cast("double"))
           .limit(0), k)
-    val effNprobe = math.min(nprobe, centroids.length)
-    val probed = queryV
-      .select(col("query_id"),
-        explode(nearestCells(col("qv"), centroids, effNprobe)).as("cell"))
-    // literal probe-cell set => partition pruning at the postings scan
-    val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-    val cand = postings
-      .where(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*))
+    val (probed, pruned) = probeCells(postings, queryV, centroids, nprobe)
+    val cand = pruned
       .join(broadcast(probed), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .join(broadcast(queryV), Seq("query_id"))
@@ -930,31 +957,20 @@ object Similarity {
     require(m >= 1, s"m must be >= 1, got $m")
     require(codebookSize >= 1, s"codebookSize must be >= 1, got $codebookSize")
     val spark = corpus.sparkSession
-    import spark.implicits._
-    ArtifactIO.withWriterLease(spark, path, "buildIvfPqIndex") {
+    ArtifactIO.rebuild(spark, path, "buildIvfPqIndex", Seq("postings")) {
     val corpusV = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val modelOpt = trainIvfPq(corpusV, nlist, m, codebookSize, seed,
       trainCap, maxIter)
-    // the two driver-sized quantizer-table writes target different
+    // the driver-sized quantizer-table writes target different
     // directories than the corpus-sized encode+write — independent job
-    // chains, overlapped (build is a full overwrite and idempotent, so no
-    // crash ordering between them is load-bearing; re-run on a tear).
-    // Lease context carried onto the leg like buildIvfIndex's (r21 advice).
+    // chains, overlapped as in buildIvfIndex
     val fMeta = ArtifactIO.leg {
-      val coarse = modelOpt.map(_.coarse).getOrElse(Array.empty[Array[Double]])
-      coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-      val books = modelOpt.map(_.books).getOrElse(Array.empty[Array[Array[Double]]])
-      books.zipWithIndex.flatMap { case (book, sp) =>
-        book.zipWithIndex.map { case (cent, code) => (sp, code, cent.toSeq) }
-      }.toSeq.toDF("subspace", "code", "centroid")
-        .repartition(1).write.mode("overwrite").parquet(s"$path/codebooks")
+      writeQuantizer(spark, path,
+        modelOpt.map(_.coarse).getOrElse(Array.empty[Array[Double]]),
+        Some(modelOpt.map(_.books).getOrElse(Array.empty[Array[Array[Double]]])),
+        swap = false)
     }
     val (_, nCells) = graft.core.Par.withLeg(fMeta) {
-      // a rebuild must not inherit appended batches from a prior life
-      ArtifactIO.fs(spark, s"$path/postings")
-        .delete(new org.apache.hadoop.fs.Path(s"$path/postings"), true)
       modelOpt match {
         case None =>
           // empty index: zero-row postings written UNPARTITIONED (same
@@ -965,10 +981,7 @@ object Similarity {
             .limit(0).write.mode("overwrite").parquet(s"$path/postings")
           0
         case Some(model) =>
-          ivfpqEncode(corpusV, model)
-            .repartition(col("cell"))
-            .write.mode("overwrite").partitionBy("cell")
-            .parquet(s"$path/postings/batch=init")
+          writeCellPostings(ivfpqEncode(corpusV, model), s"$path/postings/batch=init")
           model.coarse.length
       }
     }
@@ -999,47 +1012,16 @@ object Similarity {
     * `batch=<id>` partition under their cell subpartitions. A stable
     * `batchId` makes retries IDEMPOTENT (the batch overwrites itself);
     * the `None` default is at-least-once, healed by
-    * [[compactIvfPqIndex]]. Returns the number of rows appended;
+    * [[compactIvfIndex]]. Returns the number of rows appended;
     * appending to an empty index is rejected (nothing was trained to
     * encode with). */
   def appendIvfPqIndex(corpus: DataFrame, idCol: String, vecCol: String,
-                       path: String, batchId: Option[String] = None): Long = {
-    val spark = corpus.sparkSession
-    ArtifactIO.withWriterLease(spark, path, "appendIvfPqIndex") {
-    val model = loadIvfPqModel(spark, path).getOrElse(
-      throw new IllegalStateException(
-        s"appendIvfPqIndex: no trained quantizers at $path (empty index)"))
-    if (ArtifactIO.isFolded(spark, path, batchId)) {
-      System.err.println(s"[graft] appendIvfPqIndex: batch '${batchId.get}' " +
-        "was folded by a compaction — skipping replay")
-      return 0L
-    }
-    val batch = ArtifactIO.validBatchId(batchId)
-    // delete-first, as in appendIvfIndex: immune to a session-level
-    // partitionOverwriteMode=dynamic leaving stale old-generation cells
-    ArtifactIO.fs(spark, path).delete(
-      new org.apache.hadoop.fs.Path(s"$path/postings/batch=$batch"), true)
-    // count rides the pin as an observed metric, as in appendIvfIndex
-    val (corpusV, n) = Pin.counted(corpus.select(col(idCol).as("id"), col(vecCol).as("v")))
-    ivfpqEncode(corpusV, model)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/postings/batch=$batch")
-    n
-    } // lease scope
-  }
-
-  /** [[compactIvfIndex]] for an IVF-PQ artifact: same one-shuffle
-    * per-cell rewrite + full-row dedupe + rename-aside swap over the
-    * (id, codes, xnorm, cell) postings. */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit =
-    ArtifactIO.withWriterLease(spark, path, "compactIvfPqIndex") {
-      ArtifactIO.recordFolded(spark, path,
-        ArtifactIO.listBatchIds(spark, s"$path/postings"))
-      ArtifactIO.compactPartitioned(spark, s"$path/postings", "cell",
-        dedupe = true)
-      ()
+                       path: String, batchId: Option[String] = None): Long =
+    appendPostings(corpus, idCol, vecCol, path, batchId, "appendIvfPqIndex") {
+      val model = loadIvfPqModel(corpus.sparkSession, path).getOrElse(
+        throw new IllegalStateException(
+          s"appendIvfPqIndex: no trained quantizers at $path (empty index)"))
+      ivfpqEncode(_, model)
     }
 
   /** Retrain a [[buildIvfPqIndex]] artifact from a CALLER-SUPPLIED
@@ -1051,8 +1033,8 @@ object Similarity {
     * quantizers retrain, the supplied corpus re-encodes into a single
     * compact batch, and the three directories swap rename-aside
     * (postings, then codebooks, then centroids — the two quantizer dirs
-    * are tiny, shrinking the mixed window). Replayable batch ids fold
-    * into the ledger FIRST so keyed replays no-op afterwards. Crash
+    * are tiny, shrinking the mixed window). The batches fold first
+    * ([[ArtifactIO.fold]]) so keyed replays no-op afterwards. Crash
     * contract: a tear between swaps leaves ADC scoring against a
     * mismatched quantizer — recall degrades (badly) until retrain
     * re-runs, but nothing is lost or corrupted on disk; re-running
@@ -1074,47 +1056,26 @@ object Similarity {
         trainCap, maxIter)
       .getOrElse(throw new IllegalArgumentException(
         "retrainIvfPqIndex: the supplied corpus holds no finite vectors"))
-    ArtifactIO.recordFolded(spark, path,
-      ArtifactIO.listBatchIds(spark, s"$path/postings"))
-    val cid = s"compact-${java.util.UUID.randomUUID.toString.take(13)}"
-    ArtifactIO.rewriteInPlace(spark, s"$path/postings") { tmp =>
-      ivfpqEncode(corpusV, model)
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$tmp/batch=$cid")
-    }
-    import spark.implicits._
-    ArtifactIO.rewriteInPlace(spark, s"$path/codebooks") { tmp =>
-      model.books.zipWithIndex.flatMap { case (book, sp) =>
-        book.zipWithIndex.map { case (cent, code) => (sp, code, cent.toSeq) }
-      }.toSeq.toDF("subspace", "code", "centroid")
-        .repartition(1).write.mode("overwrite").parquet(tmp)
-    }
-    ArtifactIO.rewriteInPlace(spark, s"$path/centroids") { tmp =>
-      model.coarse.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("cell", "centroid")
-        .repartition(1).write.mode("overwrite").parquet(tmp)
-    }
+    val cid = ArtifactIO.fold(spark, path, Seq("postings"))
+    ArtifactIO.rewriteInPlace(spark, s"$path/postings")(tmp =>
+      writeCellPostings(ivfpqEncode(corpusV, model), s"$tmp/batch=$cid"))
+    writeQuantizer(spark, path, model.coarse, Some(model.books), swap = true)
     model.coarse.length
     } // lease scope
   }
 
   /** Remove one appended batch from an IVF or IVF-PQ artifact (both
-    * share the postings layout): the batch's whole partition disappears
+    * share the postings store): the batch's whole partition disappears
     * in one directory delete. Dropping an absent id is a no-op. */
   def dropIndexBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                      batchId: String): Unit =
-    ArtifactIO.withWriterLease(spark, path, "dropIndexBatch") {
-      ArtifactIO.fs(spark, path).delete(
-        new org.apache.hadoop.fs.Path(s"$path/postings/batch=$batchId"), true)
-      ()
-    }
+    ArtifactIO.dropBatch(spark, path, "dropIndexBatch",
+      Seq(s"postings/batch=$batchId"))
 
   /** Search a persisted IVF-PQ index: queries assign to their `nprobe`
     * nearest cells against the loaded centroids, the postings scan
-    * carries `cell IN (probed…)` as a LITERAL partition filter (only the
-    * probed directories are read — and each row read is m codes + a
-    * norm, not dim floats), and ADC scoring/ranking proceed exactly as
+    * prunes to the probed cells ([[probeCells]] — and each row read is
+    * m codes + a norm, not dim floats), and ADC scoring/ranking proceed exactly as
     * [[ivfpqTopK]] with the same quantizers. `rerank` re-scores the
     * approximate top k·rerankFactor by exact cosine against the given
     * (idCol, vecCol) relation — the only stage that touches full
@@ -1139,14 +1100,8 @@ object Similarity {
             .limit(0), k)
       case Some(model) =>
         val queryState = ivfpqQueryState(queryV, model)
-        val effNprobe = math.min(nprobe, model.coarse.length)
-        val probed = queryState.select(col("query_id"),
-          explode(nearestCells(col("qv"), model.coarse, effNprobe)).as("cell"))
-        // literal probe-cell set => partition pruning at the postings scan
-        val cells = probed.select("cell").distinct().collect().map(_.getInt(0))
-        val approx = ivfpqApprox(
-          postings.where(col("cell").isin(cells.map(Integer.valueOf).toSeq: _*)),
-          queryState, probed)
+        val (probed, pruned) = probeCells(postings, queryV, model.coarse, nprobe)
+        val approx = ivfpqApprox(pruned, queryState, probed)
         rerank match {
           case None => topKPerQuery(approx, k)
           case Some(corpus) =>

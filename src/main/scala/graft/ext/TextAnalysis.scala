@@ -920,11 +920,4 @@ object TextAnalysis {
     val g = if (groupCols.isEmpty) df.groupBy() else df.groupBy(groupCols.map(col): _*)
     g.agg(aggs.head, aggs.tail: _*)
   }
-
-  /** Convenience: attach all analysis columns to a corpus. */
-  def analyze(df: DataFrame, textCol: String): DataFrame =
-    qualitySignals(df, textCol)
-      .withColumn("lang_pred", languageId(col(textCol)))
-      .withColumn("fingerprint", fingerprint(col(textCol)))
-      .withColumn("approx_bpe_tokens", approxBpeTokenCount(col(textCol)))
 }

@@ -198,7 +198,4 @@ private[sources] object AvroInternalConverters {
       case other =>
         throw new UnsupportedOperationException(s"avro internal write of $other")
     }
-
-  /** Convert a whole [[ArrayData]] under an element type — used by tests. */
-  private[sources] def readBack(dt: DataType, v: Any): Any = reader(dt)(v)
 }

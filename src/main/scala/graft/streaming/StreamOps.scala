@@ -346,11 +346,12 @@ object StreamOps {
   // a build-once artifact through foreachBatch, with the stream's batchId
   // as the artifact's idempotence key. Spark re-runs a failed trigger
   // under the SAME batchId after recovery (replayable sources, e.g. the
-  // file source), and the keyed append overwrites its own batch=<id>
-  // partitions instead of double-writing — checkpoint replay + idempotent
-  // append = end-to-end exactly-once, the standard foreachBatch pattern.
-  // Compacting the artifact mid-stream is ALSO safe: the compactor
-  // records every folded batch id in the artifact's ledger, so a trigger
+  // file source), and the keyed append (graft.ext.ArtifactIO's batch
+  // lifecycle, see its header) overwrites its own batch=<id> partitions
+  // instead of double-writing — checkpoint replay + idempotent append =
+  // end-to-end exactly-once, the standard foreachBatch pattern.
+  // Compacting the artifact mid-stream is ALSO safe: the compaction folds
+  // every batch id into the artifact's ledger first, so a trigger
   // replayed after its partition was folded away no-ops instead of
   // re-appending data the compact batch already holds.
   //
@@ -400,31 +401,6 @@ object StreamOps {
         batchId = Some(s"stream-$batchId"))
       maybeCompact(batchId, compactEvery) {
         graft.ext.Retrieval.compactTextIndex(batch.sparkSession, path)
-      }
-    }
-
-  /** [[dedupIndexSink]] for an IVF vector index
-    * ([[graft.ext.Similarity.buildIvfIndex]] artifact, which must be
-    * non-empty — appends need the trained quantizer). */
-  def ivfIndexSink(path: String, idCol: String, vecCol: String,
-                   compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      graft.ext.Similarity.appendIvfIndex(batch, idCol, vecCol, path,
-        batchId = Some(s"stream-$batchId"))
-      maybeCompact(batchId, compactEvery) {
-        graft.ext.Similarity.compactIvfIndex(batch.sparkSession, path)
-      }
-    }
-
-  /** [[ivfIndexSink]] for the PQ-compressed artifact
-    * ([[graft.ext.Similarity.buildIvfPqIndex]]). */
-  def ivfPqIndexSink(path: String, idCol: String, vecCol: String,
-                     compactEvery: Int = 0): (DataFrame, Long) => Unit =
-    (batch, batchId) => {
-      graft.ext.Similarity.appendIvfPqIndex(batch, idCol, vecCol, path,
-        batchId = Some(s"stream-$batchId"))
-      maybeCompact(batchId, compactEvery) {
-        graft.ext.Similarity.compactIvfPqIndex(batch.sparkSession, path)
       }
     }
 }

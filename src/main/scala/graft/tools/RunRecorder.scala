@@ -9,8 +9,8 @@ import scala.collection.mutable.ArrayBuffer
 /** The one SparkListener of the measurement harnesses (ScaleR19,
   * ProfGates). Per measurement window it keeps every job's interval,
   * call site and stage ids, and per stage its name, call-site details,
-  * submit/complete times and each successful task's (duration, launch
-  * time) in millis. Harnesses derive their own readings from it (task
+  * submit/complete times, each successful task's (duration, launch
+  * time) in millis and the input records its tasks read. Harnesses derive their own readings from it (task
   * skew, the driver-only gap, per-job and per-stage spans) after
   * [[drain]]; [[reset]] opens the next window.
   *
@@ -64,7 +64,8 @@ final class RunRecorder extends SparkListener {
       .foreach(_.doneMs = s.stageInfo.completionTime.getOrElse(-1L))
   override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
     if (t.taskInfo != null && t.taskInfo.successful)
-      stages.get(t.stageId).foreach(_.add(t.taskInfo.duration, t.taskInfo.launchTime))
+      stages.get(t.stageId).foreach(_.add(t.taskInfo.duration, t.taskInfo.launchTime,
+        Option(t.taskMetrics).map(_.inputMetrics.recordsRead).getOrElse(0L)))
 
   def reset(): Unit = { jobs.clear(); stages.clear() }
 
@@ -111,11 +112,15 @@ object RunRecorder {
     @volatile var submitMs: Long = -1L
     @volatile var doneMs: Long = -1L
     private val tasks = ArrayBuffer.empty[(Long, Long)]
-    private[RunRecorder] def add(durationMs: Long, launchMs: Long): Unit =
-      tasks.synchronized { tasks += ((durationMs, launchMs)) }
+    private var records = 0L
+    private[RunRecorder] def add(durationMs: Long, launchMs: Long,
+                                 recordsRead: Long): Unit =
+      tasks.synchronized { tasks += ((durationMs, launchMs)); records += recordsRead }
     /** Successful tasks as (duration, launch time), snapshotted under the
       * lock the bus thread appends under. */
     def taskTimes: Array[(Long, Long)] = tasks.synchronized(tasks.toArray)
+    /** Records the successful tasks read from their input (scans). */
+    def inputRecords: Long = tasks.synchronized(records)
     def spanMs: Long = if (submitMs > 0 && doneMs > 0) doneMs - submitMs else -1L
   }
 }

@@ -2,13 +2,15 @@ package graft.ext
 
 import graft.SparkSpec
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The artifact family's crash/replace contracts: torn-swap recovery
   * never destroys the only surviving copy (including the folded-batch
   * ledger), and a keyed re-append fully replaces its batch's prior
   * generation — empty replacement data, and sessions running with
-  * partitionOverwriteMode=dynamic, included. */
+  * partitionOverwriteMode=dynamic, included — plus the batch lifecycle
+  * the four index families share (rebuild, keyed append, fold). */
 class ArtifactIOSpec extends SparkSpec {
   import spark.implicits._
 
@@ -517,5 +519,109 @@ class ArtifactIOSpec extends SparkSpec {
       .select("id").as[Long].collect().toSet
     ids should contain(100L)
     ids should not contain 101L
+  }
+
+  behavior of "the batch lifecycle"
+
+  /** One index family driven through the lifecycle over (doc_id, text,
+    * v) rows: build, keyed append (rows written), compact. */
+  private case class Family(name: String,
+                            build: (DataFrame, String) => Unit,
+                            append: (DataFrame, String, String) => Long,
+                            compact: String => Unit)
+
+  private lazy val families = Seq(
+    Family("dedup",
+      (df, p) => { DedupIndex.build(df, "doc_id", "text", p, numHashes = 8, bands = 4); () },
+      (df, p, id) => DedupIndex.append(df, "doc_id", "text", p, Some(id)),
+      p => { DedupIndex.compact(spark, p); () }),
+    Family("text",
+      (df, p) => { Retrieval.buildTextIndex(df, "doc_id", "text", p, buckets = 4); () },
+      (df, p, id) => Retrieval.appendTextIndex(df, "doc_id", "text", p, Some(id)),
+      p => Retrieval.compactTextIndex(spark, p)),
+    Family("ivf",
+      (df, p) => { Similarity.buildIvfIndex(df, "doc_id", "v", p, nlist = 2); () },
+      (df, p, id) => Similarity.appendIvfIndex(df, "doc_id", "v", p, Some(id)),
+      p => Similarity.compactIvfIndex(spark, p)),
+    Family("ivfpq",
+      (df, p) => {
+        Similarity.buildIvfPqIndex(df, "doc_id", "v", p, nlist = 2, m = 1,
+          codebookSize = 2); ()
+      },
+      (df, p, id) => Similarity.appendIvfPqIndex(df, "doc_id", "v", p, Some(id)),
+      p => Similarity.compactIvfIndex(spark, p)))
+
+  /** Rows `ids` around one of two far-apart vector clusters. */
+  private def lifecycleRows(ids: Seq[Int]): DataFrame =
+    ids.map { j =>
+      val c = if (j % 2 == 0) 0.0 else 10.0
+      (j.toLong, s"document $j talks about topic ${j % 3} at length",
+        Array(c + j * 0.01, c - j * 0.01, c))
+    }.toDF("doc_id", "text", "v")
+
+  private lazy val lcBase = lifecycleRows(0 until 8)
+  private lazy val lcDay1 = lifecycleRows(Seq(100, 101))
+
+  it should "start a rebuild with no folded ids in every family" in {
+    val wrong = families.zipWithIndex.flatMap { case (f, i) =>
+      val idx = s"${tmpDir("lifecycle")}/${f.name}"
+      f.build(lcBase, idx)
+      f.append(lcDay1, idx, "day-1") shouldBe 2L
+      f.compact(idx)
+      // every other family: the ledger's last swap tore, leaving only
+      // its aside copy, which a torn-swap recovery would restore
+      val torn = i % 2 == 1
+      if (torn) {
+        val ledger = s"$idx/folded_batches"
+        hfs(idx).rename(new Path(ledger), new Path(ledger + "_compact_old")) shouldBe true
+      }
+      f.build(lcBase, idx)
+      // a rebuild that inherits the ledger skips this append as a replay
+      // of the old life's folded day-1, and its rows never reach the index
+      val n = f.append(lcDay1, idx, "day-1")
+      val folded = ArtifactIO.readFolded(spark, idx)
+      if (n == 2L && folded.isEmpty) None
+      else Some(s"${f.name} (torn=$torn): appended $n, folded $folded")
+    }
+    wrong shouldBe empty
+  }
+
+  it should "answer a folded replay with the same Spark jobs in every family" in {
+    val jobs = families.map { f =>
+      val idx = s"${tmpDir("lifecycle")}/${f.name}"
+      f.build(lcBase, idx)
+      f.append(lcDay1, idx, "day-1") shouldBe 2L
+      f.compact(idx)
+      val (n, j) = jobsOf(f.append(lcDay1, idx, "day-1"))
+      n shouldBe 0L
+      f.name -> j
+    }
+    // the replay check runs before any family reads its own state
+    // (quantizers, parameters, stats): the ledger read alone
+    withClue(jobs.mkString(", ")) { jobs.map(_._2).toSet should have size 1 }
+  }
+
+  behavior of "batch-lifecycle decisions"
+
+  it should "all stay inside ArtifactIO" in {
+    val root = new java.io.File("src/main/scala")
+    root.isDirectory shouldBe true
+    def scalaFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    val call = """\b(isFolded|recordFolded|listBatchIds|validBatchId)\s*\(""".r
+    val hits = scalaFiles(root)
+      .filterNot(_.getPath.endsWith("graft/ext/ArtifactIO.scala"))
+      .flatMap { f =>
+        val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        val lines = text.split("\n", -1)
+        call.findAllMatchIn(text).map { m =>
+          val line = text.substring(0, m.start).count(_ == '\n')
+          (f, line + 1, lines(line).trim)
+        }.filterNot { case (_, _, l) =>
+          l.startsWith("*") || l.startsWith("/*") || l.startsWith("//") }
+      }
+    withClue(hits.map { case (f, n, l) => s"${f.getPath}:$n: $l" }.mkString("\n")) {
+      hits shouldBe empty
+    }
   }
 }

@@ -124,7 +124,7 @@ class IvfPqIndexSpec extends SparkSpec {
     Similarity.appendIvfPqIndex(fresh, "vec_id", "embedding", path) // retry
     spark.read.parquet(s"$path/postings").count() shouldBe
       old.count() + 2 * fresh.count()
-    Similarity.compactIvfPqIndex(spark, path)
+    Similarity.compactIvfIndex(spark, path)
     spark.read.parquet(s"$path/postings").count() shouldBe emb.count()
     // all-cell deep-rerank search equals brute force again
     val q = emb.filter(col("vec_id") < 3)
