@@ -2211,8 +2211,8 @@ object SparkEntry {
       // CONSTRUCTION is overlapped too (the established concurrent-
       // submission pattern): each fuzzy operator call performs eager
       // fixture work at call time — the corpus-side shingle+band
-      // localCheckpoints, the benchmark bloom build, and the
-      // candidate-volume pricing aggregate inside minhashNewAgainst —
+      // localCheckpoints, the benchmark bloom build, and the bucket-join
+      // probe pin that prices candidate volume inside minhashNewAgainst —
       // which ran SERIALLY here, ~2/3 of the gate's wall in the stage
       // profile (the final action's subtree overlap never saw them).
       // The four calls are independent job chains over the same lazy

@@ -1,9 +1,9 @@
 package graft.core
 
 import java.util.concurrent.ConcurrentLinkedQueue
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{coalesce, count, lit}
 
 /** The one way the engine pins a relation, and the lifetime of its pins.
   *
@@ -61,9 +61,14 @@ object Pin {
     * so pin plus count costs one Spark job, not two. The pinned relation
     * carries `df`'s columns and no CollectMetrics node into downstream
     * plans. */
-  def counted(df: DataFrame): (DataFrame, Long) = {
+  def counted(df: DataFrame): (DataFrame, Long) = measured(df, count(lit(1)))
+
+  /** [[eager]] that also returns `metric`, one aggregate over the pinned
+    * rows read as a long (0 over no rows). Like [[counted]]'s count, it
+    * rides the pin's own materialization job as an observed metric. */
+  def measured(df: DataFrame, metric: Column): (DataFrame, Long) = {
     val obs = Observation()
-    val pinned = eager(df.observe(obs, count(lit(1)).as("n")))
-    (pinned, obs.get("n").asInstanceOf[Long])
+    val pinned = eager(df.observe(obs, coalesce(metric.cast("long"), lit(0L)).as("m")))
+    (pinned, obs.get("m").asInstanceOf[Long])
   }
 }

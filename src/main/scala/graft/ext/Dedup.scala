@@ -292,7 +292,8 @@ object Dedup {
   }
 
   /** The MinHash-LSH family's shared front half: (hashed-shingle table,
-    * banded-signature relation), both pinned.
+    * banded-signature relation), both pinned, plus the banded relation's
+    * row count.
     *
     * The whole pipeline runs on hashed shingles (sorted distinct longs) —
     * no string arrays anywhere: shingling is one custom-expression pass,
@@ -301,59 +302,174 @@ object Dedup {
     * path AND the verification sides, which would otherwise re-scan and
     * re-shingle the corpus per consumer.
     *
-    * Band signature = farm fingerprint of the band's slice, so the bucket
-    * key is a single long (cheap shuffle key). Band indices are a
-    * driver-side Int range, so each slice start is a literal — cheaper
-    * than a per-row sequence+transform and keeps slice() overloads happy.
-    * The banded relation carries ONLY (id, band, bsig): the shingle
-    * arrays are re-joined by id after pair dedup, so the ×bands explode
-    * shuffle moves 3 scalars per row, never the document shingles; it is
-    * pinned because every consumer reads it through several plan branches
-    * (bucket counts + pair sides), each of which would re-shingle and
-    * re-minhash the corpus otherwise — ~24 bytes/row × bands, negligible
-    * next to the corpus it replaces. */
-  private[ext] def shingleBanded(df: DataFrame, idCol: String, textCol: String,
-      numHashes: Int, bands: Int, shingleLen: Int,
-      seed: Int): (DataFrame, DataFrame) = {
-    val (sh, banded, _) = shingleBandedCounted(df, idCol, textCol,
-      numHashes, bands, shingleLen, seed)
-    (sh, banded)
-  }
-
-  /** [[shingleBanded]] plus the banded relation's row count, which RIDES
-    * the eager checkpoint as an observed metric instead of paying its own
-    * scheduler round trip afterwards (guide §1.2-1: every consumer of
-    * this pair — bloom sizing, broadcast-verify sizing — needed that
-    * count and each re-counted the pinned relation as a separate job;
-    * measured 3 jobs → 1 for the pin+count pattern). Values are
-    * identical by construction: the metric is `count(*)` of exactly the
-    * rows the checkpoint materializes. */
+    * The banded relation carries ONLY (id, band, bsig) ([[bandSignatures]]):
+    * the shingle arrays are re-joined by id after pair dedup, so the
+    * ×bands explode shuffle moves 3 scalars per row, never the document
+    * shingles; it is pinned because every consumer reads it through
+    * several plan branches (bucket counts + pair sides), each of which
+    * would re-shingle and re-minhash the corpus otherwise — ~24 bytes/row
+    * × bands, negligible next to the corpus it replaces.
+    *
+    * `pinBands = false` leaves it lazy for a side whose one consumer is
+    * itself pinned (the incoming side of [[minhashAgainst]]).
+    *
+    * The banded row count (docs × bands: every document yields one row
+    * per band) RIDES the shingle pin as an observed metric instead of
+    * paying its own scheduler round trip afterwards (guide §1.2-1: every
+    * consumer — bloom sizing, broadcast-verify sizing — needs it; measured
+    * 3 jobs → 1 for the pin+count pattern). */
   private[ext] def shingleBandedCounted(df: DataFrame, idCol: String,
       textCol: String, numHashes: Int, bands: Int, shingleLen: Int,
-      seed: Int): (DataFrame, DataFrame, Long) = {
+      seed: Int, pinBands: Boolean = true): (DataFrame, DataFrame, Long) = {
+    val (sh, docs) = Pin.counted(shingleTable(df, idCol, textCol, shingleLen))
+    val banded = bandSignatures(sh, numHashes, bands, seed)
+    (sh, if (pinBands) Pin.eager(banded) else banded, docs * bands)
+  }
+
+  /** (id, sh): each document's sorted distinct shingle hashes; documents
+    * with none are dropped. */
+  private def shingleTable(df: DataFrame, idCol: String, textCol: String,
+                           shingleLen: Int): DataFrame =
+    df.select(col(idCol).as("id"), shingleHashes(col(textCol), shingleLen).as("sh"))
+      .filter(size(col("sh")) > 0)
+
+  /** (id, band, bsig) rows of a hashed-shingle table: the one band
+    * construction. Band signature = farm fingerprint of the band's slice
+    * of the minhash signature, so the bucket key is a single long (cheap
+    * shuffle key). Band indices are a driver-side Int range, so each
+    * slice start is a literal — cheaper than a per-row sequence+transform
+    * and keeps slice() overloads happy. */
+  private def bandSignatures(sh: DataFrame, numHashes: Int, bands: Int,
+                             seed: Int): DataFrame = {
     val rPerB = numHashes / bands
-    val sh = Pin.eager(df.select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0))
-    val sig = sh.withColumn("sig", minhash(col("sh"), numHashes, seed))
     val bandStructs = (0 until bands).map { b =>
       struct(lit(b).as("band"),
         farmHash64(slice(col("sig"), b * rPerB + 1, rPerB)).as("bsig"))
     }
-    val (banded, n) = Pin.counted(
-      sig.select(col("id"), explode(array(bandStructs: _*)).as("bb"))
-        .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig")))
-    (sh, banded, n)
+    sh.withColumn("sig", minhash(col("sh"), numHashes, seed))
+      .select(col("id"), explode(array(bandStructs: _*)).as("bb"))
+      .select(col("id"), col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+  }
+
+  /** The bucket key of the MinHash banded relations. */
+  private val BandKeys = Seq("band", "bsig")
+
+  /** The banding facts every MinHash price names. */
+  private def minhashParams(numHashes: Int, bands: Int, maxBucketSize: Int) =
+    s"numHashes=$numHashes, bands=$bands => r=${numHashes / bands}, " +
+      s"maxBucketSize=$maxBucketSize"
+
+  /** Who pairs with whom in [[bucketCandidates]]; `left` and `right` name
+    * the output id columns. */
+  private[ext] sealed abstract class PairShape(val left: String, val right: String)
+
+  /** Self-join: buckets of 2 to `maxBucketSize` members, one row per
+    * unordered pair (id_a < id_b). */
+  private[ext] case object SelfPairs extends PairShape("id_a", "id_b")
+
+  /** `probe`'s (keys, id) rows against the banded side: every bucket up to
+    * `maxBucketSize` is a match target, singletons included. */
+  private[ext] final case class CrossPairs(probe: DataFrame)
+    extends PairShape("id_new", "id_old")
+
+  /** What a priced operator says when it trips: its name, the cap, the
+    * parameter facts behind the estimate and the tuning hint. */
+  private[ext] final case class CandidatePrice(op: String, cap: Option[Long],
+                                               params: String, hint: String)
+
+  /** The one candidate-volume guard: logs the estimate, and throws past
+    * the cap before any candidate pair exists. */
+  private[ext] def priceCandidates(p: CandidatePrice, estimate: Long): Unit = {
+    p.cap.foreach { cap =>
+      if (estimate > cap) throw new IllegalStateException(
+        s"${p.op}: estimated candidate volume $estimate exceeds " +
+          s"maxCandidates=$cap (${p.params}). ${p.hint}")
+    }
+    System.err.println(s"[graft] ${p.op}: estimated candidate volume " +
+      s"$estimate (${p.params})" +
+      (if (estimate > WarnCandidateVolume)
+        s" — past $WarnCandidateVolume, verification pays this volume. ${p.hint}"
+      else ""))
+  }
+
+  /** The one banded candidate step: deduplicated id pairs that share a
+    * bucket of `banded` (its `keys` and `id`), buckets over
+    * `maxBucketSize` dropped, priced before the pair join runs.
+    *
+    * The probe side of the bucket join (the self side, or the cross
+    * side's probe rows) joined with the bucket sizes is pinned, and the
+    * price rides that pin as an observed metric: Σ over its rows of the
+    * partners each row meets — count−1 per self-join row (halved: one
+    * row per unordered pair), count per cross row — which is EXACTLY
+    * the pair join's pre-dedup output (Σ c·(c−1)/2, Σ n_in·n_ex). The cap
+    * thus fires before the quadratic expansion and the dedup shuffle,
+    * and the pair join reads the pin. */
+  private[ext] def bucketCandidates(banded: DataFrame, keys: Seq[String],
+      maxBucketSize: Int, shape: PairShape, price: CandidatePrice): DataFrame = {
+    val k = keys.map(col)
+    val sizes = banded.groupBy(k: _*).count()
+    val (probeSide, buckets, partners) = shape match {
+      case SelfPairs => (banded,
+        sizes.filter(col("count") > 1 && col("count") <= maxBucketSize),
+        col("count") - 1)
+      case CrossPairs(p) => (p, sizes.filter(col("count") <= maxBucketSize),
+        col("count"))
+    }
+    val (probe, mass) = Pin.measured(
+      probeSide.select(k :+ col("id").as(shape.left): _*).join(buckets, keys),
+      sum(partners))
+    priceCandidates(price, if (shape == SelfPairs) mass / 2 else mass)
+    val joined = probe.join(banded.select(k :+ col("id").as(shape.right): _*), keys)
+    (if (shape == SelfPairs) joined.filter(col(shape.left) < col(shape.right))
+     else joined)
+      .select(shape.left, shape.right)
+      .dropDuplicates(shape.left, shape.right)
+  }
+
+  /** The one Jaccard verify step of the MinHash searches. `pairs` holds
+    * two id columns (left, right); each side's (id, sh) table attaches by
+    * id — broadcast or shuffle-joined, decided by [[autoBroadcastVerify]]
+    * on `docs` (~2.5 KB/doc of hashed shingles) unless `broadcastVerify`
+    * forces it. Pairs whose set sizes alone rule out `threshold` never
+    * pay the sorted merge walk; the rest keep (left, right, jaccard) at
+    * or above it. */
+  private[ext] def verifyJaccard(op: String, pairs: DataFrame,
+      shLeft: DataFrame, shRight: DataFrame, threshold: Double,
+      broadcastVerify: Option[Boolean], docs: Long,
+      broadcastVerifyMaxRows: Long): DataFrame = {
+    val Array(l, r) = pairs.columns
+    val doBroadcast = broadcastVerify.getOrElse(autoBroadcastVerify(op, docs,
+      broadcastVerifyMaxRows, estBytesPerRow = 2560L))
+    def side(sh: DataFrame, n: String) = {
+      val s = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
+      if (doBroadcast) broadcast(s) else s
+    }
+    val (a, b) = (size(col(s"shh_$l")), size(col(s"shh_$r")))
+    pairs
+      .join(side(shLeft, l), l)
+      .join(side(shRight, r), r)
+      // J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|)
+      .filter(least(a, b) >= lit(threshold) * greatest(a, b))
+      .withColumn("jaccard", jaccardSorted(col(s"shh_$l"), col(s"shh_$r")))
+      .filter(col("jaccard") >= threshold)
+      .select(col(l), col(r), col("jaccard"))
   }
 
   /** MinHash-LSH near-duplicate pairs over a text column.
     *
     * shingle(n chars) → minhash(numHashes) → split into `bands` bands →
     * explode (doc, bandIdx, bandSig) → group by band signature → emit
-    * candidate pairs within buckets → verify exact shingle-Jaccard ≥
-    * `threshold`. Returns (id_a, id_b, jaccard) with id_a < id_b.
-    */
-  /** @param broadcastVerify broadcast the per-doc hashed-shingle table into
+    * candidate pairs within buckets ([[bucketCandidates]], priced before
+    * they exist) → verify exact shingle-Jaccard ≥ `threshold`
+    * ([[verifyJaccard]]). Returns (id_a, id_b, jaccard) with id_a < id_b.
+    *
+    * Few rows per band (e.g. numHashes=64, bands=32 → r=2) is high-recall
+    * banding, but on corpora with shared vocabulary a 2-hash signature
+    * collides broadly and candidates go quadratic in bucket sizes —
+    * measured 15.5M candidates from a 10k-doc corpus at r=2 where r=4
+    * yields ~100k. That is what the price and `maxCandidates` catch.
+    *
+    * @param broadcastVerify broadcast the per-doc hashed-shingle table into
     *        the verification joins: candidate pairs then never shuffle with
     *        arrays attached — the pair relation stays 2 longs wide. The
     *        table is ~2.5 KB/doc, fine to broadcast up to ~1e6 docs but an
@@ -372,65 +488,14 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     val (sh, banded, nBanded) = shingleBandedCounted(df, idCol, textCol,
       numHashes, bands, shingleLen, seed)
-
-    // candidate pairs within a bucket; cap pathological buckets
-    val bucketSizes = banded.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize && col("count") > 1)
-
-    // self-pricing (the jaccardJoinExact discipline, because the same
-    // quadratic lives here): Σ c·(c−1)/2 over surviving buckets equals
-    // the bucket join's pre-dedup candidate output EXACTLY. Few rows per
-    // band (e.g. numHashes=64, bands=32 → r=2) is high-recall banding,
-    // but on corpora with shared vocabulary a 2-hash signature collides
-    // broadly and candidates go quadratic in bucket sizes — measured
-    // 15.5M candidates from a 10k-doc corpus at r=2 where r=4 yields
-    // ~100k. One tiny aggregation over the already-pinned banded
-    // relation prices the run before it happens.
-    val estimate = bucketCandidateVolume(bucketSizes)
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"minhashNearDups: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use more rows per band (fewer bands for " +
-          s"the same numHashes — r=${numHashes / bands} here), a smaller " +
-          "maxBucketSize, or simhashNearDups.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] minhashNearDups: ~$estimate candidate " +
-        s"pairs from banding (numHashes=$numHashes, bands=$bands => r=" +
-        s"${numHashes / bands}, maxBucketSize=$maxBucketSize) — " +
-        "verification pays this volume; consider more rows per band")
-    val a = banded.select(col("band"), col("bsig"), col("id").as("id_a"))
-    val b = banded.select(col("band"), col("bsig"), col("id").as("id_b"))
-    val pairs = a.join(bucketSizes, Seq("band", "bsig"))
-      .join(b, Seq("band", "bsig"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-
-    // verify with exact Jaccard over the sorted hashed shingle sets: a
-    // one-pass merge (JaccardSorted) instead of generic string-array
-    // intersect/union; the compact set table is re-joined per side
-    val doBroadcast = broadcastVerify.getOrElse {
-      // docs = banded rows / bands; the count rode the pin as an
-      // observed metric — no extra job, no corpus pass
-      // ~2.5 KB/doc hashed-shingle payload (documented above)
-      autoBroadcastVerify("minhashNearDups", nBanded / bands,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L)
-    }
-    def side(n: String) = {
-      val s = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
-      if (doBroadcast) broadcast(s) else s
-    }
-    pairs
-      .join(side("id_a"), "id_a")
-      .join(side("id_b"), "id_b")
-      // J(A,B) ≤ min(|A|,|B|)/max(|A|,|B|): candidates whose set sizes
-      // alone rule out the threshold never pay the merge walk
-      .filter(least(size(col("shh_id_a")), size(col("shh_id_b"))) >=
-        lit(threshold) * greatest(size(col("shh_id_a")), size(col("shh_id_b"))))
-      .withColumn("jaccard", jaccardSorted(col("shh_id_a"), col("shh_id_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    val pairs = bucketCandidates(banded, BandKeys, maxBucketSize, SelfPairs,
+      CandidatePrice("minhashNearDups", maxCandidates,
+        minhashParams(numHashes, bands, maxBucketSize),
+        "Use more rows per band (fewer bands for the same numHashes), " +
+          "a smaller maxBucketSize, or simhashNearDups."))
+    // docs = banded rows / bands; the count rode the pin
+    verifyJaccard("minhashNearDups", pairs, sh, sh, threshold,
+      broadcastVerify, nBanded / bands, broadcastVerifyMaxRows)
   }
 
   /** Incremental NEAR-duplicate detection: (id_new, id_old, jaccard) pairs
@@ -440,17 +505,19 @@ object Dedup {
     * too strict. Anti-join `incoming` on `id_new` to keep the novel rows.
     *
     * Scale shape: both sides reduce to the shared hashed-shingle +
-    * banded-signature relations ([[shingleBanded]]); a Bloom filter over
-    * the EXISTING side's band signatures (8-byte keys, `bloomFpp`, no
+    * banded-signature relations ([[shingleBandedCounted]]); a Bloom filter
+    * over the EXISTING side's band signatures (8-byte keys, `bloomFpp`, no
     * false negatives) broadcasts into the incoming side's scan, so an
     * incoming document none of whose bands hits the filter — the typical
-    * novel document — never shuffles at all. Surviving bands equi-join
-    * existing buckets (capped at `maxBucketSize` like
-    * [[minhashNearDups]]; singleton buckets are legitimate match targets
-    * here), pairs dedup on 2 longs, and verification is the identical
-    * exact sorted-shingle merge — so the exactness contract matches
-    * [[minhashNearDups]] restricted to cross-side pairs. The existing
-    * corpus is never self-joined.
+    * novel document — never shuffles at all. The rest is
+    * [[minhashAgainst]], the body [[DedupIndex.minhashNewAgainst]] shares:
+    * surviving bands equi-join existing buckets (capped at `maxBucketSize`
+    * like [[minhashNearDups]]; singleton buckets are legitimate match
+    * targets here), priced and capped by `maxCandidates`, pairs dedup on
+    * 2 longs, and verification is the identical exact sorted-shingle
+    * merge — so the exactness contract matches [[minhashNearDups]]
+    * restricted to cross-side pairs. The existing corpus is never
+    * self-joined.
     */
   def minhashNewAgainst(existing: DataFrame, incoming: DataFrame,
                         idCol: String, textCol: String,
@@ -463,101 +530,75 @@ object Dedup {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
     require(bloomFpp > 0 && bloomFpp <= 0.5,
       s"bloomFpp must be in (0, 0.5], got $bloomFpp")
-    // id_old's type comes from the EXISTING side (as on the normal path,
-    // whose id_old is existing's id) — a zero-row cross join keeps both
-    // paths' schemas identical even when the two id columns differ
-    val empty = incoming.select(col(idCol).as("id_new")).limit(0)
-      .crossJoin(existing.select(col(idCol).as("id_old")).limit(0))
-      .withColumn("jaccard", lit(0.0))
     // the two sides' shingle+band+pin chains are independent job chains
     // over different inputs — concurrent submissions (the established
     // pattern): the serial form paid ~8 scheduler round-trips of eager
     // construction latency per call before the first candidate was even
-    // planned. The incoming side is now derived even when `existing`
-    // turns out empty — wasted work only in that degenerate corner, and
-    // semantics are unchanged.
+    // planned. The incoming side is derived even when `existing` turns
+    // out empty — wasted work only in that degenerate corner.
     val fEx = ArtifactIO.leg {
-      // the bloom-sizing count rides the banded pin as an observed
-      // metric — one job fewer on this leg
       shingleBandedCounted(existing, idCol, textCol,
         numHashes, bands, shingleLen, seed)
     }
-    val ((shEx, bandedEx, nExBands), (shIn, bandedIn, nInBands)) =
+    val ((shEx, bandedEx, nEx), (shIn, bandedIn, nIn)) =
       graft.core.Par.withLeg(fEx) {
         shingleBandedCounted(incoming, idCol, textCol,
-          numHashes, bands, shingleLen, seed)
+          numHashes, bands, shingleLen, seed, pinBands = false)
       }
-    // the incoming side's two pins go unused on this degenerate path;
-    // they are released with every other pin (see the cache note up top)
-    if (nExBands == 0) return empty
+    // the bloom-sizing count rode the shingle pin, so the bloom build is
+    // the only job here
+    val prune =
+      if (nEx == 0) Nil
+      else Seq(bandedEx.select(fieldHash(BandKeys.map(col)).as("__bk"))
+        .stat.bloomFilter("__bk", nEx, bloomFpp))
+    minhashAgainst("minhashNewAgainst", shIn, bandedIn, nIn,
+      shEx, bandedEx, nEx, prune, numHashes, bands, threshold,
+      maxBucketSize, broadcastVerify, broadcastVerifyMaxRows, maxCandidates)
+  }
 
+  /** The one "new against existing" MinHash body, shared by
+    * [[minhashNewAgainst]] (existing side derived from text) and
+    * [[DedupIndex.minhashNewAgainst]] (existing side read from the
+    * artifact). `(sh*, banded*, n*)` are each side's hashed-shingle
+    * table, banded relation and banded row count; `prune` holds Bloom
+    * filters over the existing side's band keys (none: no pruning).
+    * Returns (id_new, id_old, jaccard). */
+  private[ext] def minhashAgainst(op: String,
+      shIn: DataFrame, bandedIn: DataFrame, nIn: Long,
+      shEx: DataFrame, bandedEx: DataFrame, nEx: Long,
+      prune: Seq[org.apache.spark.util.sketch.BloomFilter],
+      numHashes: Int, bands: Int, threshold: Double, maxBucketSize: Int,
+      broadcastVerify: Option[Boolean], broadcastVerifyMaxRows: Long,
+      maxCandidates: Option[Long]): DataFrame = {
+    // id_old's type comes from the EXISTING side (as on the normal path)
+    // — a zero-row cross join keeps both paths' schemas identical even
+    // when the two id columns differ. The incoming side's pins go unused
+    // here; they are released with every other pin (see the cache note
+    // up top)
+    if (nEx == 0) return shIn.select(col("id").as("id_new")).limit(0)
+      .crossJoin(shEx.select(col("id").as("id_old")).limit(0))
+      .withColumn("jaccard", lit(0.0))
     // (band, bsig) funneled to one long; the bloom broadcast prunes the
     // incoming bands BEFORE any shuffle (false positives only add
-    // candidates — the exact verify restores precision). Both sizing
-    // counts rode their pins as observed metrics, so the bloom build is
-    // the only job left here.
-    val bandKey = fieldHash(Seq(col("band"), col("bsig")))
-    val bloom = bandedEx.select(bandKey.as("__bk"))
-      .stat.bloomFilter("__bk", nExBands, bloomFpp)
-    val bc = incoming.sparkSession.sparkContext.broadcast(bloom)
-    val mightContain = udf { (k: Long) => bc.value.mightContainLong(k) }
-
-    val buckets = bandedEx.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize)
-    val survivors = bandedIn.filter(mightContain(bandKey))
-      .select(col("band"), col("bsig"), col("id").as("id_new"))
-
-    // self-pricing, like [[minhashNearDups]]: Σ n_in(b)·n_ex(b) over the
-    // post-Bloom surviving buckets equals the cross join's pre-dedup
-    // output exactly — the number that explodes when an incoming crawl
-    // shares vocabulary with a large accumulated corpus under
-    // high-recall (few-rows-per-band) banding. One aggregation over the
-    // pinned band relations.
-    val estimate = survivors.groupBy("band", "bsig")
-      .agg(count(lit(1)).as("__nin"))
-      .join(buckets, Seq("band", "bsig"))
-      .agg(sum(col("__nin") * col("count")).cast("long"))
-      .first().get(0) match { case null => 0L; case l: Long => l }
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"minhashNewAgainst: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use more rows per band (fewer bands for " +
-          s"the same numHashes — r=${numHashes / bands} here) or a " +
-          "smaller maxBucketSize.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] minhashNewAgainst: ~$estimate candidate " +
-        s"pairs from banding (numHashes=$numHashes, bands=$bands => r=" +
-        s"${numHashes / bands}, maxBucketSize=$maxBucketSize) — " +
-        "verification pays this volume; consider more rows per band")
-
-    val pairs = survivors
-      .join(buckets, Seq("band", "bsig"))
-      .join(bandedEx.select(col("band"), col("bsig"), col("id").as("id_old")),
-        Seq("band", "bsig"))
-      .select(col("id_new"), col("id_old"))
-      .dropDuplicates("id_new", "id_old")
-
-    // BOTH side tables broadcast under the hint, so the decision must
-    // size on the LARGER side — a 50M-doc incoming crawl against a small
+    // candidates — the exact verify restores precision)
+    val survivors =
+      if (prune.isEmpty) bandedIn
+      else {
+        val bc = shIn.sparkSession.sparkContext.broadcast(prune)
+        val might = udf { (k: Long) => bc.value.exists(_.mightContainLong(k)) }
+        bandedIn.filter(might(fieldHash(BandKeys.map(col))))
+      }
+    val pairs = bucketCandidates(bandedEx, BandKeys, maxBucketSize,
+      CrossPairs(survivors), CandidatePrice(op, maxCandidates,
+        minhashParams(numHashes, bands, maxBucketSize),
+        "Use more rows per band (fewer bands for the same numHashes) or " +
+          "a smaller maxBucketSize."))
+    // BOTH side tables broadcast under the hint, so the decision sizes on
+    // the LARGER side — a 50M-doc incoming crawl against a small
     // accumulated corpus must not get broadcast just because the existing
-    // side is tiny (bandedIn is pinned; its count rode the bloom leg)
-    val doBroadcast = broadcastVerify.getOrElse(
-      autoBroadcastVerify("minhashNewAgainst",
-        math.max(nExBands, nInBands) / bands,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L))
-    def side(sh: DataFrame, n: String) = {
-      val s = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
-      if (doBroadcast) broadcast(s) else s
-    }
-    pairs
-      .join(side(shIn, "id_new"), "id_new")
-      .join(side(shEx, "id_old"), "id_old")
-      .filter(least(size(col("shh_id_new")), size(col("shh_id_old"))) >=
-        lit(threshold) * greatest(size(col("shh_id_new")), size(col("shh_id_old"))))
-      .withColumn("jaccard", jaccardSorted(col("shh_id_new"), col("shh_id_old")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_old"), col("jaccard"))
+    // side is tiny
+    verifyJaccard(op, pairs, shIn, shEx, threshold, broadcastVerify,
+      math.max(nEx, nIn) / bands, broadcastVerifyMaxRows)
   }
 
   /** Build the accumulated-corpus band-signature Bloom filter that
@@ -683,20 +724,11 @@ object Dedup {
     // filter is cheap per pair, but the JOIN still emits (and shuffles)
     // this volume, so a recall-tuned chunking that collides broadly goes
     // quadratic exactly like minhash's r=2 banding did.
-    val estimate = bucketCandidateVolume(buckets)
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"simhashNearDups: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use fewer chunks (wider per-chunk " +
-          s"signatures collide less; keep chunks > maxHamming — " +
-          s"chunks=$chunks => ${64 / chunks} bits each here) or a smaller " +
-          "maxBucketSize.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] simhashNearDups: ~$estimate candidate " +
-        s"pairs from chunk buckets (chunks=$chunks => ${64 / chunks} bits " +
-        s"per signature, maxBucketSize=$maxBucketSize) — the pair join " +
-        "emits this volume; consider fewer, wider chunks")
+    priceCandidates(CandidatePrice("simhashNearDups", maxCandidates,
+      s"chunks=$chunks => ${64 / chunks} bits each, maxBucketSize=$maxBucketSize",
+      "Use fewer chunks (wider per-chunk signatures collide less; keep " +
+        "chunks > maxHamming) or a smaller maxBucketSize."),
+      bucketCandidateVolume(buckets))
     // Hamming-verify BEFORE the pair dedup: the fingerprints already ride
     // the chunked relation, so the cheap bit_count filter collapses the
     // candidate volume (e.g. 1.4M -> ~5k at sf0.1) before the distinct's
@@ -717,17 +749,8 @@ object Dedup {
                        numHashes: Int = 64, bands: Int = 16, shingleLen: Int = 5,
                        seed: Int = 0, maxBucketSize: Int = 1000): DataFrame = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val rPerB = numHashes / bands
-    val sig = df.select(col(idCol).as("id"),
-        shingleHashes(col(textCol), shingleLen).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", minhash(col("sh"), numHashes, seed))
-    val bandStructs = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        farmHash64(slice(col("sig"), b * rPerB + 1, rPerB)).as("bsig"))
-    }
-    sig.select(explode(array(bandStructs: _*)).as("bb"))
-      .select(col("bb.band").as("band"), col("bb.bsig").as("bsig"))
+    bandSignatures(shingleTable(df, idCol, textCol, shingleLen),
+        numHashes, bands, seed)
       .groupBy("band", "bsig").count()
       .filter(col("count") > maxBucketSize)
   }
@@ -788,36 +811,15 @@ object Dedup {
     val v = df.select(col(idCol).as("id"), col(vecCol).as("v"))
     val (banded, nBanded) =
       embeddingBandedCounted(df, idCol, vecCol, dim, bits, tables, seed)
-    val ok = banded.groupBy("table", "bucket").count()
-      .filter(col("count") <= maxBucketSize && col("count") > 1)
-    // self-pricing (the minhash/simhash discipline): Σ c·(c−1)/2 over
-    // surviving buckets equals the table-bucket join's pre-dedup
-    // candidate output exactly, from one aggregation over the pinned
-    // banded relation — the number that explodes when `bits` is too low
-    // for a clustered embedding space.
-    val estimate = bucketCandidateVolume(ok)
-    maxCandidates.foreach { cap =>
-      if (estimate > cap) throw new IllegalStateException(
-        s"embeddingNearDups: estimated candidate volume $estimate exceeds " +
-          s"maxCandidates=$cap. Use more bits per table (smaller sign " +
-          s"buckets — bits=$bits here), fewer tables, or a smaller " +
-          "maxBucketSize.")
-    }
-    if (estimate > WarnCandidateVolume)
-      System.err.println(s"[graft] embeddingNearDups: ~$estimate candidate " +
-        s"pairs from sign buckets (bits=$bits, tables=$tables, " +
-        s"maxBucketSize=$maxBucketSize) — exact-cosine verification pays " +
-        "this volume; consider more bits per table")
-    val a = banded.select(col("table"), col("bucket"), col("id").as("id_a"))
-    val b = banded.select(col("table"), col("bucket"), col("id").as("id_b"))
-    val pairs = a.join(ok, Seq("table", "bucket"))
-      .join(b, Seq("table", "bucket"))
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    // the table-bucket join prices itself like the MinHash self-join —
+    // the volume explodes when `bits` is too low for a clustered space
+    val pairs = bucketCandidates(banded, Seq("table", "bucket"),
+      maxBucketSize, SelfPairs, CandidatePrice("embeddingNearDups",
+        maxCandidates, s"bits=$bits, tables=$tables, maxBucketSize=$maxBucketSize",
+        "Use more bits per table (smaller sign buckets), fewer tables, or " +
+          "a smaller maxBucketSize."))
     val doBroadcast = broadcastVerify.getOrElse(
-      // docs = banded rows / tables; the count rode the pin as an
-      // observed metric — no extra job, no corpus pass
+      // docs = banded rows / tables; the count rode the pin
       autoBroadcastVerify("embeddingNearDups", nBanded / tables,
         broadcastVerifyMaxRows, estBytesPerRow = dim.toLong * 4 + 64))
     def side(n: String, vn: String) = {
@@ -1116,9 +1118,11 @@ object Dedup {
         col("component").as("__rcomp")), Seq("__rid"), "left")
       .withColumn("__rcomp", coalesce(col("__rcomp"), col("__rid")))
 
-  /** Log-warn threshold for [[jaccardJoinExact]]'s and
-    * [[minhashNearDups]]'s pre-flight candidate estimates (the hard stop
-    * is `maxCandidates`, protective by default — see
+  /** Warn threshold of [[priceCandidates]], the guard every priced
+    * operator runs before its candidate pairs exist: [[minhashNearDups]],
+    * [[minhashNewAgainst]], [[DedupIndex.minhashNewAgainst]],
+    * [[simhashNearDups]], [[embeddingNearDups]] and [[jaccardJoinExact]]
+    * (the hard stop is `maxCandidates`, protective by default — see
     * [[DefaultMaxCandidates]]). */
   val WarnCandidateVolume: Long = 10000000L
 
@@ -1152,8 +1156,8 @@ object Dedup {
                                 shingleLen: Int = 5, seed: Int = 0,
                                 maxBucketSize: Int = 1000): Long = {
     require(numHashes % bands == 0, "numHashes must be divisible by bands")
-    val (_, banded) = shingleBanded(df, idCol, textCol, numHashes, bands,
-      shingleLen, seed)
+    val (_, banded, _) = shingleBandedCounted(df, idCol, textCol,
+      numHashes, bands, shingleLen, seed)
     bucketCandidateVolume(banded.groupBy("band", "bsig").count()
       .filter(col("count") <= maxBucketSize && col("count") > 1))
   }
@@ -1330,20 +1334,12 @@ object Dedup {
     // — a fraction of the join it predicts. Quadratic candidate growth
     // is this operator's honest worst case (exactness forbids bucket
     // caps); surface it BEFORE a 100 TB job commits to it.
-    val volume = candidateVolume(prefix)
-    if (volume > maxCandidates)
-      throw new IllegalStateException(
-        s"jaccardJoinExact pre-flight: estimated candidate volume $volume " +
-          s"exceeds maxCandidates=$maxCandidates. On bounded-vocabulary " +
-          "corpora the exact prefix join grows quadratically; use " +
-          "minhashNearDups (banded, capped, near-identical recall at " +
-          "threshold >= 0.8) or raise maxCandidates deliberately.")
-    if (volume > WarnCandidateVolume)
-      System.err.println(s"[graft] jaccardJoinExact: estimated candidate " +
-        s"volume $volume (warn threshold $WarnCandidateVolume) — expect a " +
-        "quadratic-shaped join; minhashNearDups is the bucketed scale route")
-    else
-      System.err.println(s"[graft] jaccardJoinExact: estimated candidate volume $volume")
+    priceCandidates(CandidatePrice("jaccardJoinExact", Some(maxCandidates),
+      s"shingleLen=$shingleLen, threshold=$threshold",
+      "On bounded-vocabulary corpora the exact prefix join grows " +
+        "quadratically; use minhashNearDups (banded, capped, near-identical " +
+        "recall at threshold >= 0.8) or raise maxCandidates deliberately."),
+      candidateVolume(prefix))
     val sideSmall = prefix.filter(col("pos") < col("p_mid"))
       .select(col("tok"), col("id").as("id_a"), col("len").as("len_a"),
         col("pos").as("pos_a"))

@@ -58,6 +58,9 @@ import org.apache.spark.util.sketch.BloomFilter
   * dropBatch are [[ArtifactIO]]'s four lifecycle steps (single writer,
   * under the `_writer_lock` lease; see its header). Readers (newAgainst,
   * minhashNewAgainst, nearDuplicateFlag) never take the lease.
+  * `minhashNewAgainst` is priced and capped like the direct operator: it
+  * runs the same body ([[Dedup.minhashAgainst]]), so it logs the same
+  * candidate-volume estimate and throws past [[Dedup.DefaultMaxCandidates]].
   *
   * Scale shape: the per-batch build cost is the same shingle+band pass
   * the direct operators pay for that batch; the serve cost reads the
@@ -190,10 +193,13 @@ object DedupIndex {
         val n = ArtifactIO.targetFileCount(spark, dir, targetBytes,
           parallelismFloor = spark.sparkContext.defaultParallelism)
         val df0 = GraftIO.readParquet(spark, dir)
-        val df = df0.dropDuplicates(df0.columns.filterNot(_ == "batch").toSeq)
-          .drop("batch")
+        val data = df0.columns.filterNot(_ == "batch").toSeq
+        // hash-placed and sorted on the data columns, so the files depend
+        // only on the rows, not on shuffle fetch order or AQE coalescing
+        val df = df0.dropDuplicates(data).drop("batch")
+          .repartition(n, data.map(col): _*).sortWithinPartitions(data.map(col): _*)
         ArtifactIO.rewriteInPlace(spark, dir)(tmp =>
-          df.repartition(n).write.mode("overwrite").parquet(s"$tmp/batch=$cid"))
+          df.write.mode("overwrite").parquet(s"$tmp/batch=$cid"))
       }
     }
     // settle every leg before leaving (even when one throws): an
@@ -369,73 +375,40 @@ object DedupIndex {
   /** Incremental NEAR-dup detection against the index: (id_new, id_old,
     * jaccard) pairs exactly as [[Dedup.minhashNewAgainst]] would produce
     * with the artifact's banding parameters — pair-for-pair equal by
-    * construction (spec-locked), but the existing side's shingle and
-    * band relations are READ, not re-derived: the indexed corpus text is
-    * never touched. Incoming is shingled+banded with the artifact's own
-    * parameters; `threshold` must sit at or above the recall envelope of
-    * the artifact's (bands, rows-per-band) choice. */
+    * construction (spec-locked): both run [[Dedup.minhashAgainst]], and
+    * only the existing side's source differs. Here its shingle and band
+    * relations are READ and its Bloom segments loaded, not re-derived:
+    * the indexed corpus text is never touched. Incoming is shingled+banded
+    * with the artifact's own parameters; `threshold` must sit at or above
+    * the recall envelope of the artifact's (bands, rows-per-band) choice.
+    * The search is priced and capped like the direct operator: the
+    * candidate-volume estimate is logged, and past
+    * [[Dedup.DefaultMaxCandidates]] the call throws before any candidate
+    * pair exists. */
   def minhashNewAgainst(spark: SparkSession, path: String,
                         incoming: DataFrame, idCol: String, textCol: String,
                         threshold: Double = 0.8, maxBucketSize: Int = 1000,
                         broadcastVerify: Option[Boolean] = None,
                         broadcastVerifyMaxRows: Long = 1000000L): DataFrame = {
     val p = readParams(spark, path)
-    val bandedEx = GraftIO.readParquet(spark, s"$path/bands")
-    val shEx = GraftIO.readParquet(spark, s"$path/shingles")
-    // the incoming shingle+band+pin chain and the artifact-side reads
-    // (bloom segments, the stored bands' narrow columnar count) are
+    // the incoming shingle+band+pin chain and the artifact-side reads are
     // independent — concurrent submissions, like the direct operator
     val fIn = ArtifactIO.leg {
-      // the broadcast-sizing count rides the banded pin as an observed
-      // metric — no separate count job on this leg
       Dedup.shingleBandedCounted(incoming, idCol, textCol,
-        p.numHashes, p.bands, p.shingleLen, p.seed)
+        p.numHashes, p.bands, p.shingleLen, p.seed, pinBands = false)
     }
-    val ((shIn, bandedIn, nInBands), (blooms, nExBands)) =
+    val ((shIn, bandedIn, nIn), (blooms, nEx)) =
       graft.core.Par.withLeg(fIn) {
         // both artifact-side reads are driver-side metadata/segment IO:
         // the stored bands' count comes from parquet footers, not a scan
         (loadBloomSegments(spark, s"$path/$BandBloomDir"),
           ArtifactIO.parquetRowCount(spark, s"$path/bands"))
       }
-    val bandKey = fieldHash(Seq(col("band"), col("bsig")))
-    val prunedIn =
-      if (blooms.isEmpty) bandedIn
-      else {
-        val bc = spark.sparkContext.broadcast(blooms)
-        val might = udf { (k: Long) => bc.value.exists(_.mightContainLong(k)) }
-        bandedIn.filter(might(bandKey))
-      }
-
-    val buckets = bandedEx.groupBy("band", "bsig").count()
-      .filter(col("count") <= maxBucketSize)
-    val pairs = prunedIn
-      .select(col("band"), col("bsig"), col("id").as("id_new"))
-      .join(buckets, Seq("band", "bsig"))
-      .join(bandedEx.select(col("band"), col("bsig"), col("id").as("id_old")),
-        Seq("band", "bsig"))
-      .select(col("id_new"), col("id_old"))
-      .dropDuplicates("id_new", "id_old")
-
-    // size on the LARGER side, as the direct operator does (both side
-    // tables ride the same broadcast hint); both counts rode the
-    // overlapped legs above
-    val doBroadcast = broadcastVerify.getOrElse(
-      Dedup.autoBroadcastVerify("DedupIndex.minhashNewAgainst",
-        math.max(nExBands, nInBands) / p.bands,
-        broadcastVerifyMaxRows, estBytesPerRow = 2560L))
-    def side(sh: DataFrame, n: String) = {
-      val s0 = sh.select(col("id").as(n), col("sh").as(s"shh_$n"))
-      if (doBroadcast) broadcast(s0) else s0
-    }
-    pairs
-      .join(side(shIn, "id_new"), "id_new")
-      .join(side(shEx, "id_old"), "id_old")
-      .filter(least(size(col("shh_id_new")), size(col("shh_id_old"))) >=
-        lit(threshold) * greatest(size(col("shh_id_new")), size(col("shh_id_old"))))
-      .withColumn("jaccard", jaccardSorted(col("shh_id_new"), col("shh_id_old")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_new"), col("id_old"), col("jaccard"))
+    Dedup.minhashAgainst("DedupIndex.minhashNewAgainst", shIn, bandedIn, nIn,
+      GraftIO.readParquet(spark, s"$path/shingles"),
+      GraftIO.readParquet(spark, s"$path/bands"), nEx, blooms.toSeq,
+      p.numHashes, p.bands, threshold, maxBucketSize, broadcastVerify,
+      broadcastVerifyMaxRows, Dedup.DefaultMaxCandidates)
   }
 
   /** The streaming-liftable EXACT-duplicate flag served from the

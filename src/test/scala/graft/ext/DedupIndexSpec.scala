@@ -55,8 +55,10 @@ class DedupIndexSpec extends SparkSpec {
       numHashes = 64, bands = 32) shouldBe 50L
     val served = DedupIndex.minhashNewAgainst(spark, path, incoming,
       "doc_id", "text", threshold = 0.5)
+    // the index path runs under the direct operator's default cap
     val direct = Dedup.minhashNewAgainst(corpus, incoming, "doc_id", "text",
-      numHashes = 64, bands = 32, threshold = 0.5)
+      numHashes = 64, bands = 32, threshold = 0.5,
+      maxCandidates = Dedup.DefaultMaxCandidates)
     val sp = pairSet(served)
     sp shouldBe pairSet(direct)
     // the 10 planted near-copies and 5 exact copies all pair with their
@@ -87,6 +89,58 @@ class DedupIndexSpec extends SparkSpec {
     DedupIndex.readParams(spark, pAppend).bands shouldBe 32
     spark.read.parquet(s"$pAppend/bands")
       .agg(countDistinct(col("band"))).as[Long].head() shouldBe 32L
+  }
+
+  /** The estimate `op` logs while `search` is called and collected. */
+  private def loggedEstimate(op: String)(search: => DataFrame): Long = {
+    val buf = new java.io.ByteArrayOutputStream()
+    val err = System.err
+    System.setErr(new java.io.PrintStream(buf, true))
+    try search.collect() finally System.setErr(err)
+    val line = ("""\[graft\] \Q""" + op + """\E: estimated candidate volume (\d+)""").r
+    val found = line.findAllMatchIn(buf.toString).map(_.group(1).toLong).toSeq
+    found should have size 1
+    found.head
+  }
+
+  it should "price and cap the index search like the direct operator" in {
+    val path = tmpDir()
+    DedupIndex.build(corpus, "doc_id", "text", path, numHashes = 64, bands = 32)
+    val est = loggedEstimate("DedupIndex.minhashNewAgainst")(
+      DedupIndex.minhashNewAgainst(spark, path, incoming, "doc_id", "text",
+        threshold = 0.5))
+    loggedEstimate("minhashNewAgainst")(Dedup.minhashNewAgainst(corpus,
+      incoming, "doc_id", "text", numHashes = 64, bands = 32,
+      threshold = 0.5)) shouldBe est
+    // both equal the cross-side bucket join's pre-dedup row count (Bloom
+    // pruning only drops incoming bands that join no existing bucket)
+    val bandsEx = graft.sources.GraftIO.readParquet(spark, s"$path/bands")
+    val shEx = graft.sources.GraftIO.readParquet(spark, s"$path/shingles")
+    val (shIn, bandedIn, nIn) = Dedup.shingleBandedCounted(incoming,
+      "doc_id", "text", 64, 32, 5, 0)
+    val sizes = bandsEx.groupBy("band", "bsig").count()
+      .filter(col("count") <= 1000)
+    bandedIn.join(sizes, Seq("band", "bsig"))
+      .join(bandsEx.select(col("band"), col("bsig"), col("id").as("id_old")),
+        Seq("band", "bsig"))
+      .count() shouldBe est
+    est should be > 0L
+    // the shared body over the stored relations stops one under the estimate
+    val e = the[IllegalStateException] thrownBy Dedup.minhashAgainst(
+      "DedupIndex.minhashNewAgainst", shIn, bandedIn, nIn, shEx, bandsEx,
+      ArtifactIO.parquetRowCount(spark, s"$path/bands"), Nil, 64, 32, 0.5,
+      1000, None, 1000000L, Some(est - 1))
+    e.getMessage should include(s"estimated candidate volume $est")
+    e.getMessage should include(s"maxCandidates=${est - 1}")
+    e.getMessage should include("r=2")
+  }
+
+  it should "serve a priced near-dup search in at most 10 Spark jobs" in {
+    val path = tmpDir()
+    DedupIndex.build(corpus, "doc_id", "text", path, numHashes = 64, bands = 32)
+    val (_, jobs) = jobsOf(DedupIndex.minhashNewAgainst(spark, path, incoming,
+      "doc_id", "text", threshold = 0.5).collect())
+    jobs should be <= 10
   }
 
   behavior of "DedupIndex exact search"
@@ -216,6 +270,29 @@ class DedupIndexSpec extends SparkSpec {
       parquets(d).size shouldBe 1
       parquets(d).head.getParentFile.getName should startWith("batch=compact-")
     }
+  }
+
+  it should "write the same compacted files whatever the input partitioning" in {
+    // same rows, different partitioning of the build and append inputs
+    def digests(in: DataFrame): Seq[String] = {
+      val path = tmpDir()
+      DedupIndex.build(in.filter(col("doc_id") < 30), "doc_id", "text", path,
+        numHashes = 64, bands = 32)
+      DedupIndex.append(in.filter(col("doc_id") >= 30), "doc_id", "text", path)
+      DedupIndex.compact(spark, path)
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
+        else if (f.getName.endsWith(".parquet")) Seq(f) else Nil
+      Seq("fingerprints", "shingles", "bands").flatMap { d =>
+        walk(new java.io.File(s"$path/$d")).map { f =>
+          val sha = java.security.MessageDigest.getInstance("SHA-256")
+            .digest(java.nio.file.Files.readAllBytes(f.toPath))
+          d + ":" + sha.map("%02x".format(_)).mkString
+        }
+      }.sorted
+    }
+    digests(corpus.coalesce(1)) shouldBe
+      digests(corpus.repartition(4, col("text")))
   }
 
   it should "make keyed re-appends idempotent (exactly-once without compaction)" in {

@@ -463,6 +463,35 @@ class DedupSpec extends SparkSpec {
       .as[Option[Double]].collect() shouldBe
       Array(None, None, None, None)
   }
+
+  behavior of "near-dup candidate pricing and Jaccard verification"
+
+  it should "each live in one shared step" in {
+    val root = new java.io.File("src/main/scala/graft/ext")
+    root.isDirectory shouldBe true
+    def scalaFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
+      if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
+    // pattern -> the Dedup members allowed to hold it (ngramJaccard scores
+    // an explicit pair list with no threshold: the one listed exemption)
+    val rules = Seq(
+      "\"[^\"\n]*estimated candidate volume".r -> Set("priceCandidates"),
+      """\bjaccardSorted\s*\(""".r -> Set("verifyJaccard", "ngramJaccard"))
+    val member = """^  (?:private(?:\[\w+\])? )?def (\w+)""".r
+    val hits = for {
+      f <- scalaFiles(root)
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      lines = text.split("\n", -1).toSeq
+      (pattern, allowed) <- rules
+      m <- pattern.findAllMatchIn(text)
+      line = text.substring(0, m.start).count(_ == '\n')
+      l = lines(line).trim
+      if !(l.startsWith("*") || l.startsWith("/*") || l.startsWith("//"))
+      owner = lines.take(line + 1).reverseIterator
+        .flatMap(member.findPrefixMatchOf(_)).map(_.group(1)).nextOption()
+      if !(f.getName == "Dedup.scala" && owner.exists(allowed))
+    } yield s"${f.getPath}:${line + 1}: $l"
+    withClue(hits.mkString("\n")) { hits shouldBe empty }
+  }
 }
 
 /** Connected components over pair lists + keep-one dedup. */
