@@ -221,6 +221,26 @@ object SparkEntry {
     * name must not collide. */
   private val streamSeq = new java.util.concurrent.atomic.AtomicLong(0L)
 
+  /** The pipeline_e2e gate's recipe over `<dir>/documents.parquet`. */
+  private[graft] def pipelineE2eRecipe(dir: String, out: String, audit: Boolean): String =
+    s"""{
+       |  "input": "$dir/documents.parquet",
+       |  "output": "$out",
+       |  "id_col": "doc_id", "text_col": "text",
+       |  "audit": $audit,
+       |  "layout": {"zorder": ["shard", "doc_id"], "files": 4, "bits": 4},
+       |  "stages": [
+       |    {"op": "filter", "predicate": "lang = 'en'"},
+       |    {"op": "normalize"},
+       |    {"op": "gopher", "min_words": 30, "min_stopword_hits": 1,
+       |     "stopwords": ["the","be","to","of","and","that","have","with"]},
+       |    {"op": "dedup_exact"},
+       |    {"op": "quality_top_fraction", "fraction": 0.6},
+       |    {"op": "token_budget", "budget": 2000},
+       |    {"op": "train_order", "salt": "e2e", "shards": 8}
+       |  ]
+       |}""".stripMargin
+
   /** Temp directory deleted at JVM exit. Eager deletion is not an option
     * for gate scratch space: the DataFrames a gate returns read the
     * staged files LAZILY (Verify/Bench act on them after the gate
@@ -2430,26 +2450,9 @@ object SparkEntry {
     "pipeline_e2e" -> ((s, d) => {
       val tmp = sessionTempDir("graft_pipeline_e2e")
       val out = s"$tmp/out"
-      val recipe =
-        s"""{
-           |  "input": "$d/documents.parquet",
-           |  "output": "$out",
-           |  "id_col": "doc_id", "text_col": "text",
-           |  "audit": true,
-           |  "layout": {"zorder": ["shard", "doc_id"], "files": 4, "bits": 4},
-           |  "stages": [
-           |    {"op": "filter", "predicate": "lang = 'en'"},
-           |    {"op": "normalize"},
-           |    {"op": "gopher", "min_words": 30, "min_stopword_hits": 1,
-           |     "stopwords": ["the","be","to","of","and","that","have","with"]},
-           |    {"op": "dedup_exact"},
-           |    {"op": "quality_top_fraction", "fraction": 0.6},
-           |    {"op": "token_budget", "budget": 2000},
-           |    {"op": "train_order", "salt": "e2e", "shards": 8}
-           |  ]
-           |}""".stripMargin
       val rp = s"$tmp/recipe.json"
-      java.nio.file.Files.writeString(java.nio.file.Paths.get(rp), recipe)
+      java.nio.file.Files.writeString(java.nio.file.Paths.get(rp),
+        pipelineE2eRecipe(d, out, audit = true))
       // operator = the end-to-end pipeline run (forced — it writes the
       // output layout); the read-back + ordering below is the audit
       timedOperator("pipeline_e2e") { graft.cli.Pipeline.run(rp, Map.empty, s) }

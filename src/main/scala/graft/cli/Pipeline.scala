@@ -2,8 +2,10 @@ package graft.cli
 
 import graft.ext.{Dedup, Importance, ScoreFilter, Split, TextAnalysis}
 import graft.core.Pin
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.CollectMetrics
 import org.apache.spark.sql.functions._
+import scala.collection.immutable.ListMap
 
 /** `graft pipeline` — a JSON-recipe curation-pipeline runner chaining the
   * engine's corpus operators into one job, with per-stage row accounting.
@@ -50,21 +52,22 @@ import org.apache.spark.sql.functions._
   *   ] }
   * }}}
   *
-  * Per-stage accounting: with `audit` (the default) each stage's output is
-  * pinned and counted in one job ([[graft.core.Pin.counted]]), and the
-  * runner writes `_stages.json` — `[{stage, op, rows_in, rows_out,
-  * seconds}, ...]` — next to the output. The pin means every stage's work
-  * runs exactly once (the count materializes it) and the lineage stays
-  * bounded across a long chain; that is also the shape you want on a cluster, where a 10-stage
-  * lazy chain would otherwise re-run stage 1 under every action.
-  * `"audit": false` keeps the chain one lazy plan with no per-stage counts
-  * and nothing pinned until the output write, but then every stage that
-  * runs a Spark job of its own re-runs the whole chain above it from the
-  * source scan: on the pipeline_e2e gate's recipe over the sf0.01
-  * documents (4 local cores), 9 jobs read all 500 source rows again
-  * (quality_top_fraction's threshold in 2, token_budget's cut in 3, the
-  * layout pin in 4): 20 jobs and 4,635 input records against audit's 23
-  * jobs and 2,550, in 7.5 s against 3.4 s.
+  * One plan, whatever `audit` says. The runner pins
+  * ([[graft.core.Pin.eager]]) only what is read more than once: the input
+  * of a stage whose op re-reads it (`rereads` in the op table below) and
+  * the input of a writer that runs two actions (the z-order layout) or
+  * runs outside Spark SQL (avro, which reports no observed metric). Every
+  * other stage stays fused in one lazy plan and runs once, in the next pin
+  * or in the output write. The source and each stage's output carry an
+  * `Observation` of their row count, filled by that pin or write.
+  *
+  * `audit` (the default) only decides whether `_stages.json` — `[{stage,
+  * op, rows_in, rows_out, seconds}, ...]` — is written next to the output
+  * and a stderr line printed per stage. A stage's `seconds` run from its
+  * start until its output is built and, if the next stage re-reads it,
+  * pinned (the last stage's include the output write), so a fused lazy
+  * stage's execution is charged to the first stage at or after it whose
+  * output is pinned or written.
   *
   * Scale notes: every stage maps to an operator whose 100 TB shape is
   * documented on the operator itself (fingerprint shuffles, banded LSH,
@@ -87,22 +90,24 @@ object Pipeline {
       .getOrElse(throw new IllegalArgumentException(
         s"pipeline recipe needs '$k' (or --${k.replace('_', '-')})"))
 
-  /** Runs the recipe and writes its output, whether or not the output
-    * already exists (`graft pipeline` skips a complete output before it
-    * gets here); returns the per-stage stats (empty when `audit: false`). */
+  /** Runs the recipe and writes its output (`graft pipeline` skips a
+    * complete output before it gets here); returns the per-stage stats. */
   def run(recipePath: String, flags: Map[String, String],
           spark: SparkSession): Seq[StageStat] = {
     val recipe = parseRecipe(recipePath)
-    def topStr(k: String, dflt: Option[String] = None): String =
-      top(recipe, flags, k, dflt)
+    def topStr(k: String, dflt: Option[String] = None) = top(recipe, flags, k, dflt)
     val out = topStr("output")
-    val idCol = topStr("id_col", Some("doc_id"))
-    val textCol = topStr("text_col", Some("text"))
-    val audit = recipe.get("audit").forall(asBool)
+    val ctx = Ctx(topStr("id_col", Some("doc_id")), topStr("text_col", Some("text")), spark)
+    val outMode = topStr("output_mode", Some("parquet"))
+    val audit = bool(recipe, "audit", dflt = true)
     val stages = recipe.get("stages") match {
       case Some(s: Seq[_]) => s.zipWithIndex.map {
         case (m: Map[_, _], i) =>
-          (i, m.asInstanceOf[Map[String, Any]])
+          val stage = m.asInstanceOf[Map[String, Any]]
+          val op = stage.getOrElse("op", throw new IllegalArgumentException(
+            s"stage $i has no 'op'")).toString
+          (i, op, stage, Ops.getOrElse(op, throw new IllegalArgumentException(
+            s"unknown pipeline op '$op' (known: ${Ops.keys.mkString(", ")})")))
         case (other, i) => throw new IllegalArgumentException(
           s"stage $i is not an object: $other")
       }
@@ -110,89 +115,107 @@ object Pipeline {
         "pipeline recipe needs a 'stages' array")
     }
 
-    // optional output layout: {"layout": {"zorder": [cols...], "files": N,
-    // "bits": B}} writes the corpus z-order-clustered on the named columns
-    // (graft.ext.Layout) so downstream scans prune files on ALL of them —
-    // the natural last step of a curation recipe whose output is queried
-    // by (source, date), (lang, quality), ... at 100 TB. Validated HERE,
-    // before any stage runs: a malformed layout must not throw only after
-    // hours of curation work have completed.
+    // {"layout": {"zorder": [cols...], "files": N, "bits": B}} clusters the
+    // output (graft.ext.Layout); validated, like every op, before any stage runs
     val layout = recipe.get("layout").map {
-      case m: Map[_, _] => m.asInstanceOf[Map[String, Any]]
+      case m: Map[_, _] =>
+        val l = m.asInstanceOf[Map[String, Any]]
+        val zcols = l.get("zorder") match {
+          case Some(s: Seq[_]) if s.nonEmpty => s.map(_.toString)
+          case _ => throw new IllegalArgumentException(
+            "layout needs a non-empty 'zorder' column array")
+        }
+        require(outMode == "parquet",
+          s"layout.zorder writes parquet, got output_mode=$outMode")
+        (l, zcols)
       case other => throw new IllegalArgumentException(
         s"'layout' must be an object, got $other")
     }
-    val layoutCols = layout.map { l =>
-      val zcols = l.get("zorder") match {
-        case Some(s: Seq[_]) if s.nonEmpty => s.map(_.toString)
-        case _ => throw new IllegalArgumentException(
-          "layout needs a non-empty 'zorder' column array")
-      }
-      val mode = topStr("output_mode", Some("parquet"))
-      require(mode == "parquet",
-        s"layout.zorder writes parquet, got output_mode=$mode")
-      zcols
+    def write(df: DataFrame): Unit = layout match {
+      case Some((l, zcols)) =>
+        graft.ext.Layout.zorderWrite(Pin.eager(df), zcols, out,
+          numFiles = long(l, "files", 16L).toInt, bits = long(l, "bits", 8L).toInt)
+      case None =>
+        Graft.write(if (outMode == "avro") Pin.eager(df) else df, out, outMode)
+    }
+    // a pin or write fills the observations left in its optimized plan;
+    // one the optimizer pruned (its stage sits under a filter folded to an
+    // empty relation) is counted on its own
+    var pending = Vector.empty[(DataFrame, Observation)]
+    def observed(df: DataFrame): (DataFrame, Observation) = {
+      val obs = Observation()
+      pending :+= df.observe(obs, count(lit(1)).as("rows")) -> obs
+      pending.last
+    }
+    def settled(df: DataFrame): DataFrame = {
+      val live = df.queryExecution.optimizedPlan.collect { case m: CollectMetrics => m.name }
+      pending.filterNot(p => live.contains(p._2.name)).foreach(_._1.count())
+      pending = Vector.empty
+      df
     }
 
-    var df = Graft.read(spark, topStr("input"),
-      topStr("input_mode", Some("parquet")))
-    var stats = Vector.empty[StageStat]
-    var rowsIn = if (audit) df.count() else -1L
-    for ((i, stage) <- stages) {
-      val op = stage.getOrElse("op", throw new IllegalArgumentException(
-        s"stage $i has no 'op'")).toString
+    val (source, sourceRows) = observed(Graft.read(spark, topStr("input"),
+      topStr("input_mode", Some("parquet"))))
+    var df = source
+    val ran = stages.zipWithIndex.map { case ((i, op, s, table), k) =>
       val t0 = System.nanoTime()
-      df = applyStage(op, stage, df, idCol, textCol, spark)
-      if (audit) {
-        // pin + count in one job: the stage runs exactly once, lineage
-        // stays bounded
-        val (pinned, rowsOut) = Pin.counted(df)
-        df = pinned
-        val secs = (System.nanoTime() - t0) / 1e9
-        System.err.println(
-          f"[graft pipeline] stage $i $op: $rowsIn -> $rowsOut rows in $secs%.1f s")
-        stats :+= StageStat(i, op, rowsIn, rowsOut, secs)
-        rowsIn = rowsOut
+      val (built, rows) = observed(table.build(s, df, ctx))
+      df = stages.lift(k + 1) match {
+        case Some((_, _, _, next)) if next.rereads => Pin.eager(settled(built))
+        case Some(_) => built
+        case None => write(settled(built)); built
       }
+      (i, op, rows, (System.nanoTime() - t0) / 1e9)
     }
+    if (stages.isEmpty) write(settled(df))
 
-    // zorderWrite runs TWO actions (boundary sketch + clustered write);
-    // with audit on, df is already pinned by the last stage's pin —
-    // without audit an unpinned chain would re-run every stage for each
-    // action, so pin it here
-    val finalDf = if (layoutCols.isDefined && !audit) Pin.eager(df) else df
-    (layout, layoutCols) match {
-      case (Some(l), Some(zcols)) =>
-        graft.ext.Layout.zorderWrite(finalDf, zcols, out,
-          numFiles = long(l, "files", 16L).toInt,
-          bits = long(l, "bits", 8L).toInt)
-      case _ =>
-        Graft.write(finalDf, out, topStr("output_mode", Some("parquet")))
+    val rows = rowCounts(sourceRows +: ran.map(_._3))
+    val stats = ran.zip(rows.zip(rows.tail)).map {
+      case ((i, op, _, secs), (rowsIn, rowsOut)) => StageStat(i, op, rowsIn, rowsOut, secs)
     }
-    if (audit) writeStats(out, stats, spark)
+    if (audit) {
+      stats.foreach(st => System.err.println(f"[graft pipeline] stage ${st.stage} " +
+        f"${st.op}: ${st.rowsIn} -> ${st.rowsOut} rows in ${st.seconds}%.1f s"))
+      writeStats(out, stats, spark)
+    }
     stats
   }
 
-  private def applyStage(op: String, s: Map[String, Any], df: DataFrame,
-                         idCol: String, textCol: String,
-                         spark: SparkSession): DataFrame = op match {
-    case "normalize" =>
-      var cleaned = TextAnalysis.normalizeText(col(textCol),
+  /** The observed row counts, -1 for one never reported: they arrive on the
+    * listener bus after the action that ran them, so the wait is bounded. */
+  private def rowCounts(obs: Seq[Observation]): Seq[Long] = {
+    import scala.concurrent.duration._
+    val deadline = 60.seconds.fromNow
+    obs.map(o => scala.util.Try(scala.concurrent.Await.result(o.future,
+      deadline.timeLeft max Duration.Zero)).fold(_ => -1L, _.getLong(0)))
+  }
+
+  private[cli] final case class Ctx(idCol: String, textCol: String, spark: SparkSession)
+
+  /** A recipe op: whether it reads its input more than once (the runner
+    * then pins that input, so the plan above it runs once), and how it
+    * builds its output from the stage's object and its input. */
+  private[cli] final case class Op(rereads: Boolean,
+                                   build: (Map[String, Any], DataFrame, Ctx) => DataFrame)
+
+  /** The op table, in the order the unknown-op message lists it. */
+  private[cli] val Ops: ListMap[String, Op] = ListMap(
+    "normalize" -> Op(rereads = false, (s, df, c) => {
+      var cleaned = TextAnalysis.normalizeText(col(c.textCol),
         stripControl = !bool(s, "keep_control", dflt = false))
       if (bool(s, "redact", dflt = false)) cleaned = TextAnalysis.redact(cleaned)
-      df.withColumn(textCol, cleaned)
-
-    case "filter" =>
-      df.filter(expr(Graft.stripQuoteWrap(str(s, "predicate"))))
-
-    case "gopher" =>
+      df.withColumn(c.textCol, cleaned)
+    }),
+    "filter" -> Op(rereads = false, (s, df, _) =>
+      df.filter(expr(Graft.stripQuoteWrap(str(s, "predicate"))))),
+    "gopher" -> Op(rereads = false, (s, df, c) => {
       val stopwords = s.get("stopwords") match {
         case None => TextAnalysis.DefaultGopherStopwords
         case Some(l: Seq[_]) => l.map(_.toString)
         case Some(other) => throw new IllegalArgumentException(
           s"gopher stopwords must be an array, got $other")
       }
-      val kept = TextAnalysis.gopherFilter(df, textCol,
+      val kept = TextAnalysis.gopherFilter(df, c.textCol,
         minWords = long(s, "min_words", 50L),
         maxWords = long(s, "max_words", 100000L),
         minMeanWordLen = dbl(s, "min_mean_word_len", 3.0),
@@ -204,49 +227,43 @@ object Pipeline {
         minStopwordHits = long(s, "min_stopword_hits", 2L),
         stopwords = stopwords)
       if (bool(s, "repetition", dflt = false))
-        TextAnalysis.repetitionFilter(kept, textCol)
+        TextAnalysis.repetitionFilter(kept, c.textCol)
       else kept
-
-    case "repetition" =>
-      TextAnalysis.repetitionFilter(df, textCol)
-
-    case "dedup_exact" =>
-      // keep-set of min-id representatives per 64-bit content fingerprint
-      df.join(Dedup.exactByFingerprint(df, idCol, textCol).select(idCol), idCol)
-
-    case "dedup_near" =>
-      val pairs = Dedup.minhashNearDups(df, idCol, textCol,
+    }),
+    "repetition" -> Op(rereads = false, (_, df, c) =>
+      TextAnalysis.repetitionFilter(df, c.textCol)),
+    // keep-set of min-id representatives per 64-bit content fingerprint,
+    // joined back to the input
+    "dedup_exact" -> Op(rereads = true, (_, df, c) =>
+      df.join(Dedup.exactByFingerprint(df, c.idCol, c.textCol).select(c.idCol), c.idCol)),
+    "dedup_near" -> Op(rereads = true, (s, df, c) => {
+      val pairs = Dedup.minhashNearDups(df, c.idCol, c.textCol,
         numHashes = long(s, "num_hashes", 64L).toInt,
         bands = long(s, "bands", 16L).toInt,
         shingleLen = long(s, "shingle_len", 5L).toInt,
         threshold = dbl(s, "threshold", 0.8))
-      Dedup.dropNearDups(df, idCol, Dedup.connectedComponents(pairs))
-
-    case "decontaminate" =>
-      val bench = Graft.read(spark, str(s, "benchmark"),
-        s.get("benchmark_mode").map(_.toString).getOrElse("parquet"))
-      TextAnalysis.decontaminate(df, idCol, textCol, bench,
-        s.get("benchmark_text_col").map(_.toString).getOrElse(textCol),
-        n = long(s, "n", 50L).toInt)
-
+      Dedup.dropNearDups(df, c.idCol, Dedup.connectedComponents(pairs))
+    }),
+    // one read through a broadcast probe of the benchmark's n-grams (a
+    // benchmark past `maxBenchGrams` falls back to a two-read semi-join)
+    "decontaminate" -> Op(rereads = false, (s, df, c) =>
+      TextAnalysis.decontaminate(df, c.idCol, c.textCol, benchmark(s, c),
+        str(s, "benchmark_text_col", Some(c.textCol)), n = long(s, "n", 50L).toInt)),
     // the near-duplicate complement of "decontaminate": drops docs whose
     // whole-text shingle-Jaccard vs some benchmark row reaches the
     // threshold — catches lightly-edited eval leaks no exact n-gram sees
-    case "decontaminate_fuzzy" =>
-      val bench = Graft.read(spark, str(s, "benchmark"),
-        s.get("benchmark_mode").map(_.toString).getOrElse("parquet"))
-      TextAnalysis.decontaminateFuzzy(df, idCol, textCol, bench,
-        s.get("benchmark_text_col").map(_.toString).getOrElse(textCol),
+    "decontaminate_fuzzy" -> Op(rereads = true, (s, df, c) =>
+      TextAnalysis.decontaminateFuzzy(df, c.idCol, c.textCol, benchmark(s, c),
+        str(s, "benchmark_text_col", Some(c.textCol)),
         threshold = dbl(s, "threshold", 0.8),
         numHashes = long(s, "num_hashes", 64L).toInt,
         bands = long(s, "bands", 16L).toInt,
-        shingleLen = long(s, "shingle_len", 5L).toInt)
-
+        shingleLen = long(s, "shingle_len", 5L).toInt)),
     // near-dup-aware train/val/test assignment: adds `cluster` + `split`
     // columns; a near-duplicate pair can never straddle the boundary.
     // "fractions" is an ORDERED list (label boundaries are cumulative):
     //   [{"label": "train", "fraction": 0.8}, {"label": "val", ...}, ...]
-    case "leakage_safe_split" =>
+    "leakage_safe_split" -> Op(rereads = true, (s, df, c) => {
       val fractions = s.get("fractions") match {
         case Some(l: Seq[_]) if l.nonEmpty => l.map {
           case m: Map[_, _] =>
@@ -257,58 +274,52 @@ object Pipeline {
         }
         case _ => Seq("train" -> 0.9, "val" -> 0.05, "test" -> 0.05)
       }
-      Split.leakageSafeSplit(df, idCol, textCol, fractions,
-        splitCol = s.get("split_col").map(_.toString).getOrElse("split"),
-        clusterCol = s.get("cluster_col").map(_.toString).getOrElse("cluster"),
+      Split.leakageSafeSplit(df, c.idCol, c.textCol, fractions,
+        splitCol = str(s, "split_col", Some("split")),
+        clusterCol = str(s, "cluster_col", Some("cluster")),
         seed = s.get("seed").map(asLong(_).toInt),
         numHashes = long(s, "num_hashes", 64L).toInt,
         bands = long(s, "bands", 16L).toInt,
         shingleLen = long(s, "shingle_len", 5L).toInt,
         threshold = dbl(s, "threshold", 0.8))
-
-    case "quality_top_fraction" =>
-      // score with the composite quality signal, keep the top fraction,
-      // then shed the signal columns: the stage contract is corpus-in,
-      // corpus-out
-      val cols = df.columns.toIndexedSeq.map(col)
-      ScoreFilter.keepTopFraction(TextAnalysis.qualitySignals(df, textCol),
-          "quality_score", dbl(s, "fraction", 0.5), tieBreak = Seq(idCol))
-        .select(cols: _*)
-
-    case "token_budget" =>
-      val cols = df.columns.toIndexedSeq.map(col)
-      ScoreFilter.keepTopByBudget(TextAnalysis.qualitySignals(df, textCol),
+    }),
+    // score with the composite quality signal, keep the top fraction (a
+    // histogram collect, then the cut), then shed the signal columns: the
+    // stage contract is corpus-in, corpus-out
+    "quality_top_fraction" -> Op(rereads = true, (s, df, c) =>
+      ScoreFilter.keepTopFraction(TextAnalysis.qualitySignals(df, c.textCol),
+          "quality_score", dbl(s, "fraction", 0.5), tieBreak = Seq(c.idCol))
+        .select(df.columns.toIndexedSeq.map(col): _*)),
+    "token_budget" -> Op(rereads = true, (s, df, c) =>
+      ScoreFilter.keepTopByBudget(TextAnalysis.qualitySignals(df, c.textCol),
           "quality_score", "n_tokens", long(s, "budget", 0L),
-          tieBreak = Seq(idCol))
-        .select(cols: _*)
-
-    case "dsir_select" =>
+          tieBreak = Seq(c.idCol))
+        .select(df.columns.toIndexedSeq.map(col): _*)),
+    "dsir_select" -> Op(rereads = true, (s, df, c) => {
       val tgt = expr(Graft.stripQuoteWrap(str(s, "target")))
       val scores =
         if (bool(s, "exact", dflt = false))
-          Importance.importanceScores(df, idCol, textCol, tgt)
-        else Importance.hashedImportanceScores(df, idCol, textCol, tgt,
+          Importance.importanceScores(df, c.idCol, c.textCol, tgt)
+        else Importance.hashedImportanceScores(df, c.idCol, c.textCol, tgt,
           nBuckets = long(s, "buckets", 8192L).toInt,
           ngramOrder = long(s, "ngram", 1L).toInt)
       val joined = df.join(
-        scores.select(col("id").as(idCol), col("imp_logratio")), idCol)
-      Importance.gumbelTopFraction(joined, idCol, "imp_logratio",
-          dbl(s, "fraction", 0.5), dbl(s, "temperature", 1.0),
-          s.get("salt").map(_.toString).getOrElse("dsir"))
+        scores.select(col("id").as(c.idCol), col("imp_logratio")), c.idCol)
+      Importance.gumbelTopFraction(joined, c.idCol, "imp_logratio",
+          dbl(s, "fraction", 0.5), dbl(s, "temperature", 1.0), str(s, "salt", Some("dsir")))
         .drop("imp_logratio")
-
-    case "train_order" =>
-      Split.trainOrder(df, Seq(idCol),
-        s.get("salt").map(_.toString).getOrElse("graft"),
-        numShards = long(s, "shards", 1024L).toInt)
-
+    }),
+    "train_order" -> Op(rereads = false, (s, df, c) =>
+      Split.trainOrder(df, Seq(c.idCol), str(s, "salt", Some("graft")),
+        numShards = long(s, "shards", 1024L).toInt)),
     // data-quality gate (ext/Profile.check): evaluates the declared
     // constraints in ONE aggregation action and, by default, ABORTS the
     // pipeline on any failure — a curation bug (nulled ids, collapsed
     // cardinality, leaked out-of-range values) should kill the run at
     // the stage that caused it, not surface in a trained model.
-    // `"on_fail": "warn"` downgrades to logging. Identity on the data.
-    case "check" =>
+    // `"on_fail": "warn"` downgrades to logging. Identity on the data,
+    // which the next stage reads again after the check's collect.
+    "check" -> Op(rereads = true, (s, df, _) => {
       val cs = s.get("constraints") match {
         case Some(l: Seq[_]) if l.nonEmpty => l.map {
           case m: Map[_, _] =>
@@ -325,7 +336,7 @@ object Pipeline {
           s"${r.getString(1)}): observed=${r.get(2)} passed=${r.getBoolean(3)}")
       }
       val failed = verdicts.filterNot(_.getBoolean(3))
-      val onFail = s.get("on_fail").map(_.toString).getOrElse("fail")
+      val onFail = str(s, "on_fail", Some("fail"))
       require(onFail == "fail" || onFail == "warn",
         s"check on_fail must be 'fail' or 'warn', got '$onFail'")
       if (failed.nonEmpty && onFail == "fail")
@@ -333,13 +344,10 @@ object Pipeline {
           failed.map(r => s"${r.getString(0)}(${r.getString(1)}) " +
             s"observed=${r.get(2)}").mkString("; "))
       df
+    }))
 
-    case other => throw new IllegalArgumentException(
-      s"unknown pipeline op '$other' (known: normalize, filter, gopher, " +
-        "repetition, dedup_exact, dedup_near, decontaminate, " +
-        "decontaminate_fuzzy, leakage_safe_split, quality_top_fraction, " +
-        "token_budget, dsir_select, train_order, check)")
-  }
+  private def benchmark(s: Map[String, Any], c: Ctx): DataFrame =
+    Graft.read(c.spark, str(s, "benchmark"), str(s, "benchmark_mode", Some("parquet")))
 
   /** JSON → [[graft.ext.Profile.Constraint]]:
     * `{"kind": "not_null", "col": "doc_id"}`,
@@ -387,27 +395,18 @@ object Pipeline {
     }
   }
 
-  private def str(s: Map[String, Any], k: String): String =
-    s.getOrElse(k, throw new IllegalArgumentException(
-      s"stage '${s.getOrElse("op", "?")}' needs '$k'")).toString
+  private def str(s: Map[String, Any], k: String, dflt: Option[String] = None): String =
+    s.get(k).map(_.toString).orElse(dflt).getOrElse(throw new IllegalArgumentException(
+      s"stage '${s.getOrElse("op", "?")}' needs '$k'"))
 
   private def long(s: Map[String, Any], k: String, dflt: Long): Long =
     s.get(k).map(asLong).getOrElse(dflt)
 
   private def dbl(s: Map[String, Any], k: String, dflt: Double): Double =
-    s.get(k) match {
-      case None => dflt
-      case Some(d: Double) => d
-      case Some(other) => asLong(other).toDouble
-    }
+    s.get(k).fold(dflt) { case d: Double => d; case other => asLong(other).toDouble }
 
   private def bool(s: Map[String, Any], k: String, dflt: Boolean): Boolean =
-    s.get(k).map(asBool).getOrElse(dflt)
-
-  private def asBool(v: Any): Boolean = v match {
-    case b: Boolean => b
-    case other => other.toString.toBoolean
-  }
+    s.get(k).fold(dflt)(_.toString.toBoolean)
 
   private def asLong(v: Any): Long = v match {
     case i: BigInt => i.toLong

@@ -122,14 +122,23 @@ object Retrieval {
       .join(broadcast(vocab), "term")
       .groupBy(col("doc_id"), col("term"), col("dl"))
       .agg(count(lit(1)).as("tf")))
+    bm25Ranked(tf, qTerms, nDocs, avgdl, k, k1, b, roundScoresTo)
+  }
 
-    // df over the postings collapses to <= |vocab| rows; idf broadcasts back
+  /** The BM25 step both searches share: over query-restricted postings
+    * `tf` (doc_id, term, dl, tf) of a corpus of `nDocs` documents with
+    * mean length `avgdl`, df/idf per term (<= |vocab| rows, broadcast
+    * back), each posting's contribution per query term, the per-(query,
+    * doc) sum (rounded when `roundScoresTo` is set), and the k-bounded
+    * top-k per query. */
+  private def bm25Ranked(tf: DataFrame, qTerms: DataFrame, nDocs: Long,
+                         avgdl: Double, k: Int, k1: Double, b: Double,
+                         roundScoresTo: Option[Int]): DataFrame = {
     val idf = tf.groupBy("term")
       .agg(count(lit(1)).as("df"))
       .withColumn("idf",
         log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + lit(0.5))
           / (col("df") + lit(0.5))))
-
     val contrib = tf
       .join(broadcast(idf.select("term", "idf")), "term")
       .join(broadcast(qTerms), "term")
@@ -138,14 +147,12 @@ object Retrieval {
           / (col("tf").cast("double")
             + lit(k1) * (lit(1.0 - b)
               + lit(b) * col("dl").cast("double") / lit(avgdl))))
-
     val rawScore = contrib.groupBy("query_id", "doc_id")
       .agg(sum(col("contrib")).as("score"))
     val scored = roundScoresTo match {
       case Some(p) => rawScore.withColumn("score", round(col("score"), p))
       case None    => rawScore
     }
-
     val byScore = udaf(new TopK.ByScore[Long](k),
       ExpressionEncoder[(Long, Double)]())
     scored.groupBy("query_id")
@@ -313,7 +320,10 @@ object Retrieval {
     val cid = ArtifactIO.fold(spark, path, TextRelations)
     val postings = GraftIO.readParquet(spark, s"$path/postings").drop("batch")
     ArtifactIO.rewriteInPlace(spark, s"$path/postings") { tmp =>
+      // sorted within each bucket on every column, so the files depend
+      // only on the rows, not on shuffle fetch order
       postings.repartition(col("bucket"))
+        .sortWithinPartitions(("bucket" +: postings.columns.filterNot(_ == "bucket")).map(col): _*)
         .write.mode("overwrite").partitionBy("bucket")
         .parquet(s"$tmp/batch=$cid")
     }
@@ -342,11 +352,11 @@ object Retrieval {
     * the corpus: query terms hash to their buckets (a driver-side
     * literal set — queries are a small broadcast batch), the postings
     * scan prunes to those directories, a broadcast semi-join keeps only
-    * the query terms' rows, and df/idf/scores/top-k proceed exactly as
-    * [[bm25TopK]] — same formula, same tie rules. Raw scores can differ
-    * from the direct path in the final ulp (contributions sum under a
-    * different partitioning); pass `roundScoresTo` when reproducible
-    * ranking across paths/runs matters. */
+    * the query terms' rows, and df/idf/scores/top-k run through the same
+    * step as [[bm25TopK]] — same formula, same tie rules. Raw scores can
+    * differ from the direct path in the final ulp (contributions sum
+    * under a different partitioning); pass `roundScoresTo` when
+    * reproducible ranking across paths/runs matters. */
   def searchTextIndex(spark: org.apache.spark.sql.SparkSession, path: String,
                       queries: DataFrame, qidCol: String, qtextCol: String,
                       k: Int, k1: Double = 1.2, b: Double = 0.75,
@@ -375,32 +385,7 @@ object Retrieval {
     val tf = GraftIO.readParquet(spark, s"$path/postings")
       .where(col("bucket").isin(qBuckets.map(java.lang.Long.valueOf).toSeq: _*))
       .join(broadcast(vocab), "term")
-    val idf = tf.groupBy("term")
-      .agg(count(lit(1)).as("df"))
-      .withColumn("idf",
-        log(lit(1.0) + (lit(nDocs.toDouble) - col("df") + lit(0.5))
-          / (col("df") + lit(0.5))))
-    val contrib = tf
-      .join(broadcast(idf.select("term", "idf")), "term")
-      .join(broadcast(qTerms), "term")
-      .withColumn("contrib",
-        col("idf") * (col("tf").cast("double") * lit(k1 + 1.0))
-          / (col("tf").cast("double")
-            + lit(k1) * (lit(1.0 - b)
-              + lit(b) * col("dl").cast("double") / lit(avgdl))))
-    val rawScore = contrib.groupBy("query_id", "doc_id")
-      .agg(sum(col("contrib")).as("score"))
-    val scored = roundScoresTo match {
-      case Some(p) => rawScore.withColumn("score", round(col("score"), p))
-      case None    => rawScore
-    }
-    val byScore = udaf(new TopK.ByScore[Long](k),
-      ExpressionEncoder[(Long, Double)]())
-    scored.groupBy("query_id")
-      .agg(byScore(col("doc_id"), col("score")).as("hits"))
-      .select(col("query_id"), explode(col("hits")).as("h"))
-      .select(col("query_id"), col("h.neighbor_id").as("doc_id"),
-        col("h.cosine_sim").as("score"), col("h.rank").as("rank"))
+    bm25Ranked(tf, qTerms, nDocs, avgdl, k, k1, b, roundScoresTo)
   }
 
   /** Hybrid retrieval served ENTIRELY from persisted artifacts: BM25

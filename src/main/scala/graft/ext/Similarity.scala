@@ -413,9 +413,11 @@ object Similarity {
 
   /** Write postings rows (carrying `cell`) to `dir`, hive-partitioned by
     * cell after one shuffle on it, so each cell lands in O(1) files
-    * rather than one file per (input task × cell). */
+    * rather than one file per (input task × cell), each sorted on every
+    * column so the files depend only on the rows. */
   private def writeCellPostings(rows: DataFrame, dir: String): Unit =
     rows.repartition(col("cell"))
+      .sortWithinPartitions(("cell" +: rows.columns.filterNot(_ == "cell")).map(col): _*)
       .write.mode("overwrite").partitionBy("cell").parquet(dir)
 
   /** Persist the quantizer tables under `path`, each driver-sized as one

@@ -1,6 +1,7 @@
 package graft.sampling
 
 import graft.GraftFunctions._
+import graft.core.Pin
 import graft.functions.ByteEncoding
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -205,10 +206,11 @@ object BigSampler {
     // always replay (the recommended arm at scale); rand coins replay on
     // stable narrow scans (see unstableForReplay), so ONLY a Random coin
     // over an unstable lineage pins the coined input — a 100 TB scan-
-    // rooted exact sample never materializes the corpus.
+    // rooted exact sample never materializes the corpus. The pin is
+    // released with the caller's Pin.scope, and unlike a cache entry no
+    // later query with the same plan can reuse its coins.
     val coined = det match {
-      case _: Random if unstableForReplay(df) =>
-        coined0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case _: Random if unstableForReplay(df) => Pin.eager(coined0)
       case _ => coined0
     }
     selectSmallest(coined, None, targetOf, buckets, windowMax, digit = 0)

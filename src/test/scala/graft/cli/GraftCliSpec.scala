@@ -652,7 +652,7 @@ class GraftCliSpec extends SparkSpec {
       spark.read.parquet(s"$base/merges").count()
   }
 
-  it should "pin and count an audited pipeline stage in one Spark job" in {
+  it should "run the same jobs with audit on and off" in {
     val base = tmp()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -667,15 +667,17 @@ class GraftCliSpec extends SparkSpec {
       p
     }
     val (stats, audited) = jobsOf(Pipeline.run(recipe("a", audit = true), Map.empty, spark))
-    val (_, plain) = jobsOf(Pipeline.run(recipe("p", audit = false), Map.empty, spark))
-    val (_, inputCount) = jobsOf(Graft.read(spark, s"$base/in", "parquet").count())
-    // over the unaudited run, audit adds the input count and one job per
-    // stage: each stage's pin carries its count
-    audited shouldBe plain + inputCount + 2
+    val (plainStats, plain) = jobsOf(Pipeline.run(recipe("p", audit = false), Map.empty, spark))
+    // one plan: audit only decides whether _stages.json is written, and
+    // the counts ride the output write's own job
+    audited shouldBe plain
+    plain shouldBe 1
     val n = docs.count()
-    stats.map(s => (s.op, s.rowsIn, s.rowsOut)) shouldBe Seq(
-      ("normalize", n, n), ("filter", n, docs.filter("doc_id % 3 = 0").count()))
+    val rows = Seq(("normalize", n, n), ("filter", n, docs.filter("doc_id % 3 = 0").count()))
+    stats.map(s => (s.op, s.rowsIn, s.rowsOut)) shouldBe rows
+    plainStats.map(s => (s.op, s.rowsIn, s.rowsOut)) shouldBe rows
     spark.read.parquet(s"$base/a").count() shouldBe stats.last.rowsOut
+    Files.exists(java.nio.file.Paths.get(s"$base/p/_stages.json")) shouldBe false
   }
 
   it should "name a missing required flag of corpusReport and dedupReport" in {

@@ -134,7 +134,9 @@ class PinSpec extends SparkSpec {
     root.isDirectory shouldBe true
     def scalaFiles(d: java.io.File): Seq[java.io.File] = d.listFiles().toSeq.flatMap(f =>
       if (f.isDirectory) scalaFiles(f) else if (f.getName.endsWith(".scala")) Seq(f) else Nil)
-    val pin = """\.\s*localCheckpoint\s*\(""".r
+    // a localCheckpoint outside Pin, or a cache entry (persist / cache),
+    // which no Pin.scope releases
+    val pin = """\.\s*(localCheckpoint\s*\(|persist\s*\(|cache\s*\(\s*\))""".r
     val hits = scalaFiles(root).flatMap { f =>
       val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
       val lines = text.split("\n", -1)
@@ -144,13 +146,20 @@ class PinSpec extends SparkSpec {
       }.filterNot { case (_, _, l) =>
         l.startsWith("*") || l.startsWith("/*") || l.startsWith("//") }
     }
-    // Pin's own call, and the gate fixtures that pin outside any command
+    // Pin's own call, the gate fixtures that pin outside any command, and
+    // three cache entries with a known release: BigDiffy's `keyed`, which
+    // the DiffResult's lazily-run outputs share until its `unpersist`,
+    // TextAnalysis's bench-gram set, unpersisted in a `finally`, and
+    // Dedup's connected-components edges, unpersisted after the last round
+    val exempt = Map("Pin.scala" -> 1, "BigDiffy.scala" -> 1,
+      "TextAnalysis.scala" -> 1, "Dedup.scala" -> 1)
     val (allowed, others) = hits.partition { case (f, _, _) =>
-      f.getPath.endsWith("graft/core/Pin.scala") || f.getPath.endsWith("graft/SparkEntry.scala")
+      exempt.contains(f.getName) || f.getPath.endsWith("graft/SparkEntry.scala")
     }
     withClue(others.map { case (f, n, l) => s"${f.getPath}:$n: $l" }.mkString("\n")) {
       others shouldBe empty
     }
-    allowed.count(_._1.getName == "Pin.scala") shouldBe 1
+    allowed.groupBy(_._1.getName).map { case (f, h) => f -> h.size }
+      .filter(e => exempt.contains(e._1)) shouldBe exempt
   }
 }

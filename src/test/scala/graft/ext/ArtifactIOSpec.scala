@@ -601,6 +601,32 @@ class ArtifactIOSpec extends SparkSpec {
     withClue(jobs.mkString(", ")) { jobs.map(_._2).toSet should have size 1 }
   }
 
+  it should "write the same compacted files whatever the input partitioning in every family" in {
+    // same rows, the appended batch partitioned one way or four ways
+    val day = lifecycleRows(100 until 140)
+    def digests(f: Family, batch: DataFrame): Seq[String] = {
+      val idx = s"${tmpDir("lifecycle")}/${f.name}"
+      f.build(lcBase, idx)
+      f.append(batch, idx, "day-1") shouldBe 40L
+      f.compact(idx)
+      def walk(d: java.io.File): Seq[java.io.File] =
+        if (d.isDirectory) d.listFiles().toSeq.flatMap(walk)
+        else if (d.getName.endsWith(".parquet")) Seq(d) else Nil
+      Seq("postings", "fingerprints", "shingles", "bands").flatMap { r =>
+        walk(new java.io.File(s"$idx/$r")).map { file =>
+          val sha = java.security.MessageDigest.getInstance("SHA-256")
+            .digest(java.nio.file.Files.readAllBytes(file.toPath))
+          r + ":" + sha.map("%02x".format(_)).mkString
+        }
+      }.sorted
+    }
+    val differ = families.filter { f =>
+      val one = digests(f, day.coalesce(1))
+      one.isEmpty || one != digests(f, day.repartition(4, col("text")))
+    }
+    differ.map(_.name) shouldBe empty
+  }
+
   behavior of "batch-lifecycle decisions"
 
   it should "all stay inside ArtifactIO" in {

@@ -96,6 +96,26 @@ class BigSamplerSpec extends SparkSpec {
     run().select("id").as[Long].collect().sorted shouldBe ids1
   }
 
+  it should "release the Random arm's pin of an unstable input with its scope" in {
+    // a persisted cache entry outlived every scope, and a later query with
+    // the same plan would have reused its coins
+    spark.catalog.clearCache()
+    val in = spark.range(1, 25001).selectExpr("id",
+      "CASE WHEN id % 10 < 6 THEN 'A' WHEN id % 10 < 9 THEN 'B' ELSE 'C' END AS g")
+      .repartition(4)
+    BigSampler.unstableForReplay(in) shouldBe true
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val ids = graft.core.Pin.scope(spark) {
+      sample(in, 0.1, Random(5L), Stratified(Seq("g")), exact = true)
+        .select("id").as[Long].collect()
+    }
+    ids.length shouldBe 2500
+    ids.distinct.length shouldBe ids.length
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty shouldBe true
+  }
+
   it should "pin rand replay under dynamic allocation even on stable scans" in {
     // rand(seed) coins are per (partition, row-index): a dynamically-
     // allocated cluster can re-plan file splits between the counting and
