@@ -766,14 +766,17 @@ object Graft {
 
   /** Write `df` to `path` unless a concurrent run completed `path` while
     * this one computed it ([[run]] already skipped a complete output up
-    * front). `partitionBy` is the engine's analog of the reference's BQ
-    * time-partitioned sink (S12, BigSamplerBigQuery.scala:187-199):
-    * directory partitioning on the named columns (avro sink excluded —
-    * the avro-mapred path has no partitioned committer). */
+    * front); returns whether it wrote. `partitionBy` is the engine's
+    * analog of the reference's BQ time-partitioned sink (S12,
+    * BigSamplerBigQuery.scala:187-199): directory partitioning on the
+    * named columns (avro sink excluded — the avro-mapred path has no
+    * partitioned committer). */
   private[cli] def write(df: DataFrame, path: String, mode: String,
-                    partitionBy: Seq[String] = Nil): Unit =
-    if (!GraftIO.unlessDone(path)(writeMode(df, path, mode, partitionBy)))
-      System.err.println(s"[graft] output $path already complete, skipping")
+                    partitionBy: Seq[String] = Nil): Boolean = {
+    val wrote = GraftIO.unlessDone(path)(writeMode(df, path, mode, partitionBy))
+    if (!wrote) System.err.println(s"[graft] output $path already complete, skipping")
+    wrote
+  }
 
   private def writeMode(df: DataFrame, path: String, mode: String,
                         partitionBy: Seq[String]): Unit = mode match {
@@ -865,7 +868,7 @@ object Graft {
       }.toMap,
       ignoreNan = f.contains("ignore-nan"))
     val result = BigDiffy.diff(lhs, rhs, keys, opts)
-    // the diff relation is persisted for saveStats' overlapped writes;
+    // the diff relation is persisted for saveStats' two passes over it;
     // release it so a long-lived session does not accumulate one
     // cached relation per call
     try BigDiffy.saveStats(result, required(f, "output"), ignoreNan = opts.ignoreNan)

@@ -91,7 +91,10 @@ object Pipeline {
         s"pipeline recipe needs '$k' (or --${k.replace('_', '-')})"))
 
   /** Runs the recipe and writes its output (`graft pipeline` skips a
-    * complete output before it gets here); returns the per-stage stats. */
+    * complete output before it gets here); returns the per-stage stats.
+    * When a concurrent run completes the output first, the write is
+    * skipped, and the row counts only it would have observed (the stages
+    * after the last pin) are -1 at once. */
   def run(recipePath: String, flags: Map[String, String],
           spark: SparkSession): Seq[StageStat] = {
     val recipe = parseRecipe(recipePath)
@@ -131,10 +134,13 @@ object Pipeline {
       case other => throw new IllegalArgumentException(
         s"'layout' must be an object, got $other")
     }
-    def write(df: DataFrame): Unit = layout match {
+    // returns whether it wrote: Graft.write skips an output a concurrent
+    // run completed meanwhile
+    def write(df: DataFrame): Boolean = layout match {
       case Some((l, zcols)) =>
         graft.ext.Layout.zorderWrite(Pin.eager(df), zcols, out,
           numFiles = long(l, "files", 16L).toInt, bits = long(l, "bits", 8L).toInt)
+        true
       case None =>
         Graft.write(if (outMode == "avro") Pin.eager(df) else df, out, outMode)
     }
@@ -147,11 +153,19 @@ object Pipeline {
       pending :+= df.observe(obs, count(lit(1)).as("rows")) -> obs
       pending.last
     }
-    def settled(df: DataFrame): DataFrame = {
+    // returns the observations left for `df`'s own action to fill
+    def settled(df: DataFrame): Seq[Observation] = {
       val live = df.queryExecution.optimizedPlan.collect { case m: CollectMetrics => m.name }
-      pending.filterNot(p => live.contains(p._2.name)).foreach(_._1.count())
+      val (filled, pruned) = pending.partition(p => live.contains(p._2.name))
+      pruned.foreach(_._1.count())
       pending = Vector.empty
-      df
+      filled.map(_._2)
+    }
+    // the observations a skipped output write never filled
+    var unwritten = Seq.empty[Observation]
+    def finish(df: DataFrame): Unit = {
+      val filled = settled(df)
+      if (!write(df)) unwritten = filled
     }
 
     val (source, sourceRows) = observed(Graft.read(spark, topStr("input"),
@@ -161,15 +175,15 @@ object Pipeline {
       val t0 = System.nanoTime()
       val (built, rows) = observed(table.build(s, df, ctx))
       df = stages.lift(k + 1) match {
-        case Some((_, _, _, next)) if next.rereads => Pin.eager(settled(built))
+        case Some((_, _, _, next)) if next.rereads => settled(built); Pin.eager(built)
         case Some(_) => built
-        case None => write(settled(built)); built
+        case None => finish(built); built
       }
       (i, op, rows, (System.nanoTime() - t0) / 1e9)
     }
-    if (stages.isEmpty) write(settled(df))
+    if (stages.isEmpty) finish(df)
 
-    val rows = rowCounts(sourceRows +: ran.map(_._3))
+    val rows = rowCounts(sourceRows +: ran.map(_._3), unwritten.toSet)
     val stats = ran.zip(rows.zip(rows.tail)).map {
       case ((i, op, _, secs), (rowsIn, rowsOut)) => StageStat(i, op, rowsIn, rowsOut, secs)
     }
@@ -182,12 +196,15 @@ object Pipeline {
   }
 
   /** The observed row counts, -1 for one never reported: they arrive on the
-    * listener bus after the action that ran them, so the wait is bounded. */
-  private def rowCounts(obs: Seq[Observation]): Seq[Long] = {
+    * listener bus after the action that ran them, so the wait is bounded.
+    * The `unwritten` ones, which only the output write would have filled,
+    * are -1 at once: the write was skipped because a concurrent run
+    * completed the output, so nothing will report them. */
+  private def rowCounts(obs: Seq[Observation], unwritten: Set[Observation]): Seq[Long] = {
     import scala.concurrent.duration._
     val deadline = 60.seconds.fromNow
-    obs.map(o => scala.util.Try(scala.concurrent.Await.result(o.future,
-      deadline.timeLeft max Duration.Zero)).fold(_ => -1L, _.getLong(0)))
+    obs.map(o => if (unwritten(o)) -1L else scala.util.Try(scala.concurrent.Await.result(
+      o.future, deadline.timeLeft max Duration.Zero)).fold(_ => -1L, _.getLong(0)))
   }
 
   private[cli] final case class Ctx(idCol: String, textCol: String, spark: SparkSession)

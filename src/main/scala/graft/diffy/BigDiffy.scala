@@ -51,19 +51,21 @@ final class DiffResult private[diffy] (private val keyed: DataFrame) {
 
   /** Single-row global counters (reference GlobalStats, BigDiffy.scala:97-104). */
   lazy val globalStats: DataFrame =
-    keyed.agg(
-      count(lit(1)).as("num_total"),
-      sum(when(col("diff_type") === "SAME", 1L).otherwise(0L)).as("num_same"),
-      sum(when(col("diff_type") === "DIFFERENT", 1L).otherwise(0L)).as("num_diff"),
-      sum(when(col("diff_type") === "MISSING_LHS", 1L).otherwise(0L)).as("num_missing_lhs"),
-      sum(when(col("diff_type") === "MISSING_RHS", 1L).otherwise(0L)).as("num_missing_rhs"))
+    keyed.agg(BigDiffy.globalCounters.head, BigDiffy.globalCounters.tail: _*)
 
   /** Per-field delta statistics (reference FieldStats + DeltaStats,
     * BigDiffy.scala:106-145, 264-308): count, fraction = count / numDiff
     * (:304 — the DIFFERENT count, not the total), and the population
     * moments the reference gets from Algebird (`var_pop`/`stddev_pop`;
     * Spark's skewness/kurtosis are the same population/excess forms). */
-  def fieldStats(ignoreNan: Boolean = false): DataFrame = {
+  def fieldStats(ignoreNan: Boolean = false): DataFrame =
+    BigDiffy.withFraction(
+      perField(ignoreNan).crossJoin(broadcast(globalStats.select(col("num_diff")))),
+      col("num_diff")).drop("num_diff")
+
+  /** [[fieldStats]] before its `fraction` column: one row per differing
+    * field. */
+  private[diffy] def perField(ignoreNan: Boolean): DataFrame = {
     // ignoreNan drops NaN VALUES from the moments but keeps the field
     // occurrence count, matching the reference's computeGlobalAndFieldStats
     // (BigDiffy.scala:280-284); aggregates skip nulls, so masking NaN to
@@ -72,16 +74,13 @@ final class DiffResult private[diffy] (private val keyed: DataFrame) {
             else col("delta")
     // delta_type via min(): deterministic when a string field mixes NUMERIC
     // and STRING deltas across rows (`first` would be run-dependent)
-    val perField = deltas.groupBy("field").agg(
+    deltas.groupBy("field").agg(
       count(lit(1)).as("count"),
       min(col("delta_type")).as("delta_type"),
       min(d).as("min"), max(d).as("max"),
       avg(d).as("mean"), var_pop(d).as("variance"),
       stddev_pop(d).as("stddev"),
       skewness(d).as("skewness"), kurtosis(d).as("kurtosis"))
-    perField.crossJoin(broadcast(globalStats.select(col("num_diff"))))
-      .withColumn("fraction", col("count").cast("double") / col("num_diff"))
-      .drop("num_diff")
   }
 
   def unpersist(): Unit = keyed.unpersist()
@@ -98,9 +97,10 @@ final class DiffResult private[diffy] (private val keyed: DataFrame) {
   * Catalyst prunes ignored fields out of the scan entirely.
   *
   * Scale: the join is the only wide stage; enable AQE skew-join handling
-  * for hot keys. The three stats views reuse one cached keyed relation, so
-  * requesting all three costs one pass over the join output plus two cheap
-  * aggregates — same shape as the reference's single semigroup `.sum`.
+  * for hot keys. The three stats views reuse one cached keyed relation;
+  * [[saveStats]] writes all three in two passes over it (the key dump,
+  * which also counts the global counters, and the per-field aggregate) —
+  * the shape of the reference's single semigroup `.sum`.
   */
 object BigDiffy {
 
@@ -280,30 +280,49 @@ object BigDiffy {
           "keys must be unique per side (reference BigDiffy.scala:240-242)")
   }
 
+  /** The five [[DiffResult.globalStats]] counters over a relation with a
+    * `diff_type` column. */
+  private[diffy] val globalCounters: Seq[Column] = Seq(
+    count(lit(1)).as("num_total"),
+    sum(when(col("diff_type") === "SAME", 1L).otherwise(0L)).as("num_same"),
+    sum(when(col("diff_type") === "DIFFERENT", 1L).otherwise(0L)).as("num_diff"),
+    sum(when(col("diff_type") === MissingLhs, 1L).otherwise(0L)).as("num_missing_lhs"),
+    sum(when(col("diff_type") === MissingRhs, 1L).otherwise(0L)).as("num_missing_rhs"))
+
+  /** `perField` plus `fraction` = count / `numDiff`. */
+  private[diffy] def withFraction(perField: DataFrame, numDiff: Column): DataFrame =
+    perField.withColumn("fraction", col("count").cast("double") / numDiff)
+
   /** Write the three stats views as TSV-with-header (reference saveStats +
     * saveAsTextFileWithHeader, BigDiffy.scala:439-485, 676-687).
     *
-    * The two expensive views (`keys` — a full dump of the cached diff
-    * relation — and `fields` — its delta explode + aggregate) run as
-    * concurrent job submissions over the SAME cached relation: per-block
-    * cache locking means each diff partition is computed once whichever
-    * job reaches it first, and the two writes overlap their scheduler
-    * gaps and stragglers. `global` (a verdict-sized aggregate over the
-    * then-fully-cached relation) is written LAST: its `_SUCCESS` is the
-    * completion witness callers key output-exists short-circuiting on,
-    * and the witness must be the final action — a crash mid-overlap
-    * leaves no witness, so the rerun rewrites, never false-skips. */
+    * Write order and what each write computes:
+    *   1. `keys`, a full dump of the cached diff relation, carries the
+    *      five global counters as an observed metric, so the pass that
+    *      writes it also counts it;
+    *   2. `fields`, the delta explode + per-field aggregate over the same
+    *      cached relation, takes its `fraction` denominator from the
+    *      observed `num_diff` instead of a second aggregate. It waits for
+    *      `keys`: run concurrently over the not-yet-cached relation, the
+    *      two cost 2 more Spark jobs than in turn;
+    *   3. `global`, the observed counters as one local row under
+    *      [[DiffResult.globalStats]]' schema (an empty diff keeps its
+    *      null sums), written LAST: its `_SUCCESS` is the completion
+    *      witness callers key output-exists short-circuiting on, so a
+    *      crash before it leaves no witness and the rerun rewrites,
+    *      never false-skips. */
   def saveStats(result: DiffResult, outputDir: String, ignoreNan: Boolean = false): Unit = {
     def tsv(df: DataFrame, name: String): Unit =
       df.write.mode("overwrite").option("header", "true").option("sep", "\t")
         .csv(s"$outputDir/$name")
-    locally {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      graft.core.Par.settle2(
-        Future(tsv(result.keyStats, "keys")),
-        Future(tsv(result.fieldStats(ignoreNan), "fields")))
-    }
-    tsv(result.globalStats, "global")
+    val counters = org.apache.spark.sql.Observation()
+    tsv(result.keyStats.observe(counters, globalCounters.head, globalCounters.tail: _*), "keys")
+    // the same wait as Observation.get, but for the Row itself
+    val totals = scala.concurrent.Await.result(counters.future,
+      scala.concurrent.duration.Duration.Inf)
+    tsv(withFraction(result.perField(ignoreNan),
+      lit(totals.getAs[java.lang.Long]("num_diff")).cast(LongType)), "fields")
+    val spark = result.keyStats.sparkSession
+    tsv(spark.createDataFrame(java.util.List.of(totals), result.globalStats.schema), "global")
   }
 }

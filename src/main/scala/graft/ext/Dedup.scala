@@ -934,52 +934,55 @@ object Dedup {
     val edges = p.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(p.select(col("id_b").as("src"), col("id_a").as("dst")))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    // a pin, NOT persist: each round references the previous
-    // labels twice (neighbor join + convergence check), so an uncut
-    // logical plan doubles per round — exponential analysis cost by ~20
-    // iterations. Checkpointing truncates lineage each round; on a real
-    // cluster prefer reliable checkpoints (spark.sparkContext
-    // .setCheckpointDir + .checkpoint) to survive executor loss on
-    // long-running clustering jobs.
-    var labels = Pin.eager(edges.select(col("src").as("id")).distinct()
-      .withColumn("component", col("id")))
-    // null-safe: sum over an EMPTY label relation is null — fold to zero
-    // so the first convergence compare doesn't NPE on a pair-free corpus
-    def labelSum(l: DataFrame): java.math.BigDecimal =
-      Option(l.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0))
-        .getOrElse(java.math.BigDecimal.ZERO)
-    var prevSum = labelSum(labels)
-    var iter = 0
-    var converged = false
-    while (iter < maxIter && !converged) {
-      // candidate label per vertex = min over (own, neighbors')
-      val viaNeighbors = edges
-        .join(labels.withColumnRenamed("id", "dst"), "dst")
-        .groupBy(col("src").as("id"))
-        .agg(min(col("component")).as("nbr_component"))
-      val stepped = labels.join(viaNeighbors, Seq("id"), "left")
-        .select(col("id"),
-          least(col("component"), coalesce(col("nbr_component"), col("component")))
-            .as("component"))
-      // path halving: follow the representative's own label once more —
-      // roughly halves the rounds a long chain needs
-      val reps = stepped.select(col("id").as("component"), col("component").as("rep2"))
-      val next = Pin.eager(stepped.join(reps, Seq("component"), "left")
-        .select(col("id"), coalesce(col("rep2"), col("component")).as("component")))
-      // labels are monotone non-increasing, so an unchanged (exact
-      // decimal) sum IS convergence — one cheap agg instead of an
-      // anti-join comparison per round
-      val s = labelSum(next)
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      labels = next
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[graft] connectedComponents did not converge in " +
-        s"$maxIter rounds — returning finer-grained labels (under-merged clusters)")
-    edges.unpersist()
-    labels
+    // released in `finally`: a round that throws must not leave the
+    // cache entry behind the caller's Pin.scope
+    try {
+      // a pin, NOT persist: each round references the previous
+      // labels twice (neighbor join + convergence check), so an uncut
+      // logical plan doubles per round — exponential analysis cost by ~20
+      // iterations. Checkpointing truncates lineage each round; on a real
+      // cluster prefer reliable checkpoints (spark.sparkContext
+      // .setCheckpointDir + .checkpoint) to survive executor loss on
+      // long-running clustering jobs.
+      var labels = Pin.eager(edges.select(col("src").as("id")).distinct()
+        .withColumn("component", col("id")))
+      // null-safe: sum over an EMPTY label relation is null — fold to zero
+      // so the first convergence compare doesn't NPE on a pair-free corpus
+      def labelSum(l: DataFrame): java.math.BigDecimal =
+        Option(l.agg(sum(col("component").cast("decimal(38,0)"))).head().getDecimal(0))
+          .getOrElse(java.math.BigDecimal.ZERO)
+      var prevSum = labelSum(labels)
+      var iter = 0
+      var converged = false
+      while (iter < maxIter && !converged) {
+        // candidate label per vertex = min over (own, neighbors')
+        val viaNeighbors = edges
+          .join(labels.withColumnRenamed("id", "dst"), "dst")
+          .groupBy(col("src").as("id"))
+          .agg(min(col("component")).as("nbr_component"))
+        val stepped = labels.join(viaNeighbors, Seq("id"), "left")
+          .select(col("id"),
+            least(col("component"), coalesce(col("nbr_component"), col("component")))
+              .as("component"))
+        // path halving: follow the representative's own label once more —
+        // roughly halves the rounds a long chain needs
+        val reps = stepped.select(col("id").as("component"), col("component").as("rep2"))
+        val next = Pin.eager(stepped.join(reps, Seq("component"), "left")
+          .select(col("id"), coalesce(col("rep2"), col("component")).as("component")))
+        // labels are monotone non-increasing, so an unchanged (exact
+        // decimal) sum IS convergence — one cheap agg instead of an
+        // anti-join comparison per round
+        val s = labelSum(next)
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+        labels = next
+        iter += 1
+      }
+      if (!converged)
+        System.err.println(s"[graft] connectedComponents did not converge in " +
+          s"$maxIter rounds — returning finer-grained labels (under-merged clusters)")
+      labels
+    } finally edges.unpersist()
   }
 
   /** Keep-one-per-cluster dedup: drops every document whose near-dup

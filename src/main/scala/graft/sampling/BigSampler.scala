@@ -3,7 +3,7 @@ package graft.sampling
 import graft.GraftFunctions._
 import graft.core.Pin
 import graft.functions.ByteEncoding
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** Distributed record sampler: the Spark-native re-expression of the
@@ -22,8 +22,10 @@ import org.apache.spark.sql.functions._
   * Scale design (100 TB lens):
   *   - Approximate arms are a single narrow `filter` — no shuffle at all;
   *     the coin column is pure Catalyst so predicate pushdown/codegen apply.
+  *     Uniform approximate first counts its strata (one aggregate).
   *   - Per-stratum parameter tables (counts → probabilities/targets) are
-  *     tiny (one row per stratum) and are always BROADCAST-joined, mirroring
+  *     tiny (one row per stratum): computed on the driver from one
+  *     collect and always BROADCAST-joined, mirroring
   *     the reference's map-side hashJoin and its documented assumption that
   *     "all distinct keys or strata can fit into memory".
   *   - Exact arms rank records per stratum by the coin and cut at
@@ -58,7 +60,11 @@ object BigSampler {
   private def strataKey(fields: Seq[String]): Column =
     concat_ws("_", fields.map(f => coalesce(col(f).cast("string"), lit("null"))): _*)
 
-  /** Main entry: sample `fraction` ∈ (0,1] of `df` per the three axes. */
+  /** Main entry: sample `fraction` ∈ (0,1] of `df` per the three axes.
+    * The approximate arms without a uniform distribution only build a
+    * plan; the exact arms and the uniform arm run their per-stratum count
+    * job here, before they return, and the returned plan joins the
+    * driver-side result as a broadcast local relation. */
   def sample(df: DataFrame, fraction: Double, det: Determinism = Random(),
              dist: Distribution = NoDistribution, exact: Boolean = false): DataFrame = {
     require(fraction > 0.0 && fraction <= 1.0, s"fraction must be in (0,1], got $fraction")
@@ -96,15 +102,21 @@ object BigSampler {
   }
 
   /** Uniform approximate: per-stratum Bernoulli with p_k = min(pop/n_k, 1)
-    * (reference SamplerSCollectionFunctions.scala:136-157), probabilities
-    * broadcast-joined. */
+    * (reference SamplerSCollectionFunctions.scala:136-157). The
+    * per-stratum counts are collected when `sample` is called, as the
+    * exact arms' histograms are; the probabilities are computed on the
+    * driver (pop = total × fraction / #strata, in double) and
+    * broadcast-joined as a local relation. */
   private def uniformApprox(df: DataFrame, fraction: Double, det: Determinism,
                             fields: Seq[String]): DataFrame = {
     val key = strataKey(fields)
-    val counts = df.groupBy(key.as("__stratum")).agg(count(lit(1)).as("__n"))
-    val pop = counts.agg((sum("__n") * lit(fraction) / count(lit(1))).as("__pop"))
-    val probs = counts.crossJoin(broadcast(pop))
-      .select(col("__stratum"), least(col("__pop") / col("__n"), lit(1.0)).as("__p"))
+    val counts = collectGroups(df.groupBy(key.as("__stratum")).agg(count(lit(1))),
+      "uniform", "strata", "; reduce the strata-key cardinality")
+      .map(r => (r.getString(0), r.getLong(1)))
+    val pop = counts.iterator.map(_._2).sum * fraction / counts.length
+    import df.sparkSession.implicits._
+    val probs = counts.toSeq.map { case (s, n) => (s, math.min(pop / n, 1.0)) }
+      .toDF("__stratum", "__p")
     df.withColumn("__stratum", key)
       .join(broadcast(probs), "__stratum")
       .filter(coin(det) < col("__p"))
@@ -184,11 +196,25 @@ object BigSampler {
     }
   }
 
-  /** Driver-collect cap for the (stratum, bucket) count table: the exact
-    * arms inherit the reference's "all distinct strata can fit into
-    * memory" contract (ratatool-sampling/README.md); this turns the OOM a
-    * high-cardinality strata key would cause into a clear error. */
+  /** Driver-collect cap for the per-stratum count tables: the exact and
+    * uniform arms inherit the reference's "all distinct strata can fit
+    * into memory" contract (ratatool-sampling/README.md); this turns the
+    * OOM a high-cardinality strata key would cause into a clear error. */
   private val MaxDriverGroups = 4000000
+
+  /** Collects `groups` (a per-stratum aggregate) to the driver, failing
+    * past [[MaxDriverGroups]] rows. limit(cap + 1) bounds what can ever
+    * reach the driver; the aggregate still runs fully distributed. */
+  private def collectGroups(groups: DataFrame, arm: String, what: String,
+                            advice: String): Array[Row] = {
+    val collected = groups.limit(MaxDriverGroups + 1).collect()
+    if (collected.length > MaxDriverGroups)
+      throw new IllegalStateException(
+        s"$arm sampling collected more than $MaxDriverGroups $what on the driver: " +
+          s"the $arm arms assume all distinct strata fit in " +
+          s"memory (reference ratatool-sampling/README.md)$advice")
+    collected
+  }
 
   /** Largest boundary set the final rank window may sort in one task per
     * stratum before another histogram-refinement level kicks in. */
@@ -251,16 +277,9 @@ object BigSampler {
     val spark = coined.sparkSession
     val withBkt = coined.withColumn("__bkt", coinDigit(buckets, digit))
 
-    // limit(cap + 1) bounds what can ever reach the driver; the agg still
-    // runs fully distributed either way
-    val collected = withBkt.groupBy("__stratum", "__bkt").count()
-      .limit(MaxDriverGroups + 1).collect()
-    if (collected.length > MaxDriverGroups)
-      throw new IllegalStateException(
-        s"exact sampling collected more than $MaxDriverGroups (stratum, " +
-          "bucket) groups on the driver: the exact arms assume all distinct " +
-          "strata fit in memory (reference ratatool-sampling/README.md); " +
-          "reduce the strata-key cardinality or use approximate sampling")
+    val collected = collectGroups(withBkt.groupBy("__stratum", "__bkt").count(),
+      "exact", "(stratum, bucket) groups",
+      "; reduce the strata-key cardinality or use approximate sampling")
     val bucketCounts: Map[String, Seq[(Int, Long)]] =
       collected
         .map(r => (r.getString(0), r.getInt(1), r.getLong(2)))

@@ -96,6 +96,27 @@ class PipelineSpec extends SparkSpec {
     graft.sources.AvroIO.read(spark, s"$base/out").count() shouldBe even
   }
 
+  it should "report the stages only a skipped output write counts as -1 at once" in {
+    // a concurrent run completed the output: Graft.write skips it, and the
+    // stages after the last pin are never observed
+    val base = tmp()
+    val in = spark.range(1, 51).selectExpr("id AS doc_id",
+      "concat('document number ', id % 40) AS text")
+    in.write.parquet(s"$base/in")
+    in.write.parquet(s"$base/out")
+    val n = in.count()
+    Files.writeString(Paths.get(s"$base/recipe.json"),
+      s"""{"input": "$base/in", "output": "$base/out",
+         | "stages": [{"op": "normalize"}, {"op": "dedup_exact"},
+         |            {"op": "filter", "predicate": "doc_id % 2 = 0"}]}""".stripMargin)
+    val t0 = System.nanoTime()
+    val stats = Pipeline.run(s"$base/recipe.json", Map.empty, spark)
+    (System.nanoTime() - t0) / 1e9 should be < 10.0
+    // normalize's output is pinned for dedup_exact, which re-reads it
+    stats.map(s => (s.op, s.rowsIn, s.rowsOut)) shouldBe Seq(
+      ("normalize", n, n), ("dedup_exact", n, -1L), ("filter", -1L, -1L))
+  }
+
   it should "pin the input of exactly the ops that read it more than once" in {
     val base = tmp()
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")

@@ -86,6 +86,49 @@ class BigDiffySpec extends SparkSpec {
     d.getAs[String]("field") shouldBe "extra"
     d.getAs[String]("delta_type") shouldBe "UNKNOWN"
   }
+
+  behavior of "BigDiffy.saveStats"
+
+  /** A TSV output's part files, concatenated in part order. */
+  private def tsvText(dir: String): String =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+      .sortBy(_.getName)
+      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")).mkString
+
+  it should "write the three views' bytes in at most 7 Spark jobs" in {
+    // the views saveStats used to write one by one (12 jobs on the nan
+    // fixture): keys, fields with a second global aggregate cross-joined
+    // in, then global. Earlier tests leave diffs of the same fixtures
+    // cached; a hit would hide the join's jobs.
+    spark.catalog.clearCache()
+    val (l, r) = mkSides
+    val nanL = Seq((1L, 1.0), (2L, 2.0), (3L, 3.0)).toDF("k", "v")
+    val nanR = Seq((1L, Double.NaN), (2L, 4.0), (3L, 5.0)).toDF("k", "v")
+    val empty = Seq.empty[(Long, Double)].toDF("k", "v")
+    val cases = Seq(("sides", l, r, false), ("nan", nanL, nanR, false),
+      ("ignoreNan", nanL, nanR, true), ("empty", empty, empty, false))
+    for ((name, lhs, rhs, ignoreNan) <- cases) withClue(s"$name: ") {
+      val base = graft.SparkSpec.tempDir(s"savestats_$name").toString
+      val res = BigDiffy.diff(lhs, rhs, Seq("k"))
+      try {
+        val (_, jobs) = jobsOf(BigDiffy.saveStats(res, s"$base/out", ignoreNan))
+        def tsv(df: org.apache.spark.sql.DataFrame, view: String): Unit =
+          df.write.option("header", "true").option("sep", "\t").csv(s"$base/ref/$view")
+        tsv(res.keyStats, "keys")
+        tsv(res.fieldStats(ignoreNan), "fields")
+        tsv(res.globalStats, "global")
+        for (view <- Seq("keys", "fields", "global"))
+          withClue(s"$view: ") { tsvText(s"$base/out/$view") shouldBe tsvText(s"$base/ref/$view") }
+        jobs should be <= 7
+      } finally res.unpersist()
+    }
+    // an empty diff keeps the aggregate's null sums
+    val g = graft.SparkSpec.tempDir("savestats_empty_read").toString
+    val res = BigDiffy.diff(empty, empty, Seq("k"))
+    try BigDiffy.saveStats(res, g) finally res.unpersist()
+    tsvText(s"$g/global").linesIterator.toSeq shouldBe Seq(
+      "num_total\tnum_same\tnum_diff\tnum_missing_lhs\tnum_missing_rhs", "0\t\t\t\t")
+  }
 }
 
 /** Co-located diff: both sides pre-bucketed on the key join without any

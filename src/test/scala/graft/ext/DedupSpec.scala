@@ -551,6 +551,28 @@ class ClusterSpec extends graft.SparkSpec {
     fast(6L) shouldBe 5L
   }
 
+  it should "release its edges cache entry when a propagation round throws" in {
+    // decimal(38,0) ids whose label sum fits before the first round and
+    // overflows once every label becomes the hub's
+    import org.apache.spark.sql.types.{DecimalType, StructField, StructType}
+    spark.catalog.clearCache()
+    val dec = DecimalType(38, 0)
+    val hub = new java.math.BigDecimal("-6e37").setScale(0)
+    val leaf = new java.math.BigDecimal("3e37").setScale(0)
+    val pairs = spark.createDataFrame(java.util.List.of(
+        org.apache.spark.sql.Row(hub, leaf),
+        org.apache.spark.sql.Row(hub, leaf.subtract(java.math.BigDecimal.ONE))),
+      StructType(Seq(StructField("id_a", dec), StructField("id_b", dec))))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val e = the[Exception] thrownBy graft.core.Pin.scope(spark) {
+      Dedup.connectedComponents(pairs, driverCap = 0L)
+    }
+    e.getMessage should include("OVERFLOW")
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty shouldBe true
+    (spark.sparkContext.getPersistentRDDs.keySet -- before) shouldBe empty
+  }
+
   it should "drop every non-representative and keep singletons" in {
     val docs = (1L to 30L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")

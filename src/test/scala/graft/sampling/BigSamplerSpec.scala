@@ -53,6 +53,34 @@ class BigSamplerSpec extends SparkSpec {
     got("C").toDouble shouldBe 2500.0 +- 120.0
   }
 
+  it should "run the uniform arm in at most 4 jobs and keep the plan-side probabilities' rows" in {
+    // the arm used to compute p_k = min(pop / n_k, 1) in the plan, with a
+    // second aggregate cross-joined to the counts (5 jobs for this write);
+    // the driver now computes them from one collect of the counts
+    val dir = graft.SparkSpec.tempDir("uniform").toString
+    data.write.parquet(s"$dir/in")
+    val in = spark.read.parquet(s"$dir/in")
+    def planSide(coin: org.apache.spark.sql.Column) = {
+      val key = concat_ws("_", coalesce(col("g").cast("string"), lit("null")))
+      val counts = in.groupBy(key.as("__stratum")).agg(count(lit(1)).as("__n"))
+      val pop = counts.agg((sum("__n") * lit(0.3) / count(lit(1))).as("__pop"))
+      val probs = counts.crossJoin(broadcast(pop))
+        .select(col("__stratum"), least(col("__pop") / col("__n"), lit(1.0)).as("__p"))
+      in.withColumn("__stratum", key).join(broadcast(probs), "__stratum")
+        .filter(coin < col("__p")).drop("__stratum", "__p")
+    }
+    val arms = Seq[(Determinism, org.apache.spark.sql.Column)](
+      Hashed(Seq("id")) -> graft.GraftFunctions.hashDice(Seq(col("id"))),
+      Random(42L) -> rand(42L))
+    for (((det, coin), i) <- arms.zipWithIndex) withClue(s"$det: ") {
+      val out = s"$dir/out$i"
+      val (_, jobs) = jobsOf(sample(in, 0.3, det, Uniform(Seq("g"))).write.parquet(out))
+      jobs should be <= 4
+      spark.read.parquet(out).select("id").as[Long].collect().sorted shouldBe
+        planSide(coin).select("id").as[Long].collect().sorted
+    }
+  }
+
   behavior of "exact sampling"
 
   it should "produce exactly ceil(n_k * f) per stratum (stratified)" in {

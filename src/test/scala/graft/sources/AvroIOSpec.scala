@@ -211,4 +211,132 @@ class AvroIOSpec extends SparkSpec {
     back.select(col("d").cast("string")).as[String].collect().sorted shouldBe
       Array("-0.01", "0.00", "12345.67")
   }
+
+  behavior of "AvroIO fidelity"
+
+  /** A container file written by a plain `DataFileWriter` (not the
+    * engine's sink): `id` plus the case's fields, one record per entry. */
+  private def avroFixture(name: String, fieldsJson: String,
+                          records: org.apache.avro.Schema => Seq[Seq[Any]]): String = {
+    import org.apache.avro.file.DataFileWriter
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
+    val schema = new org.apache.avro.Schema.Parser().parse(
+      s"""{"type": "record", "name": "${name}_rec", "namespace": "fixture",
+         | "fields": [{"name": "id", "type": "long"}, $fieldsJson]}""".stripMargin)
+    val dir = graft.SparkSpec.tempDir(s"avro_$name").toString
+    val w = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
+    w.create(schema, new java.io.File(s"$dir/part-00000.avro"))
+    try records(schema).zipWithIndex.foreach { case (vals, i) =>
+      val rec = new GenericData.Record(schema)
+      rec.put("id", i.toLong)
+      vals.zipWithIndex.foreach { case (v, j) => rec.put(j + 1, v) }
+      w.append(rec)
+    } finally w.close()
+    dir
+  }
+
+  /** Row values in a form `==` compares by content. */
+  private def norm(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case r: Row => r.toSeq.map(norm)
+    case t: java.sql.Timestamp => t.toInstant
+    case d: java.sql.Date => d.toLocalDate
+    case s: scala.collection.Seq[_] => s.map(norm).toList
+    case m: scala.collection.Map[_, _] => m.map { case (k, x) => k -> norm(x) }.toMap
+    case x => x
+  }
+  private def normRows(rows: Seq[Row]): Seq[Any] =
+    rows.sortBy(_.getLong(0)).map(norm)
+
+  private def fieldSchema(s: org.apache.avro.Schema, f: String) = s.getField(f).schema()
+  private def fixed(s: org.apache.avro.Schema, bytes: Array[Byte]) =
+    new org.apache.avro.generic.GenericData.Fixed(s, bytes)
+  private def bb(bytes: Array[Byte]) = java.nio.ByteBuffer.wrap(bytes)
+  // 8-byte two's complement of an unscaled decimal (sign-extended)
+  private def fixedDecimal(unscaled: Long): Array[Byte] =
+    java.nio.ByteBuffer.allocate(8).putLong(unscaled).array()
+
+  private val innerJson =
+    """{"type": "record", "name": "Inner", "fields": [
+      |  {"name": "a", "type": "int"}, {"name": "b", "type": ["null", "double"]}]}""".stripMargin
+  private def inner(s: org.apache.avro.Schema, a: Int, b: java.lang.Double) = {
+    val r = new org.apache.avro.generic.GenericData.Record(s); r.put("a", a); r.put("b", b); r
+  }
+
+  /** name → (fields JSON, records). Strings shrink from record to record,
+    * so a reader reusing its datum buffers would leak a longer value's
+    * tail into a shorter one. */
+  private val fidelityCases: Seq[(String, String, org.apache.avro.Schema => Seq[Seq[Any]])] = Seq(
+    ("enum", """{"name": "color", "type": {"type": "enum", "name": "Color",
+               |  "symbols": ["RED", "GREEN", "BLUE"]}}""".stripMargin,
+      s => Seq("GREEN", "RED", "BLUE").map(c => Seq(
+        new org.apache.avro.generic.GenericData.EnumSymbol(fieldSchema(s, "color"), c)))),
+    ("fixed", """{"name": "f", "type": {"type": "fixed", "name": "F4", "size": 4}}""",
+      s => Seq(Array[Byte](1, 2, 3, 4), Array[Byte](-1, 0, 127, -128))
+        .map(b => Seq(fixed(fieldSchema(s, "f"), b)))),
+    ("bytes", """{"name": "b", "type": "bytes"}""",
+      _ => Seq(Array[Byte](9, 8, 7, 6, 5), Array[Byte](1), Array[Byte]()).map(b => Seq(bb(b)))),
+    ("decimal_bytes", """{"name": "d", "type": {"type": "bytes", "logicalType": "decimal",
+                        |  "precision": 10, "scale": 2}}""".stripMargin,
+      _ => Seq(1234567L, -1L, 0L).map(u => Seq(bb(java.math.BigInteger.valueOf(u).toByteArray)))),
+    ("decimal_fixed", """{"name": "d", "type": {"type": "fixed", "name": "D8", "size": 8,
+                        |  "logicalType": "decimal", "precision": 12, "scale": 3}}""".stripMargin,
+      s => Seq(123456789012L, -5L, 0L).map(u => Seq(fixed(fieldSchema(s, "d"), fixedDecimal(u))))),
+    ("union_null", """{"name": "s", "type": ["null", "string"]},
+                     |{"name": "n", "type": ["null", "long"]}""".stripMargin,
+      _ => Seq(Seq("a longer string", 7L), Seq(null, null), Seq("h\u00e9llo \u2713", null),
+        Seq("", -3L))),
+    ("nested", s"""{"name": "inner", "type": $innerJson},
+                  |{"name": "opt", "type": ["null", "Inner"]}""".stripMargin,
+      s => Seq(
+        Seq(inner(fieldSchema(s, "inner"), 1, 2.5), null),
+        Seq(inner(fieldSchema(s, "inner"), -4, null), inner(fieldSchema(s, "inner"), 9, 0.5)))),
+    ("array_record", s"""{"name": "items", "type": {"type": "array", "items": $innerJson}}""",
+      s => {
+        val is = fieldSchema(s, "items").getElementType
+        Seq(Seq(java.util.List.of(inner(is, 1, 1.0), inner(is, 2, null), inner(is, 3, 3.0))),
+          Seq(java.util.List.of(inner(is, 4, 4.0))), Seq(java.util.List.of()))
+      }),
+    ("map_long", """{"name": "m", "type": {"type": "map", "values": "long"}}""",
+      _ => Seq(Seq(java.util.Map.of("alpha", 1L, "beta", 2L, "gamma", 3L)),
+        Seq(java.util.Map.of("z", -9L)), Seq(java.util.Map.of()))),
+    ("temporal", """{"name": "ts_ms", "type": {"type": "long", "logicalType": "timestamp-millis"}},
+                   |{"name": "ts_us", "type": {"type": "long", "logicalType": "timestamp-micros"}},
+                   |{"name": "day", "type": {"type": "int", "logicalType": "date"}}""".stripMargin,
+      _ => Seq(Seq(1706657176220L, 1706657176220708L, 19753),
+        Seq(-1L, -1L, -1), Seq(0L, 0L, 0))),
+    ("java_string", """{"name": "s", "type": {"type": "string", "avro.java.string": "String"}}""",
+      _ => Seq("a java string", "x", "\u00fcber").map(Seq(_))))
+
+  it should "scan the same rows as the local reader, and again after a sink round trip" in {
+    for ((name, fields, records) <- fidelityCases) withClue(s"$name: ") {
+      val dir = avroFixture(name, fields, records)
+      val (local, localSt) = AvroIO.readLocal(s"$dir/part-00000.avro")
+      val scanned = AvroIO.read(spark, dir)
+      scanned.schema shouldBe localSt
+      val want = normRows(local)
+      normRows(scanned.collect().toSeq) shouldBe want
+      val out = graft.SparkSpec.tempDir(s"avro_${name}_rt").toString + "/out"
+      AvroIO.write(scanned, out, s"${name}_rec")
+      normRows(AvroIO.read(spark, out).collect().toSeq) shouldBe want
+    }
+  }
+
+  it should "name GenericData as the data model of the scan and the sink" in {
+    // left unset, avro-mapred decodes through ReflectData
+    import org.apache.avro.generic.GenericData
+    import org.apache.avro.hadoop.io.AvroSerialization
+    val dir = avroFixture("model", """{"name": "s", "type": "string"}""",
+      _ => Seq(Seq("x")))
+    def lineage(rdd: org.apache.spark.rdd.RDD[_]): Seq[org.apache.spark.rdd.RDD[_]] =
+      rdd +: rdd.dependencies.flatMap(d => lineage(d.rdd))
+    val hadoopScans = lineage(AvroIO.read(spark, dir).queryExecution.toRdd).collect {
+      case h: org.apache.spark.rdd.NewHadoopRDD[_, _] => h
+    }
+    hadoopScans should have size 1
+    AvroSerialization.getDataModelClass(hadoopScans.head.getConf) shouldBe classOf[GenericData]
+    val sink = AvroIO.sinkJob(spark.sparkContext.hadoopConfiguration,
+      AvroConverters.toAvroSchema(StructType(Seq(StructField("s", StringType)))))
+    AvroSerialization.getDataModelClass(sink.getConfiguration) shouldBe classOf[GenericData]
+  }
 }
